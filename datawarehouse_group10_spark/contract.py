@@ -43,7 +43,6 @@ from .functions.dedup import (
     minhash_lsh_dup_pairs,
     ngram_jaccard_pairs,
     paragraph_dedup,
-    simhash_dup_pairs,
 )
 from .functions.similarity import (
     _dot,
@@ -85,7 +84,7 @@ from .plans.medallion import (
 )
 from .sources.csv_source import read_alt_crawl_csv, write_crawl_csv
 from .sources.parquet_source import ensure_conf, events_ts_layout, read_events
-from .streaming import events_hourly_counts, run_stream_to_table
+from .streaming import events_hourly_counts
 
 #: Fixed "today" for every recency computation so results are a pure
 #: function of the input data, not of the wall clock.
@@ -392,14 +391,6 @@ def q_pipeline_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stable(mart_statistics(layers["mart"]))
 
 
-def q_t1_filter_prize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    bronze = lottery_bronze(spark, sf_dir)
-    return filter_prize(bronze, GIAI_BAY).agg(
-        F.count("*").cast("bigint").alias("n")
-    )
-
-
 #: Fixed alt-layout crawl fixture (SURVEY §1.1 row 2: the reference's
 #: xsmb_23102025_CRAWL_001.csv shape — BOM-prefixed, Vietnamese headers,
 #: yyyy-MM-dd dates, true/false booleans). A constant fixture is the
@@ -471,95 +462,6 @@ def q_s2_s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Row-transform micro-queries (T2-T12)
-
-def q_t2_t3_digits_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    bronze = lottery_bronze(spark, sf_dir)
-    return bronze.select(
-        "event_id",
-        last_k_digits("number_value", 2).alias("last2"),
-        F.date_format(parse_draw_date("full_date"), "yyyy-MM-dd").alias("d"),
-    )
-
-
-def q_t4_decade_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    part = _t(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey", decade_bucket("p_size").alias("size_bucket")
-    )
-
-
-def q_t5_derive_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    bronze = lottery_bronze(spark, sf_dir)
-    parsed = bronze.select(
-        "event_id",
-        last_k_digits("number_value", 2).alias("num"),
-        parse_draw_date("full_date").alias("d"),
-    )
-    flags = derive_flags("num", "d")
-    return parsed.select(
-        "event_id",
-        flags["is_even"].alias("is_even"),
-        flags["is_weekend"].alias("is_weekend"),
-    )
-
-
-def q_t7_normalize_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    part = _t(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey",
-        normalize_numeric_string(
-            F.lpad(F.col("p_size").cast("string"), 4, "0")
-        ).alias("norm_size"),
-        normalize_numeric_string("p_brand").alias("norm_brand"),
-    )
-
-
-def q_t8_t9_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    orders = _t(spark, sf_dir, "orders")
-    dates = orders.select(F.to_date("o_orderdate").alias("d")).distinct()
-    cal = calendar_attributes("d")
-    return dates.select(
-        surrogate_date_key("d").alias("date_key"),
-        cal["day_of_month"].cast("int").alias("day_of_month"),
-        cal["month_of_year"].cast("int").alias("month_of_year"),
-        cal["year_value"].cast("int").alias("year_value"),
-        cal["year_month_value"].alias("year_month_value"),
-    )
-
-
-def q_t10_day_name(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.select(vietnamese_day_name(F.to_date("o_orderdate")).alias("day_name"))
-        .groupBy("day_name")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-
-
-def q_t11_last_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    part = _t(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey",
-        last_digit(F.col("p_size").cast("string")).cast("int").alias("size_last_digit"),
-        last_digit("p_brand").cast("int").alias("brand_last_digit"),
-    )
-
-
-def q_t12_iso_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    ev = _events(spark, sf_dir)
-    return ev.select("event_id", iso_z_timestamp("ts").alias("iso_ts"))
-
-
-# ---------------------------------------------------------------------------
 # Joins
 
 def q_j1_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,8 +522,8 @@ def q_a3_last_appearance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_a5_minmax_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 argmax/argmin scalars + the T1 equality-filter count (Giải Bảy
-    predicate, `q_t1_filter_prize`'s body) folded into the same 1-row
+    """A5 argmax/argmin scalars + the T1 equality-filter count (the Giải
+    Bảy ``filter_prize`` predicate) folded into the same 1-row
     result — both are broadcast-cheap scalar aggregates, and the merge
     keeps the registry within the driver's 50-query correctness window."""
     _utc(spark)
@@ -2031,7 +1933,7 @@ def cdf_snapshot_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", -k
         )
         # r18: VERDICT r17 #6 proposed landing these two commits as
-        # MERGE-ON-READ; measured (scripts/r18_probe_cdf.py, same
+        # MERGE-ON-READ; measured (OPTIMIZATION_r18.md §4, same
         # process A/B) the MOR chain is NOT faster — src commits were
         # equal-to-slower and the applier got consistently SLOWER
         # (diff windows read through dv/ap refs), because per-commit
@@ -3015,30 +2917,8 @@ def q_w4_set_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk.unionByName(setops).unionByName(wfuncs).unionByName(more)
 
 
-def q_w5_recency_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    ev = _events(spark, sf_dir).select("user_id", F.to_date("ts").alias("d")).distinct()
-    lagged = days_since_last(ev, key="user_id", date_col="d")
-    return (
-        lagged.filter(F.col("days_since_last").isNotNull())
-        .select(recency_bucket("days_since_last", recent=2, old=5).alias("recency"))
-        .groupBy("recency")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Text analysis (documents)
-
-def q_text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        token_count("text").alias("n_tokens"),
-        bpe_token_estimate("text").alias("n_bpe"),
-    )
-
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
@@ -3068,16 +2948,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     docs = _t(spark, sf_dir, "documents")
     return exact_dedup(docs)
-
-
-def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(doc_fingerprint("text").alias("fp"))
-        .groupBy("fp")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
 
 
 def q_dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3937,52 +3807,6 @@ def q_dedup_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.filter(F.col("source") != "src0")
     eval_set = docs.filter(F.col("source") == "src0")
     return contamination_check(train, eval_set, k=5)
-
-
-def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test assignment (hash-bucketed md5, no
-    RNG): stable under corpus growth, recomputable by any engine — the
-    splits every training pipeline hangs off the deduped corpus."""
-    _utc(spark)
-    from .functions.sampling import deterministic_split
-
-    docs = _t(spark, sf_dir, "documents")
-    return deterministic_split(docs, train_frac=0.8, val_frac=0.1).select(
-        "doc_id", "split"
-    )
-
-
-def q_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset mixing: per-source sampling rates as a literal CASE +
-    hash-bucket filter (src0 kept fully, src1 half, src2 ~30%, src3
-    dropped, everything else 10%) — deterministic per row, composes into
-    the scan filter, no join, no RNG."""
-    _utc(spark)
-    from .functions.sampling import mixture_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = mixture_sample(
-        docs,
-        rates={"src0": 1.0, "src1": 0.5, "src2": 0.3, "src3": 0.0},
-        default_rate=0.1,
-    )
-    return kept.select("doc_id", "source")
-
-
-def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style duplicate-3-gram ratio per document (repetition
-    filtering signal)."""
-    _utc(spark)
-    from .functions.text import repetition_features
-
-    docs = _t(spark, sf_dir, "documents")
-    feats = repetition_features("text", n=3)
-    return docs.select(
-        "doc_id",
-        feats["n_grams"].alias("n_grams"),
-        feats["n_distinct_grams"].alias("n_distinct_grams"),
-        F.round(feats["dup_gram_ratio"], 6).alias("dup_ratio6"),
-    )
 
 
 def q_text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6187,30 +6011,6 @@ def q_text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sample_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic split + mixture sampling on the full documents grain:
-    every doc carries its split AND whether the mixture filter keeps it —
-    also proving the two salted hash decisions are independent."""
-    _utc(spark)
-    from .functions.sampling import deterministic_split, mixture_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    split = deterministic_split(docs, train_frac=0.8, val_frac=0.1).select(
-        "doc_id", "source", "split"
-    )
-    kept = mixture_sample(
-        docs,
-        rates={"src0": 1.0, "src1": 0.5, "src2": 0.3, "src3": 0.0},
-        default_rate=0.1,
-    ).select("doc_id", F.lit(1).alias("k"))
-    return split.join(kept, "doc_id", "left").select(
-        "doc_id",
-        "source",
-        "split",
-        F.coalesce("k", F.lit(0)).cast("int").alias("mix_kept"),
-    )
-
-
 def q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed training-data curation run (functions/curation.py):
     quality gate → exact dedup (keep-first by digest) → near-dup removal
@@ -6361,13 +6161,6 @@ SELECT id_a, id_b,
        CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) AS jaccard
 FROM inter
 WHERE CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) >= 0.5
-"""
-
-#: The same inverted-index core, surfaced as raw pair counts — every
-#: set-overlap metric derives from (n_a, n_b, n_inter) by expression
-#: (mirrors functions/dedup.py::shingle_pair_counts).
-_NGRAM_PAIR_COUNTS_SQL = _NGRAM_PAIR_CTE + """
-SELECT id_a, id_b, n_a, n_b, n_inter FROM inter
 """
 
 ORACLES: dict[str, str] = {

@@ -16,7 +16,6 @@ from .text import (
 )
 from .dedup import (
     exact_dedup,
-    minhash_signatures,
     minhash_lsh_dup_pairs,
     build_minhash_index,
     incremental_minhash_dup_pairs,
@@ -44,7 +43,6 @@ __all__ = [
     "language_id",
     "doc_fingerprint",
     "exact_dedup",
-    "minhash_signatures",
     "minhash_lsh_dup_pairs",
     "build_minhash_index",
     "incremental_minhash_dup_pairs",

@@ -231,34 +231,6 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     return F.array_distinct(F.when(n >= k, sh).otherwise(F.array(F.array_join(toks, " "))))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Per-doc MinHash signature: array<bigint> of length ``num_perm``.
-
-    Permutation i is simulated as min over shingles of
-    xxhash64(shingle, i) — the standard one-hash-function-many-seeds trick.
-    Physical plan: explode shingles (no shuffle), then ONE hash aggregate
-    keyed by doc_id computing all P minima map-side.
-    """
-    exploded = df.select(
-        F.col(id_col), F.explode(word_shingles(text_col, shingle_k)).alias("shingle")
-    )
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
-        for i in range(num_perm)
-    ]
-    sig = exploded.groupBy(id_col).agg(*aggs)
-    return sig.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("signature"),
-    )
-
-
 def shingle_stage_shards(
     src_bytes: int, cores: int, target_bytes: int = 128 << 20
 ) -> int:

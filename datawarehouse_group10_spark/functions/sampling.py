@@ -266,22 +266,3 @@ def dsir_scores(
     return scored.select(
         id_col, "log_w", g.alias("gumbel"), (F.col("log_w") + g).alias("key")
     )
-
-
-def dsir_resample(
-    raw: DataFrame,
-    target: DataFrame,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 4096,
-    smoothing: float = 1.0,
-) -> DataFrame:
-    """The selected documents: top-k Gumbel-perturbed importance scores,
-    ties broken by id. ``orderBy().limit(k)`` plans as TakeOrdered —
-    each task keeps k rows, the driver merges task heads; fine for the
-    usual 'select a training subset' k. For k approaching the corpus
-    size, filter on a key threshold from :func:`dsir_scores` instead."""
-    sc = dsir_scores(raw, target, text_col, id_col, buckets, smoothing)
-    top = sc.orderBy(F.col("key").desc(), F.col(id_col)).limit(int(k))
-    return raw.join(top, id_col)

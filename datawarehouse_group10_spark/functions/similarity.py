@@ -52,8 +52,8 @@ def _vlit(vec) -> Column:
     internally, builtin.py:268). One ``F.expr`` ships the whole array
     as text and the JVM parses it in one call. Same doubles in the
     same order (see :func:`_vsql`); only the plan-construction path
-    changes — bit-identity pinned by scripts/r18_verify_lit.py and
-    test_vlit_mlit_bit_identity."""
+    changes — bit-identity pinned by test_vlit_mlit_bit_identity
+    (OPTIMIZATION_r18.md §1)."""
     return F.expr(_vsql(vec))
 
 

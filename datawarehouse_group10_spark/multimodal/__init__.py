@@ -52,7 +52,6 @@ __all__ = [
     "decode_audio_features",
     "synthesize_y4m_payload",
     "decode_video_features",
-    "resize_stub",
     "frame_sample_stub",
 ]
 
@@ -706,23 +705,6 @@ def decode_video_features(df: DataFrame) -> DataFrame:
             ]
 
     return df.mapInPandas(_batches, schema=VIDEO_FEATURE_SCHEMA)
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Image-resize plumbing: same mapInPandas shape as decode_features,
-    payload transformation stubbed to a deterministic truncation (a real
-    impl swaps `_resize` for a PIL call; schema and batching unchanged)."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def _resize(payload: bytes) -> bytes:
-            return payload[: max(1, (width * height) % (len(payload) + 1))]
-
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["content"] = [_resize(p) for p in pdf["content"]]
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=df.schema)
 
 
 def frame_sample_stub(df: DataFrame, every_n_bytes: int = 1024) -> DataFrame:

@@ -22,7 +22,6 @@ from .aggregates import (
     draws_per_date,
     reciprocal_probability,
     last_appearance,
-    mart_rollup,
     mart_statistics,
     approx_percentiles,
 )
@@ -53,7 +52,6 @@ __all__ = [
     "draws_per_date",
     "reciprocal_probability",
     "last_appearance",
-    "mart_rollup",
     "mart_statistics",
     "approx_percentiles",
     "days_since_last",

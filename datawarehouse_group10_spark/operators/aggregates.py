@@ -35,59 +35,6 @@ def last_appearance(fact_like: DataFrame, key: str, date_col: str = "full_date")
     return fact_like.groupBy(key).agg(F.max(date_col).alias("last_appeared_date"))
 
 
-def mart_rollup(
-    fact: DataFrame,
-    dim_number: DataFrame,
-    as_of: str | None = None,
-) -> DataFrame:
-    """A4/Q3: build mart_two_digit_probability from fact x dim_number
-    [mart SQL absent in reference; reconstructed from the JPA entity
-    Backend/.../entity/Mart.java:15-34 — SURVEY 2.8].
-
-    - total_occurrences = SUM(occurrence_count)    (DECIMAL(32,0), MySQL SUM(INT))
-    - total_draws       = global draw-row count in scope
-    - probability       = total_occurrences / total_draws as DECIMAL(36,4)
-    - last_appeared_date, days_since_last (vs ``as_of``; current_date if None)
-
-    One broadcast join + one hash aggregate; the global total_draws scalar is
-    attached with a second tiny aggregate cross-joined in (a 1-row broadcast,
-    not a window over the whole fact).
-    """
-    joined = fact.join(F.broadcast(dim_number), "number_key", "inner")
-    per_number = joined.groupBy("number_value").agg(
-        F.sum("occurrence_count").cast(DecimalType(32, 0)).alias("total_occurrences"),
-        F.max("full_date").alias("last_appeared_date"),
-    )
-    # Global denominator = sum of each date's total_draws over ONE row per
-    # date (SURVEY 2.7.2: per-date counts include intra-date duplicates, but
-    # the fact grain collapsed them — so fact.count() would undercount).
-    if "total_draws" in fact.columns and "date_key" in fact.columns:
-        total = (
-            fact.select("date_key", "total_draws")
-            .dropDuplicates(["date_key"])
-            .agg(F.sum("total_draws").cast("int").alias("total_draws"))
-        )
-    else:
-        total = fact.agg(F.count("*").cast("int").alias("total_draws"))
-    as_of_col = F.to_date(F.lit(as_of)) if as_of else F.current_date()
-    return (
-        per_number.crossJoin(F.broadcast(total))
-        .withColumn(
-            "probability",
-            (F.col("total_occurrences") / F.col("total_draws")).cast(DecimalType(36, 4)),
-        )
-        .withColumn("days_since_last", F.datediff(as_of_col, F.col("last_appeared_date")).cast("int"))
-        .select(
-            "number_value",
-            "total_occurrences",
-            "total_draws",
-            "probability",
-            "last_appeared_date",
-            "days_since_last",
-        )
-    )
-
-
 def mart_statistics(mart: DataFrame) -> DataFrame:
     """A5/Q2: the /mart/statistic endpoint as ONE single-row aggregate.
 

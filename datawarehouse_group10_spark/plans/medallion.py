@@ -36,7 +36,7 @@ from ..operators.transforms import (
     vietnamese_day_name,
 )
 from ..operators.joins import anti_join_new_rows, broadcast_lookup_join
-from ..operators.aggregates import mart_rollup
+from ..operators.aggregates import draws_per_date, reciprocal_probability
 from ..operators.windows import days_since_last
 
 
@@ -193,7 +193,7 @@ def build_fact_prize(
     days_since_last = lag over per-number date order, NULL on first
     appearance (2.7.3) — computed over the full input (documented deviation).
     """
-    total = silver.groupBy("full_date").agg(F.count("*").cast("int").alias("total_draws"))
+    total = draws_per_date(silver)  # A1
     distinct_dn = (
         silver.select(
             surrogate_date_key("full_date").alias("date_key"),
@@ -206,10 +206,7 @@ def build_fact_prize(
         distinct_dn
         .join(F.broadcast(total), "full_date", "inner")  # A1 attach
         .transform(lambda d: broadcast_lookup_join(d, dim_number.select("number_key", "number_value"), "number_value"))  # J1
-        .withColumn(
-            "probability_value",
-            (F.lit(1).cast(DecimalType(10, 6)) / F.col("total_draws")).cast(DecimalType(10, 6)),
-        )
+        .withColumn("probability_value", reciprocal_probability())  # A2
         .transform(lambda d: days_since_last(d, key="number_key", date_col="full_date"))  # W2
         .withColumn("occurrence_count", F.lit(1).cast("int"))
         .select(
@@ -223,10 +220,17 @@ def build_fact_prize(
 
 
 def build_mart(fact: DataFrame, dim_number: DataFrame, as_of: str | None = None) -> DataFrame:
-    """Gold -> serving mart (A4/Q3). See operators.aggregates.mart_rollup.
+    """Gold -> serving mart (A4/Q3) [mart SQL absent in reference;
+    reconstructed from the JPA entity Backend/.../entity/Mart.java:15-34 —
+    SURVEY 2.8].
 
-    total_draws for the mart is the total transform-row count in scope,
-    reconstructed as sum over one row per (date) of that date's total_draws.
+    - total_occurrences = SUM(occurrence_count) as DECIMAL(32,0) (MySQL SUM(INT))
+    - total_draws       = the transform-row count in scope, reconstructed as
+      the sum over one row per date of that date's total_draws (SURVEY
+      2.7.2: the fact grain collapsed intra-date duplicates, so
+      fact.count() would undercount)
+    - probability       = total_occurrences / total_draws as DECIMAL(36,4)
+    - days_since_last   = vs ``as_of`` (current_date if None)
     """
     per_date = fact.select("date_key", "total_draws").dropDuplicates(["date_key"])
     total = per_date.agg(F.sum("total_draws").cast("int").alias("total_draws"))

@@ -16,12 +16,13 @@ deployment repoints the job by editing the control table, not the code.
 
 from __future__ import annotations
 
+import fnmatch
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.config_tables import source_config
-from ..sources.csv_source import read_crawl_csv_dir
+from ..sources.csv_source import CSV_GLOB, read_crawl_csv_dir
 from ..sources.parquet_source import write_layer
 from .medallion import run_full_pipeline
 from .orchestrator import ProcessLog
@@ -53,9 +54,9 @@ def run_warehouse_job(
     # P1: the crawler ran out-of-band; its observable contract is "CSV
     # files exist in the directory" (CsvLoader.java:8-24).
     def _p1() -> int:
-        names = [n for n in os.listdir(csv_dir) if n.lower().endswith(".csv")]
+        names = fnmatch.filter(os.listdir(csv_dir), CSV_GLOB)
         if not names:
-            raise FileNotFoundError(f"no *.csv in {csv_dir}")
+            raise FileNotFoundError(f"no {CSV_GLOB} file in {csv_dir}")
         return len(names)
 
     log.run_stage("P1", _p1)

@@ -157,17 +157,3 @@ CONFIG_DATABASE = StructType(
         StructField("config_value", StringType()),
     ]
 )
-
-#: Names of the driver-generated synthetic tables (TESTDATA.md)
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)

@@ -5,9 +5,7 @@ config tables."""
 from .csv_source import read_alt_crawl_csv, read_crawl_csv_dir, write_crawl_csv
 from .parquet_source import (
     events_ts_layout,
-    load_testdata,
     read_events,
-    register_testdata_views,
     write_layer,
     write_sorted_layer,
 )
@@ -25,9 +23,7 @@ __all__ = [
     "read_crawl_csv_dir",
     "write_crawl_csv",
     "events_ts_layout",
-    "load_testdata",
     "read_events",
-    "register_testdata_views",
     "write_layer",
     "write_sorted_layer",
     "jdbc_read_options",

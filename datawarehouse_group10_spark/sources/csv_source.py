@@ -20,11 +20,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import RAW_CRAWL, RAW_CRAWL_ALT
+from ..schemas import RAW_CRAWL_ALT
+
+#: The crawl-file name filter, shared by the P1 gate and both readers: a
+#: ``.csv`` suffix in any letter case, like the reference's
+#: ``toLowerCase().endsWith(".csv")`` (CsvLoader.java:12). One pattern for
+#: Hadoop's ``pathGlobFilter`` and Python's ``fnmatch``.
+CSV_GLOB = "*.[cC][sS][vV]"
 
 
 def read_crawl_csv_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Bronze ingest: every ``*.csv`` under ``path`` -> typed staging rows.
+    """Bronze ingest: every :data:`CSV_GLOB` file under ``path`` -> typed
+    staging rows.
 
     Output columns follow the staging DDL (prize, number_value, full_date as
     raw strings) plus the ``load_timestamp`` audit column the reference stamps
@@ -38,7 +45,7 @@ def read_crawl_csv_dir(spark: SparkSession, path: str) -> DataFrame:
         spark.read.schema(schema)
         .option("header", "true")
         .option("mode", "DROPMALFORMED")
-        .option("pathGlobFilter", "*.csv")
+        .option("pathGlobFilter", CSV_GLOB)
         .option("encoding", "UTF-8")
         .csv(path)
     )
@@ -67,7 +74,7 @@ def read_alt_crawl_csv(spark: SparkSession, path: str) -> DataFrame:
         spark.read.schema(RAW_CRAWL_ALT)
         .option("header", "true")
         .option("mode", "DROPMALFORMED")
-        .option("pathGlobFilter", "*.csv")
+        .option("pathGlobFilter", CSV_GLOB)
         .option("encoding", "UTF-8")
         .csv(path)
     )

@@ -13,10 +13,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import TESTDATA_TABLES
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def ensure_conf(spark: SparkSession, key: str, value: str) -> None:
     """Set a session conf only when the current value differs — avoids the
@@ -158,25 +154,6 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     df = spark.read.parquet(path)
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def load_testdata(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR
-) -> dict[str, DataFrame]:
-    """Load every synthetic table from ``sf_dir`` (TESTDATA.md)."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            out[name] = spark.read.parquet(p)
-    return out
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register each table as a temp view so spark.sql() queries see the same
-    names the DuckDB oracle uses."""
-    for name, df in load_testdata(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def write_layer(df: DataFrame, path: str, partition_by: list[str] | None = None,

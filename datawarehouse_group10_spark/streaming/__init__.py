@@ -30,6 +30,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.csv_source import CSV_GLOB
+
 __all__ = [
     "read_crawl_csv_stream",
     "stream_bronze_to_silver",
@@ -149,15 +151,15 @@ def read_crawl_csv_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """Streaming twin of sources.read_crawl_csv_dir (operators S2/S3/S6):
-    every ``*.csv`` landing in ``path`` becomes a micro-batch of bronze rows
-    with the ``load_timestamp`` audit column."""
+    every :data:`CSV_GLOB` file landing in ``path`` becomes a micro-batch
+    of bronze rows with the ``load_timestamp`` audit column."""
     reader = (
         spark.readStream.schema(
             "prize STRING, number_value STRING, full_date STRING, created_at STRING"
         )
         .option("header", "true")
         .option("mode", "DROPMALFORMED")
-        .option("pathGlobFilter", "*.csv")
+        .option("pathGlobFilter", CSV_GLOB)
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -1540,12 +1540,8 @@ def test_stratified_take_exact_quota_and_determinism(spark):
 def test_dsir_enriches_target_like_docs(spark):
     """DSIR semantics on a corpus with a real distribution shift: docs
     drawn from the target vocabulary must out-weigh docs from a disjoint
-    vocabulary, and the resample must keep (nearly) only target-like
-    docs."""
-    from datawarehouse_group10_spark.functions.sampling import (
-        dsir_resample,
-        dsir_scores,
-    )
+    vocabulary."""
+    from datawarehouse_group10_spark.functions.sampling import dsir_scores
 
     tgt_like = [(i, "alpha beta gamma delta alpha beta") for i in range(20)]
     other = [(i + 100, "omega psi chi phi omega psi") for i in range(20)]
@@ -1556,11 +1552,6 @@ def test_dsir_enriches_target_like_docs(spark):
     )
     sc = {r["doc_id"]: r["log_w"] for r in dsir_scores(raw, target).collect()}
     assert min(sc[i] for i, _ in tgt_like) > max(sc[i] for i, _ in other)
-    sel = dsir_resample(raw, target, 20).select("doc_id").collect()
-    ids = {r["doc_id"] for r in sel}
-    # Gumbel noise can flip a few boundary docs; the bulk must be target-like
-    assert len(ids) == 20
-    assert len([i for i in ids if i < 100]) >= 15
 
 
 def test_dsir_deterministic_and_bucket_counts(spark):

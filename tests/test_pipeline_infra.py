@@ -202,6 +202,27 @@ def test_warehouse_job_end_to_end(spark, tmp_path):
     assert stats["most_number"] == 23 and stats["least_number"] == 7
 
 
+def test_warehouse_job_reads_upper_case_csv_suffix(spark, tmp_path):
+    """The P1 gate and the P2 reader agree on which files are CSVs: a
+    directory holding only ``*.CSV`` passes P1, so its rows must reach
+    bronze rather than publishing an empty mart."""
+    from datawarehouse_group10_spark.plans.warehouse_job import run_warehouse_job
+
+    csv = tmp_path / "csv"
+    csv.mkdir()
+    (csv / "xsmb_01102025.CSV").write_text(
+        "prize,number_value,full_date,created_at\n"
+        "Giải Bảy,07,01-10-2025,x\nGiải Bảy,23,01-10-2025,x\n",
+        encoding="utf-8",
+    )
+    (csv / "notes.txt").write_text("prize,number_value,full_date,created_at\nx,1,2,3\n")
+    out_dir = str(tmp_path / "dwh")
+    run_warehouse_job(spark, csv_dir=str(csv), output_dir=out_dir, as_of="2025-10-10")
+    assert spark.read.parquet(f"{out_dir}/bronze").count() == 2
+    mart = spark.read.parquet(f"{out_dir}/mart")
+    assert sorted(r["number_value"] for r in mart.collect()) == ["23", "7"]
+
+
 def test_vocabulary_and_cluster_resolution(spark):
     from datawarehouse_group10_spark.functions.dedup import (
         resolve_duplicate_clusters,
@@ -7445,14 +7466,14 @@ def test_snapshot_diff_single_pass_plan(spark, tmp_path):
 
 
 def test_snapshot_diff_sees_mor_insert_only_partitions(spark, tmp_path):
-    """r18 (found by scripts/r18_probe_cdf.py): a snapshot_upsert_mor
-    commit can touch a partition with APPEND refs alone — a pure
-    insert matches no existing key, so no delete file lands there.
-    _diff_manifests' change signature covered (root, dv files) only,
-    so snapshot_diff silently skipped such partitions and a CDF
-    consumer dropped the inserts. The signature now includes the ap
-    file list; the diff must carry BOTH the dv-touched update and the
-    ap-only insert."""
+    """r18 (found by the COW-vs-MOR probe, OPTIMIZATION_r18.md §3): a
+    snapshot_upsert_mor commit can touch a partition with APPEND refs
+    alone — a pure insert matches no existing key, so no delete file
+    lands there. _diff_manifests' change signature covered (root, dv
+    files) only, so snapshot_diff silently skipped such partitions and
+    a CDF consumer dropped the inserts. The signature now includes the
+    ap file list; the diff must carry BOTH the dv-touched update and
+    the ap-only insert."""
     from datawarehouse_group10_spark.sources.layout import (
         snapshot_diff,
         snapshot_upsert_mor,
