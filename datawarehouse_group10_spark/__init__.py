@@ -5,7 +5,8 @@ capabilities of the reference ETL/warehouse project
 Layout
 ------
 - ``session``    : tuned SparkSession builder (AQE, shuffle partitions, Arrow)
-- ``schemas``    : explicit StructTypes for every table in the data model
+- ``schemas``    : explicit StructTypes for the alternate crawl CSV, the
+                   process_log ledger and the control tables
 - ``sources``    : CSV-directory bronze ingest, parquet lakehouse readers, JDBC
 - ``operators``  : row transforms, joins, aggregations, window computations
                    (the SURVEY.md section-2 inventory, T*/J*/A*/W* operators)

@@ -19,6 +19,7 @@ from __future__ import annotations
 import fnmatch
 import os
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.config_tables import source_config
@@ -26,6 +27,12 @@ from ..sources.csv_source import CSV_GLOB, read_crawl_csv_dir
 from ..sources.parquet_source import write_layer
 from .medallion import run_full_pipeline
 from .orchestrator import ProcessLog
+
+
+def _written_rows(path: str) -> int:
+    """Row count of a written layer, summed from its parquet footers on the
+    driver: the ledger's ``rows=N`` costs no Spark job."""
+    return ds.dataset(path, format="parquet").count_rows()
 
 
 def run_warehouse_job(
@@ -49,7 +56,7 @@ def run_warehouse_job(
             raise ValueError("need csv_dir or config_source_path")
         csv_dir = source_config(spark, config_source_path, source_id)["file_location"]
 
-    log = ProcessLog(spark, ledger_path or os.path.join(output_dir, "process_log"))
+    log = ProcessLog(ledger_path or os.path.join(output_dir, "process_log"))
 
     # P1: the crawler ran out-of-band; its observable contract is "CSV
     # files exist in the directory" (CsvLoader.java:8-24).
@@ -62,24 +69,23 @@ def run_warehouse_job(
     log.run_stage("P1", _p1)
 
     # P2: CSV directory -> bronze layer.
+    bronze_path = os.path.join(output_dir, "bronze")
+
     def _p2() -> int:
-        bronze = read_crawl_csv_dir(spark, csv_dir)
-        write_layer(bronze, os.path.join(output_dir, "bronze"))
-        return spark.read.parquet(os.path.join(output_dir, "bronze")).count()
+        write_layer(read_crawl_csv_dir(spark, csv_dir), bronze_path)
+        return _written_rows(bronze_path)
 
     log.run_stage("P2", _p2)
 
-    bronze = spark.read.parquet(os.path.join(output_dir, "bronze"))
+    bronze = spark.read.parquet(bronze_path)
     layers = run_full_pipeline(bronze, as_of=as_of)
 
     # P3: silver layer.
-    log.run_stage(
-        "P3",
-        lambda: (
-            write_layer(layers["silver"], os.path.join(output_dir, "silver")),
-            layers["silver"].count(),
-        )[1],
-    )
+    def _p3() -> int:
+        write_layer(layers["silver"], os.path.join(output_dir, "silver"))
+        return _written_rows(os.path.join(output_dir, "silver"))
+
+    log.run_stage("P3", _p3)
 
     # P4: star schema + mart (the reference's loadDimDate/loadDimNumber/
     # loadFactPrize + mart build, ETLMain.java:233-430).
@@ -92,7 +98,7 @@ def run_warehouse_job(
             partition_by=["date_key"],
         )
         write_layer(layers["mart"], os.path.join(output_dir, "mart"))
-        return layers["fact_prize"].count()
+        return _written_rows(os.path.join(output_dir, "fact_prize"))
 
     log.run_stage("P4", _p4)
     return layers

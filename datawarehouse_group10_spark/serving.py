@@ -50,12 +50,8 @@ def _load_mart_rows(mart_path: str) -> list[dict]:
 def _statistic(rows: list[dict]) -> dict:
     """Q2 semantics (MartRepository.java:14-33): max total_draws, argmax /
     argmin of total_occurrences (deterministic tie-break on the numeric
-    value, matching the pipeline's documented deviation), max date."""
-    if not rows:
-        return {
-            "totalOccurrences": None, "mostNumber": None,
-            "leastNumber": None, "lastUpdate": None,
-        }
+    value, matching the pipeline's documented deviation), max date.
+    ``rows`` is never empty: the server answers 503 instead."""
 
     def num(r):
         return int(r["number_value"])
@@ -76,6 +72,7 @@ class MartServer:
     >>> srv = MartServer("/path/to/mart.parquet"); srv.start()
     GET /mart/all        -> JSON array of mart rows
     GET /mart/statistic  -> the Q2 one-row DTO
+    Both answer 503 until the first non-empty mart has loaded.
     """
 
     #: Seconds between artifact mtime re-checks: a dashboard refreshing at
@@ -95,15 +92,14 @@ class MartServer:
                 pass
 
             def do_GET(self):
-                if self.path.rstrip("/") == "/mart/all":
-                    body = json.dumps(outer.rows())
-                elif self.path.rstrip("/") == "/mart/statistic":
-                    body = json.dumps(_statistic(outer.rows()))
-                else:
-                    self.send_response(404)
+                route = self.path.rstrip("/")
+                rows = outer.rows() if route in ("/mart/all", "/mart/statistic") else None
+                if not rows:
+                    self.send_response(404 if rows is None else 503)
+                    self.send_header("Content-Length", "0")
                     self.end_headers()
                     return
-                data = body.encode()
+                data = json.dumps(rows if route == "/mart/all" else _statistic(rows)).encode()
                 self.send_response(200)
                 self.send_header("Content-Type", "application/json")
                 self.send_header("Content-Length", str(len(data)))
@@ -117,7 +113,12 @@ class MartServer:
         """Cached mart rows, refreshed when the artifact's mtime moves —
         the serving tier notices a new warehouse-job run without restarts.
         The mtime walk itself is rate-limited to once per ``STAT_TTL_SEC``
-        so request throughput never depends on directory size."""
+        so request throughput never depends on directory size.
+
+        A reload that raises or reads zero rows (a missing mart, or one
+        caught mid-overwrite) keeps the last good rows and leaves the new
+        mtime unrecorded, so the next check retries. Returns ``[]`` only
+        before the first good load."""
         import time
 
         now = time.monotonic()
@@ -125,15 +126,22 @@ class MartServer:
             fresh = self._mtime is not None and now - self._checked_at < self.STAT_TTL_SEC
             if fresh:
                 return self._rows
-        mtime = max(
-            (os.path.getmtime(os.path.join(r, f))
-             for r, _, fs in os.walk(self._path) for f in fs),
-            default=os.path.getmtime(self._path) if os.path.exists(self._path) else 0,
-        )
+        try:
+            mtime = max(
+                (os.path.getmtime(os.path.join(r, f))
+                 for r, _, fs in os.walk(self._path) for f in fs),
+                default=os.path.getmtime(self._path) if os.path.exists(self._path) else 0,
+            )
+        except FileNotFoundError:  # a file vanished mid-walk: a write is under way
+            mtime = self._mtime
         with self._lock:
             if mtime != self._mtime:
-                self._rows = _load_mart_rows(self._path)
-                self._mtime = mtime
+                try:
+                    rows = _load_mart_rows(self._path)
+                except (OSError, ValueError):  # pyarrow's IO and parse errors
+                    rows = []
+                if rows:
+                    self._rows, self._mtime = rows, mtime
             self._checked_at = now
             return self._rows
 

@@ -104,8 +104,10 @@ def test_config_tables_roundtrip(spark, tmp_path):
         source_config(spark, sp, 99)
 
 
-def test_process_log_gating(spark, tmp_path):
-    log = ProcessLog(spark, str(tmp_path / "ledger"))
+def test_process_log_gating(meta_store, tmp_path):
+    """Gating on the ledger built from MetaStore primitives alone: the
+    same run against the POSIX store and the in-memory fake."""
+    log = ProcessLog(str(tmp_path / "ledger"))
     assert log.can_start("P1")                 # first stage always startable
     assert not log.can_start("P2")             # P1 never succeeded
     log.run_stage("P1", lambda: 42)
@@ -121,6 +123,48 @@ def test_process_log_gating(spark, tmp_path):
         log.run_stage("P3", lambda: 1)
     assert log.latest_status("P3") == "GATED"
     assert not log.can_start("P3")             # still RUNNING underneath
+
+
+def test_process_log_gate_admits_one_of_two_concurrent_runs(tmp_path, monkeypatch):
+    """Two runs that both pass the ledger read before either logs RUNNING
+    (forced by a barrier right after the gate check): the per-stage claim
+    lets exactly one run the stage; the other raises and logs GATED."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=30)
+    gate = ProcessLog.can_start
+
+    def gate_then_meet(self, code):
+        ok = gate(self, code)
+        barrier.wait()
+        return ok
+
+    monkeypatch.setattr(ProcessLog, "can_start", gate_then_meet)
+    path = str(tmp_path / "ledger")
+    loser_done = threading.Event()
+    results = []
+
+    def attempt():
+        try:
+            # The winner holds the stage until the loser has given up.
+            results.append(ProcessLog(path).run_stage("P1", lambda: loser_done.wait(30) and 7))
+        except RuntimeError as e:
+            results.append(e)
+            loser_done.set()
+
+    threads = [threading.Thread(target=attempt) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert len(results) == 2 and results.count(7) == 1
+    loser = next(r for r in results if r != 7)
+    assert isinstance(loser, RuntimeError) and "gated" in str(loser)
+    monkeypatch.undo()
+    events = ProcessLog(path)._events()
+    assert sorted(status for _, _, status in events) == ["GATED", "RUNNING", "SUCCESS"]
+    assert not os.path.exists(os.path.join(path, "_P1.running"))   # claim released
 
 
 def test_streaming_silver_matches_batch(spark, csv_dir):
@@ -193,9 +237,15 @@ def test_warehouse_job_end_to_end(spark, tmp_path):
     mart = spark.read.parquet(f"{out_dir}/mart")
     assert mart.count() == 2
     ledger = spark.read.parquet(f"{out_dir}/process_log")
-    statuses = {(r["process_code"], r["status"]) for r in ledger.collect()}
-    assert {("P1", "SUCCESS"), ("P2", "SUCCESS"), ("P3", "SUCCESS"),
-            ("P4", "SUCCESS")} <= statuses
+    events = [(r["process_code"], r["status"], r["message"])
+              for r in ledger.orderBy("process_id").collect()]
+    # P2/P3/P4 count bronze, silver and fact_prize rows from the footers
+    assert events == [
+        ("P1", "RUNNING", None), ("P1", "SUCCESS", "rows=1"),
+        ("P2", "RUNNING", None), ("P2", "SUCCESS", "rows=3"),
+        ("P3", "RUNNING", None), ("P3", "SUCCESS", "rows=3"),
+        ("P4", "RUNNING", None), ("P4", "SUCCESS", "rows=3"),
+    ]
     # the SQL view layer answers Q2 identically to the DataFrame path
     register_views(spark, {"mart": mart})
     stats = spark.sql(SQL_MART_STATISTIC).first()
@@ -551,9 +601,13 @@ def test_http_mart_serving(spark, tmp_path):
     MartController.java:19-31) served from a materialized mart parquet:
     Spark computes the layer, the serving tier reads the artifact (no
     SparkSession on the request path), and a re-written artifact is
-    picked up without a restart."""
+    picked up without a restart. A mart caught mid-overwrite or missing
+    never replaces the last good one, and with no good mart yet the
+    server answers 503 rather than an empty success."""
     import datetime as dt
     import json
+    import shutil
+    import urllib.error
     import urllib.request
 
     from datawarehouse_group10_spark.serving import MartServer
@@ -589,8 +643,27 @@ def test_http_mart_serving(spark, tmp_path):
         ).parquet(path)
         stat2 = json.load(urllib.request.urlopen(f"{base}/mart/statistic"))
         assert stat2["totalOccurrences"] == 21
+        # what an overwrite leaves mid-write, then no mart at all
+        shutil.rmtree(path)
+        os.makedirs(os.path.join(path, "_temporary", "0"))
+        assert json.load(urllib.request.urlopen(f"{base}/mart/statistic")) == stat2
+        shutil.rmtree(path)
+        assert json.load(urllib.request.urlopen(f"{base}/mart/statistic")) == stat2
+        mart.withColumn("total_draws", F.lit(22)).coalesce(1).write.parquet(path)
+        stat3 = json.load(urllib.request.urlopen(f"{base}/mart/statistic"))
+        assert stat3["totalOccurrences"] == 22
     finally:
         srv.stop()
+
+    cold = MartServer(str(tmp_path / "not_yet_published"))
+    cold.start()
+    try:
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(f"http://127.0.0.1:{cold.port}/mart/all")
+        assert err.value.code == 503
+        err.value.close()
+    finally:
+        cold.stop()
 
 
 def test_no_row_at_a_time_python_in_any_registered_query(spark):
