@@ -40,6 +40,7 @@ layers); ``query`` runs any contract query and prints a sample;
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 
@@ -415,7 +416,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name=f"dwh-{args.cmd}")
     try:
         if args.cmd == "job":
-            from .plans.warehouse_job import run_warehouse_job
+            from .plans.warehouse_job import _written_rows, run_warehouse_job
 
             layers = run_warehouse_job(
                 spark,
@@ -426,8 +427,8 @@ def main(argv: list[str] | None = None) -> int:
                 as_of=args.as_of,
             )
             print(f"wrote layers to {args.out}:")
-            for name, df in layers.items():
-                print(f"  {name}: {df.count()} rows")
+            for name in layers:
+                print(f"  {name}: {_written_rows(os.path.join(args.out, name))} rows")
             return 0
 
         if args.cmd == "query":

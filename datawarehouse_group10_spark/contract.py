@@ -83,7 +83,7 @@ from .plans.medallion import (
     run_full_pipeline,
 )
 from .sources.csv_source import read_alt_crawl_csv, write_crawl_csv
-from .sources.parquet_source import ensure_conf, events_ts_layout, read_events
+from .sources.parquet_source import ensure_conf, events_ts_layout, read_events, remove_layer
 from .streaming import events_hourly_counts
 
 #: Fixed "today" for every recency computation so results are a pure
@@ -4630,8 +4630,9 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ing_ckpt = os.path.join(work, "ingest_ckpt")
     cdc_run = os.path.join(work, "cdc_run")
     cdc_ckpt = os.path.join(work, "cdc_ckpt")
+    remove_layer(mart_dir)  # a published link: rmtree refuses it
     for d in (
-        mart_dir, ckpt, attr_out, attr_ckpt,
+        ckpt, attr_out, attr_ckpt,
         sess_out, sess_ckpt, outer_out, outer_ckpt,
         ing_idx, ing_out, ing_ckpt, cdc_run, cdc_ckpt,
     ):

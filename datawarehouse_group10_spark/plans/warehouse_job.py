@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.config_tables import source_config
 from ..sources.csv_source import CSV_GLOB, read_crawl_csv_dir
-from ..sources.parquet_source import write_layer
+from ..sources.parquet_source import publish_layer, write_layer
 from .medallion import run_full_pipeline
 from .orchestrator import ProcessLog
 
@@ -97,7 +97,8 @@ def run_warehouse_job(
             os.path.join(output_dir, "fact_prize"),
             partition_by=["date_key"],
         )
-        write_layer(layers["mart"], os.path.join(output_dir, "mart"))
+        publish_layer(os.path.join(output_dir, "mart"),
+                      lambda path: write_layer(layers["mart"], path))
         return _written_rows(os.path.join(output_dir, "fact_prize"))
 
     log.run_stage("P4", _p4)

@@ -6,11 +6,12 @@ Spark-built mart, stdlib-only (http.server), no web framework.
 Architecture note (the 100 TB-honest part): the server NEVER holds a
 SparkSession per request. The mart is a serving AGGREGATE — ≤100 rows for
 the two-digit domain, small for any real rollup — so the deployment shape
-is: the warehouse job writes the mart layer to parquet, and this process
-serves that materialization from memory, re-reading the file only when
-its mtime changes. Spark computes; the serving tier reads the computed
-artifact. (A per-request ``spark.sql`` would put a distributed scan on an
-interactive path — wrong at any scale.)
+is: the warehouse job publishes the mart as parquet behind a symlink
+(``parquet_source.publish_layer``), and this process serves it from
+memory, re-reading it only when the link names a new version. Spark
+computes; the serving tier reads the computed artifact with pyarrow. (A
+per-request ``spark.sql`` would put a distributed scan on an interactive
+path — wrong at any scale.)
 
 Payload field names follow the reference DTO
 (Backend/.../dtos/StatisticResponse.java:6-10: totalOccurrences,
@@ -19,32 +20,20 @@ mostNumber, leastNumber, lastUpdate).
 
 from __future__ import annotations
 
-import datetime as dt
 import decimal
 import json
 import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-
-def _jsonable(v):
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if isinstance(v, (dt.date, dt.datetime)):
-        return v.isoformat()
-    return v
+import pyarrow.parquet as pq
 
 
-def _load_mart_rows(mart_path: str) -> list[dict]:
-    """Read the materialized mart parquet WITHOUT Spark (pyarrow) — the
-    serving tier depends on the artifact, not the engine."""
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(mart_path)
-    return [
-        {k: _jsonable(v) for k, v in row.items()}
-        for row in table.to_pylist()
-    ]
+def _json(v) -> bytes:
+    """JSON body; parquet decimals encode as numbers, dates as ISO text."""
+    return json.dumps(
+        v, default=lambda x: float(x) if isinstance(x, decimal.Decimal) else x.isoformat()
+    ).encode()
 
 
 def _statistic(rows: list[dict]) -> dict:
@@ -69,21 +58,17 @@ def _statistic(rows: list[dict]) -> dict:
 class MartServer:
     """Serves a materialized mart parquet over the reference's two routes.
 
-    >>> srv = MartServer("/path/to/mart.parquet"); srv.start()
+    >>> srv = MartServer("/path/to/mart"); srv.start()
     GET /mart/all        -> JSON array of mart rows
     GET /mart/statistic  -> the Q2 one-row DTO
     Both answer 503 until the first non-empty mart has loaded.
     """
 
-    #: Seconds between artifact mtime re-checks: a dashboard refreshing at
-    #: any human rate shouldn't trigger a directory walk per request.
-    STAT_TTL_SEC = 1.0
-
     def __init__(self, mart_path: str, host: str = "127.0.0.1", port: int = 0):
         self._path = mart_path
-        self._mtime: float | None = None
+        self._key: tuple[int, int] | None = None
         self._rows: list[dict] = []
-        self._checked_at: float = 0.0
+        self._bodies: dict[str, bytes] = {}
         self._lock = threading.Lock()
         outer = self
 
@@ -94,13 +79,8 @@ class MartServer:
             def do_GET(self):
                 route = self.path.rstrip("/")
                 rows = outer.rows() if route in ("/mart/all", "/mart/statistic") else None
-                if not rows:
-                    self.send_response(404 if rows is None else 503)
-                    self.send_header("Content-Length", "0")
-                    self.end_headers()
-                    return
-                data = json.dumps(rows if route == "/mart/all" else _statistic(rows)).encode()
-                self.send_response(200)
+                data = outer._bodies[route] if rows else b""
+                self.send_response(200 if rows else 404 if rows is None else 503)
                 self.send_header("Content-Type", "application/json")
                 self.send_header("Content-Length", str(len(data)))
                 self.end_headers()
@@ -110,40 +90,29 @@ class MartServer:
         self.port = self._httpd.server_address[1]
 
     def rows(self) -> list[dict]:
-        """Cached mart rows, refreshed when the artifact's mtime moves —
-        the serving tier notices a new warehouse-job run without restarts.
-        The mtime walk itself is rate-limited to once per ``STAT_TTL_SEC``
-        so request throughput never depends on directory size.
-
-        A reload that raises or reads zero rows (a missing mart, or one
-        caught mid-overwrite) keeps the last good rows and leaves the new
-        mtime unrecorded, so the next check retries. Returns ``[]`` only
-        before the first good load."""
-        import time
-
-        now = time.monotonic()
-        with self._lock:
-            fresh = self._mtime is not None and now - self._checked_at < self.STAT_TTL_SEC
-            if fresh:
-                return self._rows
+        """Cached mart rows. One ``os.stat`` per call: a new
+        ``(st_ino, st_mtime_ns)`` (a publish names a new directory, an
+        in-place rewrite moves the mtime) is loaded once, through the
+        resolved link, with both bodies encoded. A load that raises or reads
+        zero rows keeps the last good rows; ``[]`` until the first."""
         try:
-            mtime = max(
-                (os.path.getmtime(os.path.join(r, f))
-                 for r, _, fs in os.walk(self._path) for f in fs),
-                default=os.path.getmtime(self._path) if os.path.exists(self._path) else 0,
-            )
-        except FileNotFoundError:  # a file vanished mid-walk: a write is under way
-            mtime = self._mtime
-        with self._lock:
-            if mtime != self._mtime:
-                try:
-                    rows = _load_mart_rows(self._path)
-                except (OSError, ValueError):  # pyarrow's IO and parse errors
-                    rows = []
-                if rows:
-                    self._rows, self._mtime = rows, mtime
-            self._checked_at = now
-            return self._rows
+            st = os.stat(self._path)
+            key = (st.st_ino, st.st_mtime_ns)
+        except OSError:  # nothing published at the path
+            key = None
+        if key != self._key:
+            with self._lock:
+                if key != self._key:
+                    try:
+                        rows = pq.read_table(os.path.realpath(self._path)).to_pylist()
+                    except (OSError, ValueError):  # pyarrow's IO and parse errors
+                        rows = []
+                    if rows:
+                        self._bodies = {"/mart/all": _json(rows),
+                                        "/mart/statistic": _json(_statistic(rows))}
+                        self._rows = rows
+                    self._key = key
+        return self._rows
 
     def start(self) -> None:
         t = threading.Thread(target=self._httpd.serve_forever, daemon=True)

@@ -9,6 +9,9 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
+import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -166,6 +169,37 @@ def write_layer(df: DataFrame, path: str, partition_by: list[str] | None = None,
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+
+
+def publish_layer(path: str, write: Callable[[str], None]) -> None:
+    """Publish a layer atomically (driver-only, POSIX): ``write(target)``
+    writes ``_<name>.versions/<time_ns>/<name>`` beside ``path``, then one
+    ``os.replace`` points the symlink ``path`` at it. The replaced version
+    is kept until the next publish, so a reader that resolved the link
+    finishes its read; older and failed versions are deleted. A plain
+    ``path`` directory (the in-place layout) is removed at the swap."""
+    parent, name = os.path.split(os.path.abspath(path))
+    versions, version = os.path.join(parent, f"_{name}.versions"), str(time.time_ns())
+    target = os.path.join(versions, version, name)
+    os.makedirs(os.path.dirname(target))
+    write(target)
+    previous = os.readlink(path) if os.path.islink(path) else None
+    os.symlink(os.path.relpath(target, parent), target + ".link")
+    if previous is None and os.path.isdir(path):
+        shutil.rmtree(path)
+    os.replace(target + ".link", path)
+    keep = {version, previous and os.path.basename(os.path.dirname(previous))}
+    for v in set(os.listdir(versions)) - keep:
+        shutil.rmtree(os.path.join(versions, v), ignore_errors=True)
+
+
+def remove_layer(path: str) -> None:
+    """Delete a published layer's link and versions, or a plain layer."""
+    parent, name = os.path.split(os.path.abspath(path))
+    if os.path.islink(path):
+        os.unlink(path)
+    shutil.rmtree(path, ignore_errors=True)
+    shutil.rmtree(os.path.join(parent, f"_{name}.versions"), ignore_errors=True)
 
 
 def write_sorted_layer(

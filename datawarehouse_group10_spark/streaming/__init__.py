@@ -317,33 +317,27 @@ def run_stream_mart_upsert(
 
     Scale shape: a microbatch aggregates only its own rows; the merge
     touches mart-sized state (|distinct keys| rows, <=100 in this
-    domain), never history. ``localCheckpoint`` materializes the merged
-    result BEFORE the overwrite, making the read-modify-write on one
-    directory safe; on a lakehouse table format the same body becomes a
-    MERGE INTO and the checkpoint semantics carry over unchanged.
+    domain), never history. ``publish_layer`` swaps each merged mart in
+    as a new version; on a lakehouse table format the same body becomes
+    a MERGE INTO and the checkpoint semantics carry over unchanged.
     ``cache_silver=False`` inside the batch body: microbatches are small
     and per-batch cache entries would accumulate across a long-lived
     stream (the round-3 ADVICE cache-leak class).
     """
-    from pyspark.errors import AnalysisException
-
     from ..plans.medallion import merge_mart, run_full_pipeline
+    from ..sources.parquet_source import publish_layer
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         batch_mart = run_full_pipeline(
             batch_df, as_of=as_of, cache_silver=False
         )["mart"]
-        try:
-            existing = spark.read.parquet(mart_dir)
-            merged = merge_mart(existing, batch_mart)
-        except AnalysisException:  # first batch: no mart yet
-            merged = batch_mart
+        merged = batch_mart  # the first batch: no mart published yet
+        if os.path.exists(mart_dir):
+            merged = merge_mart(batch_df.sparkSession.read.parquet(mart_dir), batch_mart)
         capture_plan("stream_mart_upsert", merged)
-        out = merged.localCheckpoint(eager=True)
-        out.write.mode("overwrite").parquet(mart_dir)
+        publish_layer(mart_dir, merged.write.parquet)
 
     q = (
         bronze_stream.writeStream.foreachBatch(_upsert)

@@ -635,9 +635,6 @@ def test_http_mart_serving(spark, tmp_path):
             "leastNumber": 7,   # tie 5 vs 5 -> lower numeric value
             "lastUpdate": "2024-01-10",
         }
-        # artifact refresh without restart (drop the mtime-check TTL so the
-        # rewrite is visible to the very next request)
-        srv.STAT_TTL_SEC = 0.0
         mart.withColumn("total_draws", F.lit(21)).coalesce(1).write.mode(
             "overwrite"
         ).parquet(path)
@@ -664,6 +661,187 @@ def test_http_mart_serving(spark, tmp_path):
         err.value.close()
     finally:
         cold.stop()
+
+
+def test_publish_layer_swaps_one_link(spark, tmp_path):
+    """``publish_layer`` converts a plain layer directory (the in-place
+    layout) into a link on its first publish, keeps only the version a
+    publish replaced, leaves the last version published when a write
+    fails, and Spark and pyarrow both read through the link."""
+    import pyarrow.parquet as pq
+
+    from datawarehouse_group10_spark.sources.parquet_source import (
+        publish_layer,
+        remove_layer,
+    )
+
+    path = str(tmp_path / "mart")
+    versions = tmp_path / "_mart.versions"
+    spark.range(3).write.parquet(path)
+    targets = []
+    for n in (4, 5, 6):
+        publish_layer(path, spark.range(n).write.parquet)
+        targets.append(os.path.realpath(path))
+    assert os.path.islink(path)
+    assert targets[-1] != targets[-2] and targets[-1].startswith(str(versions))
+    assert sorted(str(versions / v / "mart") for v in os.listdir(versions)) == targets[1:]
+    assert spark.read.parquet(path).count() == 6
+    assert pq.read_table(path).num_rows == 6
+
+    def fail(target):
+        spark.range(9).write.parquet(target)
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError):
+        publish_layer(path, fail)
+    assert os.path.realpath(path) == targets[-1]
+    assert pq.read_table(path).num_rows == 6
+    publish_layer(path, spark.range(7).write.parquet)
+    assert len(os.listdir(versions)) == 2  # the failed version is gone
+    assert spark.read.parquet(path).count() == 7
+
+    remove_layer(path)
+    assert not os.path.lexists(path) and not versions.exists()
+
+
+def test_mart_server_under_concurrent_requests_and_publishes(tmp_path):
+    """Eight request threads with a short switch interval against a
+    MartServer while 20 versions are published: every response is one
+    whole published version, and once publishing stops every thread gets
+    the last version."""
+    import datetime as dt
+    import json
+    import sys
+    import threading
+    import urllib.request
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datawarehouse_group10_spark.serving import MartServer
+    from datawarehouse_group10_spark.sources.parquet_source import publish_layer
+
+    path = str(tmp_path / "mart")
+
+    def publish(v):
+        def write(target):
+            os.makedirs(target)
+            pq.write_table(pa.table({
+                "number_value": ["07", "23"], "total_occurrences": [v, 1],
+                "total_draws": [v + 1, v + 1], "probability": [0.5, 0.5],
+                "last_appeared_date": [dt.date(2024, 1, 1)] * 2,
+                "days_since_last": [1, 1],
+            }), os.path.join(target, "part-0.parquet"))
+        publish_layer(path, write)
+
+    publish(1)
+    srv = MartServer(path)
+    srv.start()
+    assert srv.rows()  # the first good load: no 503 from here on
+    stop, last = threading.Event(), {}
+    bad: list = []
+
+    def client(i):
+        url = f"http://127.0.0.1:{srv.port}/mart/all"
+        while not stop.is_set():
+            try:
+                with urllib.request.urlopen(url, timeout=10) as r:
+                    draws = {row["total_draws"] for row in json.load(r)}
+            except Exception as e:  # noqa: BLE001 - every failure is reported
+                bad.append(repr(e))
+                continue
+            if len(draws) != 1:
+                bad.append(draws)  # rows of two versions in one body
+            last[i] = draws
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(8)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for v in range(2, 22):
+            publish(v)
+        stop.wait(0.3)
+        last.clear()
+        stop.wait(0.3)
+    finally:
+        stop.set()
+        sys.setswitchinterval(old)
+        for t in threads:
+            t.join(timeout=30)
+        srv.stop()
+    assert not any(t.is_alive() for t in threads)
+    assert bad == []
+    assert last == {i: {22} for i in range(8)}
+
+
+def test_mart_readers_see_whole_marts_while_the_job_republishes(spark, tmp_path):
+    """Run the daily job twice on one output directory while a thread
+    polls the mart with pyarrow (resolving the link once per read) and
+    through a MartServer: every read and every response is the first or
+    the second run's whole mart, and both are seen."""
+    import json
+    import threading
+    import urllib.request
+
+    import pyarrow.parquet as pq
+
+    from datawarehouse_group10_spark.plans.warehouse_job import run_warehouse_job
+    from datawarehouse_group10_spark.serving import MartServer
+
+    csv = tmp_path / "csv"
+    csv.mkdir()
+    header = "prize,number_value,full_date,created_at\n"
+    (csv / "d1.csv").write_text(
+        header + "Giải Bảy,07,01-01-2024,x\nGiải Bảy,23,01-01-2024,x\n",
+        encoding="utf-8",
+    )
+    out = str(tmp_path / "dwh")
+    mart = os.path.join(out, "mart")
+
+    def job():
+        run_warehouse_job(spark, csv_dir=str(csv), output_dir=out, as_of="2024-01-10")
+
+    def read_mart():
+        rows = pq.read_table(os.path.realpath(mart)).to_pylist()
+        return repr(sorted(rows, key=lambda r: r["number_value"]))
+
+    def get_all():
+        with urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/mart/all") as r:
+            return json.dumps(sorted(json.load(r), key=lambda r: r["number_value"]))
+
+    job()
+    srv = MartServer(mart)
+    srv.start()
+    marts = [(read_mart(), get_all())]
+    seen, errors = set(), []
+    stop = threading.Event()
+
+    def poll():
+        while not stop.is_set():
+            try:
+                seen.add((read_mart(), get_all()))
+            except Exception as e:  # noqa: BLE001 - every failure is reported
+                errors.append(repr(e))
+            stop.wait(0.002)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        (csv / "d2.csv").write_text(header + "Giải Bảy,23,02-01-2024,x\n", encoding="utf-8")
+        job()
+        marts.append((read_mart(), get_all()))
+        stop.wait(0.5)
+    finally:
+        stop.set()
+        poller.join()
+        srv.stop()
+    assert errors == []
+    pq_marts, http_marts = (set(m) for m in zip(*marts))
+    assert len(pq_marts) == len(http_marts) == 2
+    assert {m for m, _ in seen} == pq_marts
+    assert {b for _, b in seen} == http_marts
 
 
 def test_no_row_at_a_time_python_in_any_registered_query(spark):
