@@ -1,5 +1,7 @@
 """The medallion pipeline: bronze (raw crawl rows) -> silver (typed
-transform) -> gold (star schema) -> mart (serving aggregate).
+transform) -> gold (star schema) and mart (serving aggregate). Both gold
+and the mart read silver: the mart is one per-number group of silver, not
+a rollup of the fact, so writing it does not re-derive the fact lineage.
 
 This is the Spark-first re-expression of the reference's P2-P4 stages
 (StagingDW, transform_staging, load_warehouse) as four declarative
@@ -219,30 +221,39 @@ def build_fact_prize(
     return fact
 
 
-def build_mart(fact: DataFrame, dim_number: DataFrame, as_of: str | None = None) -> DataFrame:
-    """Gold -> serving mart (A4/Q3) [mart SQL absent in reference;
+def build_mart(silver: DataFrame, as_of: str | None = None) -> DataFrame:
+    """Silver -> serving mart (A4/Q3) [mart SQL absent in reference;
     reconstructed from the JPA entity Backend/.../entity/Mart.java:15-34 —
     SURVEY 2.8].
 
-    - total_occurrences = SUM(occurrence_count) as DECIMAL(32,0) (MySQL SUM(INT))
-    - total_draws       = the transform-row count in scope, reconstructed as
-      the sum over one row per date of that date's total_draws (SURVEY
-      2.7.2: the fact grain collapsed intra-date duplicates, so
-      fact.count() would undercount)
+    One group of silver by normalised number (the dim_number natural key):
+
+    - total_occurrences = distinct draw dates of the number as DECIMAL(32,0):
+      the fact_prize row count of the number, since the fact grain is
+      distinct (date, number) (SURVEY 2.7.1)
+    - total_draws       = every silver row, intra-date duplicates included
+      (SURVEY 2.7.2): the per-number row counts summed over the <=100-row
+      group result, so silver is scanned once
     - probability       = total_occurrences / total_draws as DECIMAL(36,4)
     - days_since_last   = vs ``as_of`` (current_date if None)
+
+    These equal the fact + dim_number rollup (pinned in test_medallion.py)
+    without re-deriving the fact lineage.
     """
-    per_date = fact.select("date_key", "total_draws").dropDuplicates(["date_key"])
-    total = per_date.agg(F.sum("total_draws").cast("int").alias("total_draws"))
-    joined = fact.join(F.broadcast(dim_number.select("number_key", "number_value")), "number_key")
-    per_number = joined.groupBy("number_value").agg(
-        F.sum("occurrence_count").cast(DecimalType(32, 0)).alias("total_occurrences"),
-        F.max("full_date").alias("last_appeared_date"),
+    per_number = (
+        silver.groupBy(
+            normalize_numeric_string(F.col("number_value").cast("string")).alias("number_value")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.countDistinct("full_date").cast(DecimalType(32, 0)).alias("total_occurrences"),
+            F.max("full_date").alias("last_appeared_date"),
+        )
+        .withColumn("total_draws", F.sum("rows").over(Window.partitionBy()).cast("int"))
     )
     as_of_col = F.to_date(F.lit(as_of)) if as_of else F.current_date()
     return (
-        per_number.crossJoin(F.broadcast(total))
-        .withColumn(
+        per_number.withColumn(
             "probability",
             (F.col("total_occurrences") / F.col("total_draws")).cast(DecimalType(36, 4)),
         )
@@ -368,7 +379,7 @@ def run_full_pipeline(
         dim_number = dim_number.cache()
         _ACTIVE_CACHES.append(dim_number)
     fact = build_fact_prize(silver, dim_number)
-    mart = build_mart(fact, dim_number, as_of=as_of)
+    mart = build_mart(silver, as_of=as_of)
     return {
         "silver": silver,
         "dim_date": dim_date,

@@ -23,7 +23,7 @@ import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.config_tables import source_config
-from ..sources.csv_source import CSV_GLOB, read_crawl_csv_dir
+from ..sources.csv_source import BRONZE_SCHEMA, CSV_GLOB, read_crawl_csv_dir
 from ..sources.parquet_source import publish_layer, write_layer
 from .medallion import run_full_pipeline
 from .orchestrator import ProcessLog
@@ -77,7 +77,7 @@ def run_warehouse_job(
 
     log.run_stage("P2", _p2)
 
-    bronze = spark.read.parquet(bronze_path)
+    bronze = spark.read.schema(BRONZE_SCHEMA).parquet(bronze_path)
     layers = run_full_pipeline(bronze, as_of=as_of)
 
     # P3: silver layer.
@@ -92,11 +92,7 @@ def run_warehouse_job(
     def _p4() -> int:
         write_layer(layers["dim_date"], os.path.join(output_dir, "dim_date"))
         write_layer(layers["dim_number"], os.path.join(output_dir, "dim_number"))
-        write_layer(
-            layers["fact_prize"],
-            os.path.join(output_dir, "fact_prize"),
-            partition_by=["date_key"],
-        )
+        write_layer(layers["fact_prize"], os.path.join(output_dir, "fact_prize"))
         publish_layer(os.path.join(output_dir, "mart"),
                       lambda path: write_layer(layers["mart"], path))
         return _written_rows(os.path.join(output_dir, "fact_prize"))

@@ -28,6 +28,12 @@ from ..schemas import RAW_CRAWL_ALT
 #: Hadoop's ``pathGlobFilter`` and Python's ``fnmatch``.
 CSV_GLOB = "*.[cC][sS][vV]"
 
+#: The crawl CSV columns, all raw strings (the staging DDL).
+CRAWL_CSV_SCHEMA = "prize STRING, number_value STRING, full_date STRING, created_at STRING"
+#: A bronze row: the CSV columns plus the ``load_timestamp`` audit column.
+#: Reading bronze parquet with it skips Spark's footer-inference job.
+BRONZE_SCHEMA = CRAWL_CSV_SCHEMA + ", load_timestamp TIMESTAMP"
+
 
 def read_crawl_csv_dir(spark: SparkSession, path: str) -> DataFrame:
     """Bronze ingest: every :data:`CSV_GLOB` file under ``path`` -> typed
@@ -40,9 +46,8 @@ def read_crawl_csv_dir(spark: SparkSession, path: str) -> DataFrame:
     At scale: the directory listing is distributed, each file splits on block
     boundaries, and the explicit schema avoids an inference pass over 100 TB.
     """
-    schema = "prize STRING, number_value STRING, full_date STRING, created_at STRING"
     df = (
-        spark.read.schema(schema)
+        spark.read.schema(CRAWL_CSV_SCHEMA)
         .option("header", "true")
         .option("mode", "DROPMALFORMED")
         .option("pathGlobFilter", CSV_GLOB)

@@ -159,16 +159,12 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def write_layer(df: DataFrame, path: str, partition_by: list[str] | None = None,
-                mode: str = "overwrite") -> None:
-    """Write a medallion layer. Partitioning by date keys keeps re-loads
-    idempotent (overwrite one partition, not the table) and gives downstream
-    scans partition pruning — the 100 TB-scale replacement for the
-    reference's INSERT IGNORE idempotence (ETLMain.java:244)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+def write_layer(df: DataFrame, path: str) -> None:
+    """Write a medallion layer as one unpartitioned parquet overwrite of
+    the whole directory: re-running a load replaces the layer, the
+    replacement for the reference's INSERT IGNORE idempotence
+    (ETLMain.java:244)."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def publish_layer(path: str, write: Callable[[str], None]) -> None:

@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
 from datawarehouse_group10_spark.operators.aggregates import mart_statistics
 from datawarehouse_group10_spark.plans.medallion import (
@@ -106,6 +107,80 @@ def test_mart_probability_and_denominator(spark, lottery_bronze_rows):
     assert mart["23"]["days_since_last"] == 8          # as_of 01-10 vs 01-02
 
 
+def _fact_rollup_mart(fact, dim_number, as_of):
+    """The mart as a rollup of the star schema: per-number SUM of fact
+    occurrences and MAX date through dim_number, over total_draws summed
+    from one fact row per date. build_mart must give the same rows from
+    silver alone."""
+    per_date = fact.select("date_key", "total_draws").dropDuplicates(["date_key"])
+    total = per_date.agg(F.sum("total_draws").cast("int").alias("total_draws"))
+    per_number = (
+        fact.join(dim_number.select("number_key", "number_value"), "number_key")
+        .groupBy("number_value")
+        .agg(
+            F.sum("occurrence_count").cast(DecimalType(32, 0)).alias("total_occurrences"),
+            F.max("full_date").alias("last_appeared_date"),
+        )
+    )
+    return (
+        per_number.crossJoin(total)
+        .withColumn(
+            "probability",
+            (F.col("total_occurrences") / F.col("total_draws")).cast(DecimalType(36, 4)),
+        )
+        .withColumn(
+            "days_since_last",
+            F.datediff(F.to_date(F.lit(as_of)), "last_appeared_date").cast("int"),
+        )
+        .select(
+            "number_value", "total_occurrences", "total_draws",
+            "probability", "last_appeared_date", "days_since_last",
+        )
+    )
+
+
+def _multi_day_bronze(spark, days=20, seed=11):
+    """Generated bronze over ``days`` draw dates: per date 3-6 Giải-Bảy
+    numbers drawn with replacement from a small pool (so intra-date
+    duplicates and '07'/'007'-style forms recur), plus one other-tier row,
+    one 1-char number and one unparseable date."""
+    import random
+
+    rng = random.Random(seed)
+    ts = dt.datetime(2024, 3, 1, 12, 0, 0)
+    rows = []
+    for d in range(days):
+        day = (dt.date(2024, 1, 1) + dt.timedelta(days=d)).strftime("%d-%m-%Y")
+        for _ in range(rng.randint(3, 6)):
+            rows.append(("Giải Bảy", rng.choice(["07", "007", "23", "41", "99", "100", "5x5"]), day))
+        rows.append(("Giải Nhất", f"{rng.randint(0, 99999):05d}", day))
+        rows.append(("Giải Bảy", "3", day))
+    rows.append(("Giải Bảy", "55", "31-02-2024"))
+    return spark.createDataFrame(
+        [(p, n, d, "x", ts) for p, n, d in rows],
+        "prize string, number_value string, full_date string, "
+        "created_at string, load_timestamp timestamp",
+    )
+
+
+def test_mart_from_silver_equals_fact_rollup(spark, lottery_bronze_rows):
+    """build_mart(silver) is the fact + dim_number rollup, on the SURVEY
+    §2.7 trap rows (intra-date duplicate included) and on a generated
+    multi-day history."""
+    as_of = "2024-02-15"
+    for bronze in (lottery_bronze_rows, _multi_day_bronze(spark)):
+        silver = bronze_to_silver(bronze)
+        dim = build_dim_number(silver)
+        oracle = _fact_rollup_mart(build_fact_prize(silver, dim), dim, as_of)
+        mart = build_mart(silver, as_of=as_of)
+        assert mart.dtypes == oracle.dtypes
+        got, want = sorted(mart.collect()), sorted(oracle.collect())
+        assert got == want
+        assert len(got) == dim.count() >= 4
+        # SURVEY 2.7.2: the denominator counts every silver row, dups included
+        assert {r["total_draws"] for r in got} == {silver.count()}
+
+
 def test_statistics_deterministic_tiebreak(spark, lottery_bronze_rows):
     out = run_full_pipeline(lottery_bronze_rows, as_of="2024-01-10")
     stats = mart_statistics(out["mart"]).first()
@@ -185,8 +260,8 @@ def test_repeated_pipeline_runs_do_not_leak_cached_rdds(spark, lottery_bronze_ro
     for _ in range(3):
         out = run_full_pipeline(lottery_bronze_rows, as_of="2024-01-10")
         out["mart"].count()  # materialize -> populates the caches
-    # after 3 runs only the LAST invocation's caches (silver + dim_number)
-    # may have been added
+    # after 3 runs only the LAST invocation's caches may have been added:
+    # silver (read by every gold layer and the mart) and dim_number
     assert n_cached() - baseline <= 2
     release_pipeline_caches()
     assert n_cached() - baseline <= 0
