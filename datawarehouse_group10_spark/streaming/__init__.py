@@ -39,8 +39,6 @@ __all__ = [
     "events_hourly_counts",
     "run_stream_to_table",
     "run_stream_to_parquet",
-    "stream_dedup_events",
-    "running_user_stats_stateful",
     "stream_interval_join",
     "attributed_conversions",
     "apply_cms_batch",
@@ -531,80 +529,6 @@ def run_stream_corpus_ingest(
     finally:
         if q.isActive:
             q.stop()
-
-
-def stream_dedup_events(
-    spark: SparkSession,
-    events_path: str,
-    id_cols: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming deduplication with bounded state:
-    ``dropDuplicatesWithinWatermark`` keeps a key's dedup state only
-    until the watermark passes it, so the state store stays O(events per
-    watermark window) instead of O(all history) — the streaming twin of
-    the batch anti-join dedupe (J2-J4)."""
-    ev = read_events_stream(spark, events_path)
-    return ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        id_cols or ["event_id"]
-    )
-
-
-def running_user_stats_stateful(
-    stream_df: DataFrame, state_ttl_ms: int | None = None
-) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    running event count and max value, carried across micro-batches in
-    the state store (the brief's 'custom stateful operators' pattern).
-
-    The update function is self-contained (local imports) so executors
-    unpickle it without this package on sys.path.
-
-    State lifetime: with ``state_ttl_ms`` set, the input stream MUST carry
-    a watermark (``.withWatermark`` on the event-time column) and per-user
-    state expires via ``EventTimeTimeout`` once the watermark passes
-    last-update + ttl — bounded state, the production setting. With the
-    default ``None`` the state is UNBOUNDED (``NoTimeout``): acceptable
-    for AvailableNow backfills over finite input, wrong for a
-    forever-running stream over unbounded keys.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "user_id BIGINT, n_events BIGINT, max_value DOUBLE"
-    state_schema = "n BIGINT, mx DOUBLE"
-    ttl = state_ttl_ms
-
-    def update(key, pdf_iter, state):
-        import pandas as _pd
-
-        if state.hasTimedOut:
-            # Watermark passed last-update + ttl: evict, emit nothing.
-            state.remove()
-            return
-        n, mx = state.get if state.exists else (0, float("-inf"))
-        for pdf in pdf_iter:
-            n += len(pdf)
-            if len(pdf):
-                mx = max(mx, float(pdf["value"].max()))
-        state.update((n, mx))
-        if ttl is not None:
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + max(ttl, 1))
-        yield _pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "max_value": [mx]}
-        )
-
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout
-        if ttl is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return stream_df.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=timeout,
-    )
 
 
 def stream_interval_join(

@@ -104,10 +104,22 @@ def test_config_tables_roundtrip(spark, tmp_path):
         source_config(spark, sp, 99)
 
 
+def _ledger_statuses(store, path: str) -> list[str]:
+    """Status column of every event file in the ledger, read with pyarrow
+    through ``store`` (the in-memory store has no files on disk)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    return [s for name in store.list(path) if name.endswith(".parquet")
+            for s in pq.read_table(pa.py_buffer(store.read(os.path.join(path, name))))
+            .column("status").to_pylist()]
+
+
 def test_process_log_gating(meta_store, tmp_path):
     """Gating on the ledger built from MetaStore primitives alone: the
     same run against the POSIX store and the in-memory fake."""
-    log = ProcessLog(str(tmp_path / "ledger"))
+    path = str(tmp_path / "ledger")
+    log = ProcessLog(path)
     assert log.can_start("P1")                 # first stage always startable
     assert not log.can_start("P2")             # P1 never succeeded
     log.run_stage("P1", lambda: 42)
@@ -121,14 +133,74 @@ def test_process_log_gating(meta_store, tmp_path):
     log.log("P3", "RUNNING")
     with pytest.raises(RuntimeError, match="gated"):
         log.run_stage("P3", lambda: 1)
-    assert log.latest_status("P3") == "GATED"
-    assert not log.can_start("P3")             # still RUNNING underneath
+    assert log.latest_status("P3") == "RUNNING"  # GATED is history only
+    assert "GATED" in _ledger_statuses(meta_store, path)
+    assert not log.can_start("P3")
+
+
+def test_process_log_recovery_reopens_crashed_stage(meta_store, tmp_path):
+    """A run that crashed mid-stage leaves RUNNING, which blocks the stage
+    (every attempt is GATED) until one logged FAILED re-opens it."""
+    class Crash(BaseException):
+        """The driver dying mid-stage: nothing logs FAILED."""
+
+    def crash():
+        raise Crash
+
+    log = ProcessLog(str(tmp_path / "ledger"))
+    log.run_stage("P1", lambda: 1)
+    with pytest.raises(Crash):
+        log.run_stage("P2", crash)
+    for _ in range(2):
+        with pytest.raises(RuntimeError, match="gated"):
+            log.run_stage("P2", lambda: 2)
+    assert log.latest_status("P2") == "RUNNING"
+    log.log("P2", "FAILED", message="operator: run crashed")
+    assert log.run_stage("P2", lambda: 2) == 2
+    assert log.latest_status("P2") == "SUCCESS"
+
+
+def test_process_log_gate_reads_are_constant_in_history(monkeypatch):
+    """One gate check reads the same objects after 10 logged runs as after
+    1,000, and never lists the ledger: the gate is O(1) in history."""
+    from collections import Counter
+
+    import datawarehouse_group10_spark.sources.layout as L
+
+    class CountingStore(L.MemoryMetaStore):
+        def __init__(self):
+            super().__init__()
+            self.calls = Counter()
+
+        def read(self, key):
+            self.calls["read"] += 1
+            return super().read(key)
+
+        def list(self, dirpath):
+            self.calls["list"] += 1
+            return super().list(dirpath)
+
+    store = CountingStore()
+    monkeypatch.setattr(L, "META_STORE", store)
+    log = ProcessLog("/ledger")
+    gate_calls = {}
+    done = 0
+    for runs in (10, 1000):
+        for _ in range(runs - done):
+            for code in ("P1", "P2", "P3", "P4"):
+                log.run_stage(code, lambda: 1)
+        done = runs
+        store.calls.clear()
+        assert log.can_start("P2")
+        gate_calls[runs] = dict(store.calls)
+    assert gate_calls[10] == gate_calls[1000] == {"read": 2}
 
 
 def test_process_log_gate_admits_one_of_two_concurrent_runs(tmp_path, monkeypatch):
-    """Two runs that both pass the ledger read before either logs RUNNING
-    (forced by a barrier right after the gate check): the per-stage claim
-    lets exactly one run the stage; the other raises and logs GATED."""
+    """Two runs that both pass the gate's status reads before either logs
+    RUNNING (forced by a barrier right after the gate check): the
+    conditional RUNNING write lets exactly one run the stage; the other
+    raises and logs GATED."""
     import threading
 
     barrier = threading.Barrier(2, timeout=30)
@@ -162,9 +234,10 @@ def test_process_log_gate_admits_one_of_two_concurrent_runs(tmp_path, monkeypatc
     loser = next(r for r in results if r != 7)
     assert isinstance(loser, RuntimeError) and "gated" in str(loser)
     monkeypatch.undo()
-    events = ProcessLog(path)._events()
-    assert sorted(status for _, _, status in events) == ["GATED", "RUNNING", "SUCCESS"]
-    assert not os.path.exists(os.path.join(path, "_P1.running"))   # claim released
+    import pyarrow.parquet as pq
+
+    assert sorted(pq.read_table(path).column("status").to_pylist()) == ["GATED", "RUNNING", "SUCCESS"]
+    assert ProcessLog(path).latest_status("P1") == "SUCCESS"
 
 
 def test_streaming_silver_matches_batch(spark, csv_dir):
@@ -250,6 +323,40 @@ def test_warehouse_job_end_to_end(spark, tmp_path):
     register_views(spark, {"mart": mart})
     stats = spark.sql(SQL_MART_STATISTIC).first()
     assert stats["most_number"] == 23 and stats["least_number"] == 7
+
+
+def test_warehouse_job_runs_on_event_only_ledger(spark, tmp_path):
+    """A ledger written before the per-stage status objects existed (event
+    files only, every stage SUCCESS) is taken over by the next run: P1..P4
+    run to SUCCESS, each stage gets its ``_P*.status`` object, and Spark
+    still reads only the event rows."""
+    from datawarehouse_group10_spark.plans.warehouse_job import run_warehouse_job
+
+    csv = tmp_path / "csv"
+    csv.mkdir()
+    (csv / "data.csv").write_text(
+        "prize,number_value,full_date,created_at\n"
+        "Giải Bảy,07,01-01-2024,x\nGiải Bảy,23,02-01-2024,x\n",
+        encoding="utf-8",
+    )
+    out_dir = str(tmp_path / "dwh")
+    ledger = os.path.join(out_dir, "process_log")
+    old = ProcessLog(ledger)
+    for code in ("P1", "P2", "P3", "P4"):
+        old.log(code, "RUNNING")
+        old.log(code, "SUCCESS", message="rows=1")
+    for name in os.listdir(ledger):
+        if name.startswith("_"):
+            os.remove(os.path.join(ledger, name))
+    assert all(n.startswith("part-") for n in os.listdir(ledger))
+
+    run_warehouse_job(spark, csv_dir=str(csv), output_dir=out_dir, as_of="2024-01-10")
+    for code in ("P1", "P2", "P3", "P4"):
+        with open(os.path.join(ledger, f"_{code}.status"), "rb") as fh:
+            assert fh.read() == b"SUCCESS"
+    rows = spark.read.parquet(ledger).collect()
+    assert len(rows) == 16                     # 8 old events + 8 new ones
+    assert {r["status"] for r in rows} == {"RUNNING", "SUCCESS"}
 
 
 def test_warehouse_job_reads_upper_case_csv_suffix(spark, tmp_path):
@@ -436,165 +543,6 @@ def test_streaming_watermark_drops_late_rows(spark, tmp_path):
     assert rows.count((t0, 1)) == 1
     assert (t0, 2) not in rows
     assert len([r for r in rows if r[0] == t0]) == 1
-
-
-def test_stream_dedup_bounded_state(spark, tmp_path):
-    """dropDuplicatesWithinWatermark over a stream containing exact
-    duplicate event_ids keeps one copy of each."""
-    import datetime as dt
-
-    from datawarehouse_group10_spark.streaming import (
-        run_stream_to_table,
-        stream_dedup_events,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [(1, t0, 10, "click", 1.0, "{}"), (1, t0, 10, "click", 1.0, "{}"),
-            (2, t0, 11, "view", 2.0, "{}")]
-    df = spark.createDataFrame(
-        rows,
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string",
-    )
-    # write with ts as nanos long to mirror the testdata's physical layout
-    from pyspark.sql import functions as F
-
-    df.withColumn("ts", (F.col("ts").cast("long") * 1_000_000_000)).write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "ev"))
-    out = run_stream_to_table(
-        stream_dedup_events(spark, str(tmp_path / "ev")),
-        "stream_dedup_test",
-        output_mode="append",
-    )
-    got = sorted(r["event_id"] for r in out.collect())
-    assert got == [1, 2]
-
-
-def test_stateful_running_user_stats(spark, tmp_path):
-    """applyInPandasWithState carries per-user running aggregates across
-    micro-batches (two files -> two batches -> updated state)."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-    import time
-
-    from pyspark.sql import functions as F
-
-    from datawarehouse_group10_spark.streaming import (
-        EVENTS_SCHEMA_NANOS,
-        running_user_stats_stateful,
-    )
-
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
-    now = time.time()
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def write(name, rows, mtime):
-        df = spark.createDataFrame(
-            rows,
-            "event_id bigint, ts bigint, user_id bigint, event_type string, "
-            "value double, props string",
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
-        src = glob.glob(str(tmp_path / name / "part-*.parquet"))[0]
-        dst = str(stream_dir / f"{name}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (mtime, mtime))
-
-    ns = int(t0.timestamp()) * 1_000_000_000
-    write("a", [(1, ns, 7, "x", 5.0, "{}"), (2, ns, 7, "x", 9.0, "{}")], now - 100)
-    write("b", [(3, ns, 7, "x", 2.0, "{}")], now - 50)
-
-    ev = (
-        spark.readStream.schema(EVENTS_SCHEMA_NANOS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stream_dir))
-    )
-    ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    stats = running_user_stats_stateful(ev)
-    q = (
-        stats.writeStream.format("memory")
-        .queryName("user_stats_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("user_stats_test").collect()
-    # update mode emits one row per batch per touched key; the LAST row for
-    # user 7 carries the cumulative state: 3 events, max 9.0
-    assert (7, 3, 9.0) in {(r["user_id"], r["n_events"], r["max_value"]) for r in rows}
-    assert (7, 2, 9.0) in {(r["user_id"], r["n_events"], r["max_value"]) for r in rows}
-
-
-def test_stateful_state_ttl_eviction(spark, tmp_path):
-    """With state_ttl_ms set, per-user state is dropped once the watermark
-    passes it: user 7's count restarts at 1 in the third batch instead of
-    continuing at 3 (EventTimeTimeout + hasTimedOut removal)."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-    import time
-
-    from pyspark.sql import functions as F
-
-    from datawarehouse_group10_spark.streaming import (
-        EVENTS_SCHEMA_NANOS,
-        running_user_stats_stateful,
-    )
-
-    stream_dir = tmp_path / "stream_ttl"
-    stream_dir.mkdir()
-    now = time.time()
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def write(name, rows, mtime):
-        df = spark.createDataFrame(
-            rows,
-            "event_id bigint, ts bigint, user_id bigint, event_type string, "
-            "value double, props string",
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
-        src = glob.glob(str(tmp_path / name / "part-*.parquet"))[0]
-        dst = str(stream_dir / f"{name}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (mtime, mtime))
-
-    def ns(minutes):
-        return int((t0 + dt.timedelta(minutes=minutes)).timestamp()) * 1_000_000_000
-
-    # batch 1: user 7 twice; batch 2: user 8 six hours later (advances the
-    # watermark far past user 7's ttl); batch 3: user 7 again.
-    write("a", [(1, ns(0), 7, "x", 5.0, "{}"), (2, ns(0), 7, "x", 9.0, "{}")], now - 100)
-    write("b", [(3, ns(360), 8, "x", 2.0, "{}")], now - 50)
-    write("c", [(4, ns(361), 7, "x", 4.0, "{}")], now - 10)
-
-    ev = (
-        spark.readStream.schema(EVENTS_SCHEMA_NANOS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stream_dir))
-    )
-    ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    stats = running_user_stats_stateful(
-        ev.withWatermark("ts", "1 hour"), state_ttl_ms=60_000
-    )
-    q = (
-        stats.writeStream.format("memory")
-        .queryName("user_stats_ttl_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {(r["user_id"], r["n_events"], r["max_value"])
-            for r in spark.table("user_stats_ttl_test").collect()}
-    assert (7, 2, 9.0) in rows        # batch 1 cumulative
-    assert (7, 1, 4.0) in rows        # state evicted -> restart at 1
-    assert (7, 3, 9.0) not in rows    # NOT carried across the ttl
 
 
 def test_parquet_sink_restart_processes_only_new_files(spark, tmp_path):
@@ -1117,6 +1065,7 @@ def test_events_loader_adapts_to_both_physical_layouts(spark, tmp_path):
     physical ts layouts the testdata has shipped with — TIMESTAMP(NANOS)
     (read as nanos BIGINT, rebuilt) and TIMESTAMP(MICROS) (read natively)
     — and the REAL testdata artifact must load without assuming either.
+    A directory of bare-INT64 nanos files reads like the NANOS layout.
     Batch (read_events) and streaming (read_events_stream) must agree on
     the same instants for the same rows in both layouts."""
     import datetime as dt
@@ -1155,11 +1104,19 @@ def test_events_loader_adapts_to_both_physical_layouts(spark, tmp_path):
     pq.write_table(
         pa.table({**cols, "ts": pa.array([t0], pa.timestamp("us"))}), str(micros)
     )
+    # a Spark-style directory whose ts is a bare INT64 of epoch nanos
+    bare = tmp_path / "ev_bare"
+    bare.mkdir()
+    pq.write_table(
+        pa.table({**cols, "ts": pa.array([t0], pa.timestamp("ns")).cast(pa.int64())}),
+        str(bare / "part-0.parquet"),
+    )
     assert events_ts_layout(str(nanos)) == "nanos-long"
     assert events_ts_layout(str(micros)) == "timestamp"
+    assert events_ts_layout(str(bare)) == "nanos-long"
 
     vals = {}
-    for p in (nanos, micros):
+    for p in (nanos, micros, bare):
         got = read_events(spark, str(p)).select("event_id", "ts").collect()
         vals[p.name] = [(r["event_id"], r["ts"]) for r in got]
         streamed = run_stream_to_table(
@@ -1168,7 +1125,7 @@ def test_events_loader_adapts_to_both_physical_layouts(spark, tmp_path):
             output_mode="append",
         )
         assert [(r["event_id"], r["ts"]) for r in streamed.collect()] == vals[p.name]
-    assert vals["ev_nanos.parquet"] == vals["ev_micros.parquet"]
+    assert vals["ev_nanos.parquet"] == vals["ev_micros.parquet"] == vals["ev_bare"]
     assert vals["ev_micros.parquet"][0][1] == t0
 
 
