@@ -80,6 +80,8 @@ from .plans.medallion import (
     bronze_to_silver,
     build_dim_date,
     build_dim_number,
+    build_mart,
+    merge_mart,
     run_full_pipeline,
 )
 from .sources.csv_source import read_alt_crawl_csv, write_crawl_csv
@@ -360,23 +362,17 @@ def q_pipeline_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load-split invariance of the incremental path (merge_mart IVM +
-    the incremental dim/fact anti-join semantics): bronze is split into
-    two date-disjoint batches, each runs the full pipeline, and the two
-    marts merge WITHOUT rescanning history (per-number partials add,
-    last-appearance maxes, denominator adds). The merged mart must
-    hash-match the one-shot full-load mart — the oracle is literally
-    pipeline_mart's."""
+    """Load-split invariance of the incremental path (merge_mart IVM):
+    bronze is split into two date-disjoint batches, each builds its mart
+    from its own silver (nothing cached), and the two marts merge
+    WITHOUT rescanning history (per-number partials add, last-appearance
+    maxes, denominator adds). The merged mart must hash-match the
+    one-shot full-load mart — the oracle is literally pipeline_mart's."""
     _utc(spark)
-    from .plans.medallion import merge_mart
-
     bronze = lottery_bronze(spark, sf_dir)
     day = F.substring("full_date", 1, 2).cast("int")
-    m1 = run_full_pipeline(bronze.filter(day <= 15), as_of=AS_OF)["mart"]
-    # Batch 2 must not release batch 1's caches — both feed one lazy plan.
-    m2 = run_full_pipeline(
-        bronze.filter(day > 15), as_of=AS_OF, release_previous=False
-    )["mart"]
+    m1 = build_mart(bronze_to_silver(bronze.filter(day <= 15)), as_of=AS_OF)
+    m2 = build_mart(bronze_to_silver(bronze.filter(day > 15)), as_of=AS_OF)
     merged = merge_mart(m1, m2)
     return stable(
         merged.withColumn(

@@ -29,11 +29,7 @@ from .similarity import (
     lsh_bucket_topk,
     pairwise_near_dup,
 )
-from .semistructured import (
-    json_get,
-    json_fields,
-    flatten_json,
-)
+from .semistructured import json_fields
 
 __all__ = [
     "token_count",
@@ -53,7 +49,5 @@ __all__ = [
     "brute_force_topk",
     "lsh_bucket_topk",
     "pairwise_near_dup",
-    "json_get",
     "json_fields",
-    "flatten_json",
 ]

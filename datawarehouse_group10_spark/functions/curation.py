@@ -54,7 +54,6 @@ def curate_corpus(
     default_rate: float = 0.1,
     train_frac: float = 0.8,
     val_frac: float = 0.1,
-    cache: bool = True,
     pre_shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Run the four-stage curation pipeline; return one audit row per
@@ -90,16 +89,15 @@ def curate_corpus(
     scale this turns the pipeline's heaviest string pass into a reused
     artifact shared with the standalone MinHash/Jaccard queries.
 
-    ``cache`` persists the stage-survivor frames before the fan-out
-    (each feeds 2-4 consumers: the pair join's two sides, the next
-    stage, and the fate audit) — the in-memory stand-in for what a
-    deployed curation run does by WRITING each stage to parquet.
-    Without it the quality scan + dedup lineage re-derives per
-    consumer. Caches from the previous invocation release on entry
+    The stage-survivor frames are persisted before the fan-out (each
+    feeds 2-4 consumers: the pair join's two sides, the next stage, and
+    the fate audit) — the in-memory stand-in for what a deployed
+    curation run does by WRITING each stage to parquet. Without it the
+    quality scan + dedup lineage re-derives per consumer. Caches from
+    the previous invocation release on entry
     (:func:`release_curation_caches`).
     """
-    if cache:
-        release_curation_caches()
+    release_curation_caches()
     q = quality_features(text_col)
     r = repetition_features(text_col, n=shingle_k)
     flagged = df.select(
@@ -111,11 +109,8 @@ def curate_corpus(
             & (q["stopword_ratio"] >= min_stopword_ratio)
             & (r["dup_gram_ratio"] <= max_dup_gram_ratio)
         ).alias("_q_ok"),
-    )
-
-    if cache:
-        flagged = flagged.persist()
-        _ACTIVE_CACHES.append(flagged)
+    ).persist()
+    _ACTIVE_CACHES.append(flagged)
 
     quality_pass = flagged.filter(F.col("_q_ok")).select(
         id_col, "source", text_col
@@ -124,10 +119,8 @@ def curate_corpus(
     keepers = exact_dedup(quality_pass, text_col=text_col, id_col=id_col).select(
         F.col("keep_id").alias(id_col)
     )
-    exact_surv = quality_pass.join(keepers, id_col, "left_semi")
-    if cache:
-        exact_surv = exact_surv.persist()
-        _ACTIVE_CACHES.append(exact_surv)
+    exact_surv = quality_pass.join(keepers, id_col, "left_semi").persist()
+    _ACTIVE_CACHES.append(exact_surv)
 
     pairs = ngram_jaccard_pairs(
         exact_surv,
@@ -139,10 +132,8 @@ def curate_corpus(
         pre_shingled=pre_shingled,
     )
     near_dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    kept = exact_surv.join(near_dropped, id_col, "left_anti")
-    if cache:
-        kept = kept.persist()
-        _ACTIVE_CACHES.append(kept)
+    kept = exact_surv.join(near_dropped, id_col, "left_anti").persist()
+    _ACTIVE_CACHES.append(kept)
 
     split = deterministic_split(
         kept, train_frac=train_frac, val_frac=val_frac

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from .sampling import hash_bucket
 from .text import token_count
 
-__all__ = ["pack_sequences", "packing_stats"]
+__all__ = ["pack_sequences"]
 
 #: Salt decorrelating the packing layout from any sampling/split
 #: decision on the same ids (see functions.sampling.hash_bucket).
@@ -119,41 +119,3 @@ def pack_sequences(
         (seg_hi - seg_lo).cast("int").alias("n_tokens"),
     )
 
-
-def packing_stats(packed: DataFrame, seq_len: int) -> DataFrame:
-    """Per-shard packing efficiency from :func:`pack_sequences` output:
-    document count, sequence count, total tokens, fill ratio (tokens /
-    (sequences × seq_len) — below 1.0 only by each shard's one ragged
-    tail), and how many documents were split across a sequence
-    boundary. One aggregation, no extra scan of the corpus."""
-    per_doc = packed.groupBy("shard", packed.columns[0]).agg(
-        F.sum("n_tokens").alias("_doc_toks"),
-        F.count("*").alias("_segs"),
-    )
-    return (
-        per_doc.groupBy("shard")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("_doc_toks").cast("bigint").alias("n_tokens"),
-            F.sum(F.when(F.col("_segs") > 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_split_docs"),
-        )
-        .join(
-            packed.groupBy("shard").agg(
-                (F.max("seq_id") + 1).cast("bigint").alias("n_seqs")
-            ),
-            "shard",
-        )
-        .select(
-            "shard",
-            "n_docs",
-            "n_seqs",
-            "n_tokens",
-            (
-                F.col("n_tokens")
-                / (F.col("n_seqs") * F.lit(float(seq_len)))
-            ).alias("fill_ratio"),
-            "n_split_docs",
-        )
-    )

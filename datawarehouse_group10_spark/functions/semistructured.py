@@ -1,18 +1,17 @@
 """Semi-structured (JSON string column) extraction.
 
 Warehouse tables routinely carry a free-form JSON payload column next to
-the typed columns (the testdata ``events.props`` models this). These
-helpers pull typed scalars out of such columns as pure JVM expressions —
-``from_json`` / ``get_json_object`` are Catalyst expressions inside
-whole-stage codegen, so extraction costs one parse per row with zero
-Python involvement and the surrounding filter/aggregate still pushes
-down and combines map-side.
+the typed columns (the testdata ``events.props`` models this).
+:func:`json_fields` pulls typed fields out of such a column as a pure JVM
+expression — ``from_json`` is a Catalyst expression inside whole-stage
+codegen, so extraction costs one parse per row with zero Python
+involvement and the surrounding filter/aggregate still pushes down and
+combines map-side.
 
 Scale notes (100 TB):
 
 - ``json_fields`` parses the document ONCE per row (``from_json`` with a
-  struct schema) no matter how many fields are pulled — prefer it over
-  repeated ``json_get`` calls when extracting 2+ fields.
+  struct schema) no matter how many fields are pulled.
 - Extraction failures (malformed JSON, missing key, wrong type) yield
   NULL, never an error — the bad-record-tolerance contract of the CSV
   layer (SURVEY §2.7) extended to nested payloads. Count extraction
@@ -24,18 +23,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def json_get(col: str | Column, path: str, dtype: str = "string") -> Column:
-    """One typed scalar from a JSON string column.
-
-    ``path`` is a JSONPath like ``$.k`` or ``$.a.b[0]``. Returns NULL on
-    malformed JSON or a missing/incompatible value.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, path).cast(dtype)
 
 
 def json_fields(col: str | Column, fields: dict[str, str]) -> Column:
@@ -49,19 +38,3 @@ def json_fields(col: str | Column, fields: dict[str, str]) -> Column:
     schema = ", ".join(f"{name} {dtype}" for name, dtype in fields.items())
     return F.from_json(c, schema)
 
-
-def flatten_json(
-    df: DataFrame, col: str, fields: dict[str, str], keep: bool = False
-) -> DataFrame:
-    """Promote JSON payload fields to top-level typed columns.
-
-    The silver-layer move for semi-structured ingest: after promotion the
-    fields participate in predicate pushdown / min-max pruning like any
-    typed column. ``keep=False`` drops the raw JSON column.
-    """
-    parsed = json_fields(col, fields).alias("_j")
-    out = df.select("*", parsed)
-    for name in fields:
-        out = out.withColumn(name, F.col("_j").getField(name))
-    out = out.drop("_j")
-    return out if keep else out.drop(col)

@@ -52,7 +52,6 @@ __all__ = [
     "decode_audio_features",
     "synthesize_y4m_payload",
     "decode_video_features",
-    "frame_sample_stub",
 ]
 
 
@@ -706,22 +705,3 @@ def decode_video_features(df: DataFrame) -> DataFrame:
 
     return df.mapInPandas(_batches, schema=VIDEO_FEATURE_SCHEMA)
 
-
-def frame_sample_stub(df: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
-    """Video frame-sampling plumbing: one input row fans out to N frame
-    rows (mapInPandas may return more rows than it receives — the frame
-    explosion happens inside the Arrow batch, not via a JVM explode of
-    pre-materialized frames)."""
-    schema = "doc_id BIGINT, frame_idx INT, frame BINARY"
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                for i, off in enumerate(range(0, len(payload), every_n_bytes)):
-                    rows.append((doc_id, i, payload[off : off + every_n_bytes]))
-            yield _pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame"])
-
-    return df.mapInPandas(_batches, schema=schema)

@@ -98,31 +98,18 @@ def build_dim_date(silver: DataFrame, existing: DataFrame | None = None) -> Data
     return dim
 
 
-def build_dim_number(
-    silver: DataFrame,
-    existing: DataFrame | None = None,
-    max_natural_keys: int | None = 100_000,
-) -> DataFrame:
+def build_dim_number(silver: DataFrame, existing: DataFrame | None = None) -> DataFrame:
     """Gold dim_number (T7, T11, J3; deterministic surrogate key).
 
     Natural key = normalized number string (leading zeros stripped, T7).
     number_key = row_number() over natural-key order: deterministic, unlike
     the reference's AUTO_INCREMENT (documented deviation, SURVEY 4).
     The window has no partition, but it runs over <=100 distinct rows
-    post-aggregation, so the single-partition sort is trivial.
-
-    SCALE GUARD: the unpartitioned ``row_number()`` serializes the whole
-    post-aggregation dimension through one task. That is correct and
-    trivial for the lottery's two-digit domain, but anyone reusing this
-    builder on a high-cardinality natural key would silently inherit a
-    single-partition sort — so the build RAISES when the distinct-key
-    count exceeds ``max_natural_keys`` (checked with an early-stopping
-    ``limit(n+1).count()``, not a full count). For a genuinely large
-    dimension, assign keys without a global sort instead:
-    ``monotonically_increasing_id()`` (sparse but unique + stable within a
-    write) or zipWithIndex-style dense ranks per partition plus a
-    partition-offset cumulative sum. Pass ``max_natural_keys=None`` only
-    when the domain is provably bounded.
+    post-aggregation (silver's ``number_value`` is the draw number's last
+    two digits, see :func:`bronze_to_silver`), so the single-partition
+    sort is trivial. A high-cardinality natural key would need keys
+    assigned without a global sort (``monotonically_increasing_id()``, or
+    per-partition dense ranks plus a partition-offset cumulative sum).
 
     Incremental semantics (mirrors AUTO_INCREMENT continuing past the
     existing max, ETLMain.java:299-302): when ``existing`` is given, only
@@ -144,17 +131,6 @@ def build_dim_number(
         )
         .withColumn("last_digit", last_digit("number_value"))
     )
-    if max_natural_keys is not None:
-        n = base.select("number_value").limit(max_natural_keys + 1).count()
-        if n > max_natural_keys:
-            raise ValueError(
-                f"build_dim_number: >{max_natural_keys} distinct natural keys — "
-                "the unpartitioned row_number() surrogate would serialize the "
-                "dimension through one task. Use a scalable key assignment "
-                "(monotonically_increasing_id or per-partition dense rank + "
-                "offset cumsum), or pass max_natural_keys=None for a provably "
-                "bounded domain."
-            )
     key_offset = F.lit(0)
     if existing is not None:
         base = anti_join_new_rows(base, existing, "number_value")
@@ -340,44 +316,26 @@ def release_pipeline_caches() -> None:
 def run_full_pipeline(
     bronze: DataFrame,
     as_of: str | None = None,
-    cache_silver: bool = True,
-    release_previous: bool = True,
 ) -> dict[str, DataFrame]:
     """End-to-end P2->P4: returns every layer keyed by name.
 
-    ``cache_silver`` persists the silver layer before fanning out — the
-    in-memory equivalent of what a deployed medallion does by WRITING
-    silver to parquet: dim_date, dim_number, fact, and mart all read it,
-    and without persistence Catalyst re-derives the whole bronze scan +
+    Silver and dim_number are cached before fanning out — the in-memory
+    equivalent of what a deployed medallion does by WRITING silver to
+    parquet: dim_date, dim_number, fact, and mart all read silver, and
+    without persistence Catalyst re-derives the whole bronze scan +
     transform chain once per consumer (~5x the work). Caches from the
     PREVIOUS invocation are unpersisted on entry (see
     :func:`release_pipeline_caches`) — repeated pipeline runs in one
-    session do not leak storage.
-
-    ``build_dim_number`` runs with its high-cardinality scale guard
-    DISABLED here: this pipeline's silver derives ``number_value`` from
-    the last two digits of the draw number (:func:`bronze_to_silver`), a
-    domain statically bounded at 100 distinct keys, so the guard's eager
-    ``limit(n+1).count()`` job would be a pure driver round-trip on the
-    timed path (measured ~0.5s/invocation at sf0.1). Generic callers of
-    ``build_dim_number`` keep the guard by default.
-
-    ``release_previous=False`` keeps earlier invocations' caches alive —
-    for compositions that hold results from several pipeline runs in one
-    lazy plan (e.g. the two-batch incremental merge); the combined set
-    still releases on the next default invocation.
+    session do not leak storage. A caller that needs only the mart
+    should call ``build_mart(bronze_to_silver(bronze), as_of)`` instead,
+    which caches nothing and leaves this call's caches alone.
     """
-    if release_previous:
-        release_pipeline_caches()
-    silver = bronze_to_silver(bronze)
-    if cache_silver:
-        silver = silver.cache()
-        _ACTIVE_CACHES.append(silver)
+    release_pipeline_caches()
+    silver = bronze_to_silver(bronze).cache()
+    _ACTIVE_CACHES.append(silver)
     dim_date = build_dim_date(silver)
-    dim_number = build_dim_number(silver, max_natural_keys=None)
-    if cache_silver:
-        dim_number = dim_number.cache()
-        _ACTIVE_CACHES.append(dim_number)
+    dim_number = build_dim_number(silver).cache()
+    _ACTIVE_CACHES.append(dim_number)
     fact = build_fact_prize(silver, dim_number)
     mart = build_mart(silver, as_of=as_of)
     return {

@@ -39,7 +39,6 @@ def run_warehouse_job(
     spark: SparkSession,
     csv_dir: str | None = None,
     output_dir: str = "/tmp/dwh",
-    ledger_path: str | None = None,
     config_source_path: str | None = None,
     source_id: int = 1,
     as_of: str | None = None,
@@ -56,7 +55,7 @@ def run_warehouse_job(
             raise ValueError("need csv_dir or config_source_path")
         csv_dir = source_config(spark, config_source_path, source_id)["file_location"]
 
-    log = ProcessLog(ledger_path or os.path.join(output_dir, "process_log"))
+    log = ProcessLog(os.path.join(output_dir, "process_log"))
 
     # P1: the crawler ran out-of-band; its observable contract is "CSV
     # files exist in the directory" (CsvLoader.java:8-24).

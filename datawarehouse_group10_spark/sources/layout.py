@@ -423,9 +423,12 @@ class PosixMetaStore(MetaStore):
 
     def put_atomic(self, key: str, data: bytes) -> None:
         import os
+        import uuid
 
         os.makedirs(os.path.dirname(key), exist_ok=True)
-        tmp = f"{key}.tmp{os.getpid()}"
+        # Unique per call, as in put_if_absent: a per-process name let
+        # two threads replacing one key share (and truncate) a tmp file.
+        tmp = f"{key}.tmp{os.getpid()}.{uuid.uuid4().hex}"
         with open(tmp, "wb") as fh:
             fh.write(data)
         os.replace(tmp, key)
@@ -3294,12 +3297,6 @@ def _diff_manifests(
     return changed, a_m, b_m
 
 
-def _changed_partitions(path: str, from_version: int, to_version: int) -> list[str]:
-    """Sorted list form of :func:`_diff_manifests`'s changed keys."""
-    changed, _a, _b = _diff_manifests(path, from_version, to_version)
-    return sorted(changed)
-
-
 #: Partitions the most recent snapshot_diff actually scanned — the
 #: observability hook the diff-pruning pytest pins.
 LAST_DIFF_SCAN_PARTITIONS = 0
@@ -3332,7 +3329,7 @@ def snapshot_diff(
     Scale shape: identical partitions are pruned by the MANIFESTS
     before any scan — maintenance re-references untouched partitions,
     so their entries name the same data dir across versions and
-    :func:`_changed_partitions` drops them with zero I/O; only the
+    :func:`_diff_manifests` drops them with zero I/O; only the
     partitions a maintenance op actually rewrote are read and
     exceptAll'd (one shuffle each way over the changed subset, not the
     table). On a 100 TB table where a backfill touched 3 of 3000 day

@@ -9,8 +9,9 @@ and incremental at any scale.
 
 Two surfaces:
 
-- :func:`read_crawl_csv_stream` / :func:`stream_bronze_to_silver`: the
-  lottery pipeline's bronze CSV directory as a stream.
+- :func:`read_crawl_csv_stream`: the lottery pipeline's bronze CSV
+  directory as a stream; ``plans.medallion.bronze_to_silver`` applies
+  unchanged to it, since the silver chain is stateless.
 - :func:`events_hourly_counts`: watermarked tumbling-window aggregation
   over the ``events`` testdata table — the canonical late-data-tolerant
   streaming aggregate.
@@ -34,28 +35,23 @@ from ..sources.csv_source import CSV_GLOB
 
 __all__ = [
     "read_crawl_csv_stream",
-    "stream_bronze_to_silver",
     "read_events_stream",
     "events_hourly_counts",
     "run_stream_to_table",
     "run_stream_to_parquet",
     "stream_interval_join",
     "attributed_conversions",
-    "apply_cms_batch",
-    "read_cms_state",
-    "compact_cms_ledger",
-    "run_stream_count_min",
     "run_snapshot_cdf_consume",
 ]
 
 #: Plan-capture hook (r12, VERDICT r11 #3): scripts/plan_audit.py sets
 #: this to a dict; every streaming body then records the FORMATTED
 #: physical plan of the DataFrame it is about to act on — the merged
-#: mart, the mined pair set, the CMS counters union, the MERGE's
-#: rewritten partitions, and the pre-start plans of pure streaming
-#: sinks — keyed by surface tag, latest microbatch wins. The audit's
-#: shuffle/python counters then cover streaming microbatch plans
-#: instead of SKIPping the suite. None (the default) is zero overhead.
+#: mart, the mined pair set, the MERGE's rewritten partitions, and the
+#: pre-start plans of pure streaming sinks — keyed by surface tag,
+#: latest microbatch wins. The audit's shuffle/python counters then
+#: cover streaming microbatch plans instead of SKIPping the suite.
+#: None (the default) is zero overhead.
 PLAN_CAPTURE: dict[str, str] | None = None
 
 
@@ -165,14 +161,6 @@ def read_crawl_csv_stream(
     return df.filter(
         F.col("prize").isNotNull() & F.col("number_value").isNotNull()
     ).withColumn("load_timestamp", F.current_timestamp())
-
-
-def stream_bronze_to_silver(bronze_stream: DataFrame) -> DataFrame:
-    """Apply the batch silver transform to the stream — the T1-T6 chain is
-    stateless, so the identical plan runs under either engine."""
-    from ..plans.medallion import bronze_to_silver
-
-    return bronze_to_silver(bronze_stream)
 
 
 def events_hourly_counts(
@@ -318,19 +306,18 @@ def run_stream_mart_upsert(
     domain), never history. ``publish_layer`` swaps each merged mart in
     as a new version; on a lakehouse table format the same body becomes
     a MERGE INTO and the checkpoint semantics carry over unchanged.
-    ``cache_silver=False`` inside the batch body: microbatches are small
-    and per-batch cache entries would accumulate across a long-lived
-    stream (the round-3 ADVICE cache-leak class).
+    The batch body builds only the mart (``build_mart`` over the
+    batch's silver) and caches nothing, so a long-lived stream neither
+    accumulates cache entries nor releases the caches of an earlier
+    ``run_full_pipeline`` call in the same session.
     """
-    from ..plans.medallion import merge_mart, run_full_pipeline
+    from ..plans.medallion import bronze_to_silver, build_mart, merge_mart
     from ..sources.parquet_source import publish_layer
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_mart = run_full_pipeline(
-            batch_df, as_of=as_of, cache_silver=False
-        )["mart"]
+        batch_mart = build_mart(bronze_to_silver(batch_df), as_of=as_of)
         merged = batch_mart  # the first batch: no mart published yet
         if os.path.exists(mart_dir):
             merged = merge_mart(batch_df.sparkSession.read.parquet(mart_dir), batch_mart)
@@ -428,8 +415,8 @@ def run_stream_corpus_ingest(
       delete-visible-immediately.
 
     On object storage this journal must become a MANIFEST COMMIT —
-    the repo already owns the pattern in the streaming CMS
-    (``_COMMITTED`` pointer swap, see ``run_stream_cms`` below): the
+    the repo already owns the pattern in the snapshot layout
+    (``_COMMITTED`` pointer swap, see ``sources.layout.snapshot_write``): the
     append writes NEW files only, a manifest object listing the
     committed file set is PUT atomically (single-key PUT is atomic on
     all major stores), and readers resolve the manifest instead of
@@ -657,218 +644,6 @@ def attributed_conversions(
         "click_id",
         "click_ts",
     )
-
-
-# ---------------------------------------------------------------------------
-# Streaming frequency-sketch maintenance (CMS IVM)
-
-
-def apply_cms_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    sketch_dir: str,
-    item_col: str,
-    depth: int = 4,
-    width: int = 1024,
-) -> bool:
-    """Merge one microbatch into the persisted CMS at ``sketch_dir``,
-    idempotently: returns False (no-op) when ``batch_id`` was already
-    applied. The persisted layout carries BOTH the counters and the
-    applied-batch ledger in ONE parquet snapshot version — counter rows
-    are ``(j >= 0, bucket, cnt)``, ledger rows are ``(j = -1,
-    bucket = batch_id, cnt = 1)`` — so a replayed batch (crash between
-    write and checkpoint commit) observes either the fully-merged state
-    (ledger present -> skip) or the fully-unmerged one (re-merge), never
-    a half-applied sketch. This is the explicit exactly-once upgrade
-    over WAL-only ``foreachBatch`` bodies whose read-modify-write is not
-    replay-idempotent.
-
-    Commit atomicity (r8, ADVICE r7): the snapshot is MVCC-versioned —
-    each merge writes a FRESH ``v_<n>`` subdirectory, then atomically
-    repoints the ``_COMMITTED`` file at it (``os.replace``, atomic on
-    POSIX). A crash mid-write leaves the pointer at the previous intact
-    version (state preserved, replay re-merges); a crash after the
-    pointer swap leaves the ledger visible (replay skips). The previous
-    in-place ``mode('overwrite')`` deleted the directory before writing
-    — a crash there lost counters AND ledger. Superseded versions are
-    pruned best-effort AFTER the swap. Read the committed state back
-    with :func:`read_cms_state` (a raw ``spark.read.parquet`` on the
-    root would see every version at once).
-
-    Scale shape: the persisted sketch is bounded by depth*width (+ one
-    ledger row per microbatch), the batch CMS is one uniform-key
-    aggregate over the batch, and the merge unions two sketch-sized
-    frames — nothing here grows with stream history except the ledger
-    (ONE row per microbatch; replay only ever concerns the latest
-    uncommitted epoch, so an offline compactor may drop ledger rows
-    older than the checkpoint's committed batch at any time).
-    """
-    from ..functions.sketches import count_min_sketch, merge_count_min
-
-    spark = batch_df.sparkSession
-    version = _cms_committed_version(sketch_dir)
-    if version is None:
-        applied, counters = set(), None
-    else:
-        persisted = spark.read.parquet(os.path.join(sketch_dir, version))
-        applied = {
-            r["bucket"]
-            for r in persisted.filter(F.col("j") == -1).select("bucket").collect()
-        }
-        counters = persisted.filter(F.col("j") >= 0)
-    # Next version = max existing + 1 (not committed + 1): a crash
-    # between snapshot write and pointer swap leaves an orphan v_ dir
-    # that must not collide with the retry's name.
-    try:
-        existing = [
-            int(d.split("_")[1])
-            for d in os.listdir(sketch_dir)
-            if d.startswith("v_")
-        ]
-    except FileNotFoundError:
-        existing = []
-    next_v = max(existing, default=0) + 1
-    if batch_id in applied:
-        return False
-    batch_cms = count_min_sketch(batch_df, item_col, depth=depth, width=width)
-    merged = (
-        batch_cms if counters is None else merge_count_min(counters, batch_cms)
-    )
-    ledger = batch_df.sparkSession.createDataFrame(
-        [(-1, int(batch_id), 1)], "j int, bucket int, cnt bigint"
-    )
-    out = merged.unionByName(ledger)
-    if applied:
-        out = out.unionByName(
-            ledger.sparkSession.createDataFrame(
-                [(-1, int(b), 1) for b in applied], "j int, bucket int, cnt bigint"
-            )
-        )
-    capture_plan("stream_cms_merge", out)
-    _commit_cms_snapshot(out, sketch_dir, next_v, supersedes=version)
-    return True
-
-
-def _commit_cms_snapshot(
-    out: DataFrame, sketch_dir: str, next_v: int, supersedes: str | None
-) -> str:
-    """Write ``out`` as snapshot ``v_<next_v>`` and atomically repoint
-    ``_COMMITTED`` at it (pointer tempfile + ``os.replace``). Only after
-    the replace is the new version the state; any crash before leaves
-    the previous pointer intact. The superseded snapshot is pruned
-    best-effort AFTER the swap. Returns the committed version name."""
-    new_name = f"v_{next_v:06d}"
-    out.write.mode("errorifexists").parquet(os.path.join(sketch_dir, new_name))
-    tmp = os.path.join(sketch_dir, "_COMMITTED.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(new_name)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(sketch_dir, "_COMMITTED"))
-    if supersedes is not None:
-        import shutil
-
-        shutil.rmtree(os.path.join(sketch_dir, supersedes), ignore_errors=True)
-    return new_name
-
-
-def _cms_committed_version(sketch_dir: str) -> str | None:
-    """Name of the committed snapshot subdirectory, or None if no commit
-    has happened yet (fresh state)."""
-    try:
-        with open(
-            os.path.join(sketch_dir, "_COMMITTED"), encoding="utf-8"
-        ) as fh:
-            return fh.read().strip()
-    except FileNotFoundError:
-        return None
-
-
-def read_cms_state(spark: SparkSession, sketch_dir: str) -> DataFrame:
-    """Read the COMMITTED CMS snapshot (counters + ledger rows) at
-    ``sketch_dir``. Raises FileNotFoundError before the first commit."""
-    version = _cms_committed_version(sketch_dir)
-    if version is None:
-        raise FileNotFoundError(f"no committed CMS snapshot under {sketch_dir}")
-    return spark.read.parquet(os.path.join(sketch_dir, version))
-
-
-def compact_cms_ledger(
-    spark: SparkSession, sketch_dir: str, committed_through: int
-) -> int:
-    """Drop ledger rows for batch ids <= ``committed_through`` (the
-    checkpoint's committed batch) from the persisted CMS state — the
-    offline compactor the ledger design anticipates: replay after a
-    crash only ever concerns batches AFTER the checkpoint commit, so
-    older ledger rows are dead weight (one row per microbatch, the only
-    state component that grows with stream history). Counters are
-    untouched; the rewrite commits through the same MVCC pointer swap
-    as a merge, so a crash mid-compaction loses nothing. Returns the
-    number of ledger rows dropped.
-
-    Safety rule: call with a ``committed_through`` obtained FROM the
-    streaming checkpoint (its latest committed batch id), never a
-    guess — dropping a ledger row for a batch the checkpoint has not
-    committed re-opens the double-count window it exists to close."""
-    version = _cms_committed_version(sketch_dir)
-    if version is None:
-        raise FileNotFoundError(f"no committed CMS snapshot under {sketch_dir}")
-    state = spark.read.parquet(os.path.join(sketch_dir, version))
-    dead = (F.col("j") == -1) & (F.col("bucket") <= int(committed_through))
-    n_dead = state.filter(dead).count()
-    if n_dead == 0:
-        return 0
-    existing = [
-        int(d.split("_")[1])
-        for d in os.listdir(sketch_dir)
-        if d.startswith("v_")
-    ]
-    _commit_cms_snapshot(
-        state.filter(~dead),
-        sketch_dir,
-        max(existing, default=0) + 1,
-        supersedes=version,
-    )
-    return n_dead
-
-
-def run_stream_count_min(
-    events_stream: DataFrame,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    item_col: str = "event_type",
-    depth: int = 4,
-    width: int = 1024,
-    timeout_sec: int = 300,
-) -> None:
-    """Maintain a count-min frequency sketch over a stream via
-    ``foreachBatch`` + :func:`apply_cms_batch` — streaming IVM of the
-    sketch: per-microbatch CMS build (bounded work), elementwise-sum
-    merge into sketch-sized persisted state, replay-idempotent through
-    the versioned batch ledger (atomic pointer-swap commits — see
-    :func:`apply_cms_batch`). Read the counters back with
-    ``read_cms_state(spark, sketch_dir).filter("j >= 0")`` and
-    point-query them with
-    :func:`..functions.sketches.cms_point_estimates`."""
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        apply_cms_batch(
-            batch_df, batch_id, sketch_dir, item_col, depth=depth, width=width
-        )
-
-    q = (
-        events_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def run_stream_cdc_apply(

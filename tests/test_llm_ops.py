@@ -30,7 +30,6 @@ from datawarehouse_group10_spark.functions.text import (
 from datawarehouse_group10_spark.multimodal import (
     attach_binary_payload,
     decode_features,
-    frame_sample_stub,
 )
 
 DOCS = [
@@ -810,9 +809,6 @@ def test_multimodal_decode_and_frames(spark, docs):
     feats = {r["doc_id"]: r for r in decode_features(binary).collect()}
     assert feats[1]["n_bytes"] == len(DOCS[0][1].encode())
     assert feats[1]["digest"] == feats[2]["digest"]
-    frames = frame_sample_stub(binary, every_n_bytes=16)
-    n_frames = frames.filter(F.col("doc_id") == 1).count()
-    assert n_frames == math.ceil(len(DOCS[0][1].encode()) / 16)
 
 
 def test_multimodal_real_image_decode_with_pillow(spark):
@@ -1354,12 +1350,9 @@ def test_contamination_check_semantics(spark):
 
 
 def test_json_extraction_typed_and_null_tolerant(spark):
-    """flatten_json promotes payload fields to typed columns; malformed
-    JSON, missing keys, and type mismatches yield NULL, never an error."""
-    from datawarehouse_group10_spark.functions.semistructured import (
-        flatten_json,
-        json_get,
-    )
+    """json_fields parses the payload into typed fields; malformed JSON,
+    missing keys, and type mismatches yield NULL, never an error."""
+    from datawarehouse_group10_spark.functions.semistructured import json_fields
 
     df = spark.createDataFrame(
         [(1, '{"k": 7, "tag": "a"}'),
@@ -1369,19 +1362,14 @@ def test_json_extraction_typed_and_null_tolerant(spark):
          (5, None)],                      # null payload
         "id bigint, props string",
     )
-    out = flatten_json(df, "props", {"k": "bigint", "tag": "string"})
-    assert out.columns == ["id", "k", "tag"]
+    j = json_fields("props", {"k": "bigint", "tag": "string"})
+    out = df.select("id", j.getField("k").alias("k"), j.getField("tag").alias("tag"))
     rows = {r["id"]: (r["k"], r["tag"]) for r in out.collect()}
     assert rows[1] == (7, "a")
     assert rows[2] == (None, "b")
     assert rows[3] == (None, None)
     assert rows[4] == (None, None)
     assert rows[5] == (None, None)
-    # json_get single-path variant agrees on the happy row
-    got = df.filter("id = 1").select(
-        json_get("props", "$.k", "bigint").alias("k")
-    ).collect()[0]["k"]
-    assert got == 7
 
 
 def test_incremental_minhash_matches_full_run(spark, tmp_path):
@@ -2004,10 +1992,7 @@ def test_pack_sequences_tiles_exactly(spark):
     token count. Per (shard, sequence): segments tile [0, seq_len)
     exactly, except each shard's last (ragged) sequence. Zero padding
     waste by construction."""
-    from datawarehouse_group10_spark.functions.packing import (
-        pack_sequences,
-        packing_stats,
-    )
+    from datawarehouse_group10_spark.functions.packing import pack_sequences
     from datawarehouse_group10_spark.functions.text import token_count
 
     docs = _pack_corpus(spark)
@@ -2052,15 +2037,6 @@ def test_pack_sequences_tiles_exactly(spark):
     # every shard's sequence ids are dense from 0
     for sh, mx in last_seq.items():
         assert {q for s, q in by_seq if s == sh} == set(range(mx + 1))
-
-    stats = {r["shard"]: r for r in packing_stats(
-        pack_sequences(docs, seq_len=L, shards=3), seq_len=L
-    ).collect()}
-    for sh, r in stats.items():
-        assert r["n_seqs"] == last_seq[sh] + 1
-        assert 0.0 < r["fill_ratio"] <= 1.0
-        # fill only falls short by the single ragged tail
-        assert r["n_tokens"] > (r["n_seqs"] - 1) * L
 
 
 def test_pack_sequences_is_stable_under_corpus_growth(spark):

@@ -59,21 +59,6 @@ def test_dim_number_normalization_and_keys(spark, lottery_bronze_rows):
     assert dim[0]["last_digit"] == 7
 
 
-def test_dim_number_guard_rejects_high_cardinality(spark, lottery_bronze_rows):
-    """The unpartitioned row_number() surrogate is safe only for a bounded
-    domain: the builder must refuse when distinct natural keys exceed
-    max_natural_keys instead of silently serializing a big dimension
-    through one task."""
-    import pytest
-
-    silver = bronze_to_silver(lottery_bronze_rows)  # 4 distinct numbers
-    with pytest.raises(ValueError, match="distinct natural keys"):
-        build_dim_number(silver, max_natural_keys=3)
-    # at or under the bound (and with the guard off) it still builds
-    assert build_dim_number(silver, max_natural_keys=4).count() == 4
-    assert build_dim_number(silver, max_natural_keys=None).count() == 4
-
-
 def test_incremental_dim_number_keys_continue(spark, lottery_bronze_rows):
     silver = bronze_to_silver(lottery_bronze_rows)
     existing = build_dim_number(silver)

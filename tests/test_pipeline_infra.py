@@ -21,7 +21,6 @@ from datawarehouse_group10_spark.sources import (
 from datawarehouse_group10_spark.streaming import (
     read_crawl_csv_stream,
     run_stream_to_table,
-    stream_bronze_to_silver,
 )
 
 
@@ -160,6 +159,42 @@ def test_process_log_recovery_reopens_crashed_stage(meta_store, tmp_path):
     assert log.latest_status("P2") == "SUCCESS"
 
 
+def test_put_atomic_is_atomic_across_threads(meta_store, tmp_path):
+    """Four threads replacing one key while a fifth reads it: no write
+    raises, and every read returns one of the written values whole."""
+    import threading
+
+    key = str(tmp_path / "meta" / "_P1.status")
+    values = [b"RUNNING", b"SUCCESS", b"FAILED", b"GATED"]
+    meta_store.put_atomic(key, values[0])
+    errors, bad_reads = [], []
+    writers_done = threading.Event()
+
+    def write(value):
+        try:
+            for _ in range(500):
+                meta_store.put_atomic(key, value)
+        except Exception as e:
+            errors.append(e)
+
+    def read():
+        while not writers_done.is_set():
+            got = meta_store.read(key)
+            if got not in values:
+                bad_reads.append(got)
+
+    reader = threading.Thread(target=read)
+    writers = [threading.Thread(target=write, args=(v,)) for v in values]
+    reader.start()
+    for t in writers:
+        t.start()
+    for t in writers:
+        t.join()
+    writers_done.set()
+    reader.join()
+    assert errors == [] and bad_reads == []
+
+
 def test_process_log_gate_reads_are_constant_in_history(monkeypatch):
     """One gate check reads the same objects after 10 logged runs as after
     1,000, and never lists the ledger: the gate is O(1) in history."""
@@ -241,7 +276,7 @@ def test_process_log_gate_admits_one_of_two_concurrent_runs(tmp_path, monkeypatc
 
 
 def test_streaming_silver_matches_batch(spark, csv_dir):
-    stream = stream_bronze_to_silver(read_crawl_csv_stream(spark, csv_dir))
+    stream = bronze_to_silver(read_crawl_csv_stream(spark, csv_dir))
     got = run_stream_to_table(stream, "silver_stream_test", output_mode="append")
     batch = bronze_to_silver(read_crawl_csv_dir(spark, csv_dir))
     a = {tuple(r) for r in got.drop("load_timestamp").collect()}
@@ -1027,6 +1062,30 @@ def test_stream_mart_upsert_matches_batch(spark, csv_dir, tmp_path):
     assert rows(spark.read.parquet(mart_dir)) == batch
 
 
+def test_stream_mart_upsert_leaves_pipeline_caches_alone(spark, csv_dir, tmp_path):
+    """A mart-only caller caches nothing and releases nothing: the silver
+    and dim_number caches of an earlier run_full_pipeline call are still
+    resident after a stream upserts the mart."""
+    from datawarehouse_group10_spark.plans.medallion import run_full_pipeline
+    from datawarehouse_group10_spark.streaming import run_stream_mart_upsert
+
+    def n_cached() -> int:
+        # Other tests' caches may be resident: compare counts, not values.
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    layers = run_full_pipeline(read_crawl_csv_dir(spark, csv_dir), as_of="2024-01-10")
+    layers["fact_prize"].count()
+    layers["mart"].count()
+    before = n_cached()
+    run_stream_mart_upsert(
+        read_crawl_csv_stream(spark, csv_dir),
+        str(tmp_path / "mart"),
+        str(tmp_path / "ckpt"),
+        as_of="2024-01-10",
+    )
+    assert n_cached() == before
+
+
 def test_compact_layer_merges_small_files(spark, tmp_path):
     """Compaction rewrites a many-small-files layer to ~target-size files
     without changing its contents; the sort_cols variant re-establishes
@@ -1210,158 +1269,6 @@ def test_layout_probe_guards(spark, tmp_path):
     pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp("us"))}), flip)
     _os.utime(flip, (1, 2))  # distinct mtime even on coarse filesystems
     assert events_ts_layout(flip) == "timestamp"
-
-
-def test_stream_count_min_matches_batch_and_replay_is_idempotent(spark, tmp_path):
-    """Streaming CMS maintenance: after the availableNow run, the
-    persisted counters equal the one-shot batch sketch exactly; a
-    restart on the same checkpoint is a no-op; and a REPLAYED batch id
-    (crash between write and checkpoint commit) is skipped by the
-    in-directory ledger instead of double-counting."""
-    from datawarehouse_group10_spark.functions.sketches import count_min_sketch
-    from datawarehouse_group10_spark.streaming import (
-        apply_cms_batch,
-        read_cms_state,
-        read_events_stream,
-        run_stream_count_min,
-    )
-
-    sketch_dir = str(tmp_path / "cms")
-    ckpt = str(tmp_path / "ckpt")
-    src = "/root/testdata/sf0.001/events.parquet"
-
-    def go():
-        run_stream_count_min(
-            read_events_stream(spark, src).select("event_type"),
-            sketch_dir,
-            ckpt,
-            item_col="event_type",
-        )
-
-    def counters():
-        return {
-            (r["j"], r["bucket"]): r["cnt"]
-            for r in read_cms_state(spark, sketch_dir).filter("j >= 0").collect()
-        }
-
-    go()
-    batch = {
-        (r["j"], r["bucket"]): r["cnt"]
-        for r in count_min_sketch(
-            spark.read.parquet(src).select("event_type"), "event_type"
-        ).collect()
-    }
-    assert counters() == batch
-
-    go()  # restart: no new files -> no new batches -> unchanged
-    assert counters() == batch
-
-    applied = {
-        r["bucket"]
-        for r in read_cms_state(spark, sketch_dir).filter("j = -1").collect()
-    }
-    replay_df = spark.read.parquet(src).select("event_type")
-    assert apply_cms_batch(
-        replay_df, min(applied), sketch_dir, "event_type"
-    ) is False
-    assert counters() == batch  # the double-count the ledger prevents
-
-    assert apply_cms_batch(replay_df, 999, sketch_dir, "event_type") is True
-    assert counters() == {k: 2 * v for k, v in batch.items()}
-
-
-def test_cms_commit_is_atomic_across_crash_windows(spark, tmp_path):
-    """ADVICE r7 (medium): a crash during the snapshot write must not
-    lose state. Simulate the two crash windows of the MVCC commit:
-    (1) an orphan v_ directory WITHOUT a pointer swap (crash mid-commit)
-    leaves the committed state untouched and the replayed batch
-    re-merges under a non-colliding version name; (2) the pointer file
-    always names a fully-written snapshot, so readers never observe a
-    half-applied sketch."""
-    import os
-
-    from datawarehouse_group10_spark.streaming import (
-        apply_cms_batch,
-        read_cms_state,
-    )
-
-    sketch_dir = str(tmp_path / "cms")
-    df = spark.range(100).select(
-        (F.col("id") % 7).cast("string").alias("item")
-    )
-    assert apply_cms_batch(df, 0, sketch_dir, "item") is True
-    committed = {
-        (r["j"], r["bucket"]): r["cnt"]
-        for r in read_cms_state(spark, sketch_dir).filter("j >= 0").collect()
-    }
-
-    # Crash window 1: a later merge wrote its snapshot dir but died
-    # before the pointer swap — fake it with an orphan v_ dir.
-    orphans_before = sorted(
-        d for d in os.listdir(sketch_dir) if d.startswith("v_")
-    )
-    os.makedirs(os.path.join(sketch_dir, "v_000099"))
-    still = {
-        (r["j"], r["bucket"]): r["cnt"]
-        for r in read_cms_state(spark, sketch_dir).filter("j >= 0").collect()
-    }
-    assert still == committed  # committed state unaffected by the orphan
-
-    # The retry of that batch must re-merge (ledger has no batch 1) and
-    # must not collide with the orphan's name.
-    assert apply_cms_batch(df, 1, sketch_dir, "item") is True
-    after = {
-        (r["j"], r["bucket"]): r["cnt"]
-        for r in read_cms_state(spark, sketch_dir).filter("j >= 0").collect()
-    }
-    assert after == {k: 2 * v for k, v in committed.items()}
-    with open(os.path.join(sketch_dir, "_COMMITTED")) as fh:
-        name = fh.read().strip()
-    assert name not in orphans_before and name != "v_000099"
-
-
-def test_cms_ledger_compaction_drops_committed_only(spark, tmp_path):
-    """compact_cms_ledger: ledger rows at or below the checkpoint's
-    committed batch id are dropped, counters and newer ledger rows are
-    untouched, the replay guard still works for uncompacted batches, and
-    a no-op compaction writes nothing."""
-    from datawarehouse_group10_spark.streaming import (
-        apply_cms_batch,
-        compact_cms_ledger,
-        read_cms_state,
-    )
-
-    sketch_dir = str(tmp_path / "cms")
-    df = spark.range(50).select((F.col("id") % 5).cast("string").alias("item"))
-    for b in (0, 1, 2):
-        assert apply_cms_batch(df, b, sketch_dir, "item") is True
-
-    def ledger():
-        return {
-            r["bucket"]
-            for r in read_cms_state(spark, sketch_dir).filter("j = -1").collect()
-        }
-
-    def counters():
-        return {
-            (r["j"], r["bucket"]): r["cnt"]
-            for r in read_cms_state(spark, sketch_dir).filter("j >= 0").collect()
-        }
-
-    before = counters()
-    assert ledger() == {0, 1, 2}
-    assert compact_cms_ledger(spark, sketch_dir, committed_through=1) == 2
-    assert ledger() == {2}
-    assert counters() == before  # counters untouched
-
-    # batch 2 (still in ledger) replays as a no-op; batch 0 (compacted,
-    # i.e. checkpoint-committed and thus never replayed by contract)
-    # would re-merge — which is exactly why committed_through must come
-    # from the checkpoint.
-    assert apply_cms_batch(df, 2, sketch_dir, "item") is False
-    assert counters() == before
-
-    assert compact_cms_ledger(spark, sketch_dir, committed_through=1) == 0
 
 
 def test_session_window_boundary_matches_batch_sessionize(spark):
@@ -2012,7 +1919,7 @@ def test_snapshot_diff_scans_only_changed_partitions(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from datawarehouse_group10_spark.sources.layout import (
-        _changed_partitions,
+        _diff_manifests,
         snapshot_backfill,
         snapshot_diff,
         snapshot_write,
@@ -2029,7 +1936,7 @@ def test_snapshot_diff_scans_only_changed_partitions(spark, tmp_path):
     snapshot_backfill(df.filter("p = 'b'"), path, "p")
 
     # manifest prune: only b's data-dir reference differs v1 -> v2
-    assert _changed_partitions(path, 1, 2) == ["b"]
+    assert sorted(_diff_manifests(path, 1, 2)[0]) == ["b"]
 
     diff = snapshot_diff(spark, path, 1, 2, "p")
     got = {
@@ -2043,7 +1950,7 @@ def test_snapshot_diff_scans_only_changed_partitions(spark, tmp_path):
     # identical content rewritten as v3: the ref changed (b -> v3) so b
     # is scanned, but the net diff is zero rows
     snapshot_backfill(df.filter("p = 'b'"), path, "p")  # v3 == v2 content
-    assert _changed_partitions(path, 2, 3) == ["b"]
+    assert sorted(_diff_manifests(path, 2, 3)[0]) == ["b"]
     assert snapshot_diff(spark, path, 2, 3, "p").count() == 0
 
 

@@ -1,15 +1,20 @@
-"""Static check that every ``q_*`` body in ``contract.py`` has a caller.
+"""Static checks that the package names nothing it does not define.
+
+Every ``q_*`` body in ``contract.py`` has a caller, and every ``__all__``
+name of every package module resolves.
 
 A ``q_*`` function is reachable when it is a ``QUERIES`` value, when it is
 ``q_{name}`` for a name in ``bench.py``'s HEADLINE or SECONDARY list (bench
 looks these up with ``getattr(contract, f"q_{name}")``) or called directly
-from ``bench.py``, or when a reachable ``q_*`` body refers to it. Parses the
-sources with ``ast``; no Spark session starts.
+from ``bench.py``, or when a reachable ``q_*`` body refers to it. That check
+parses the sources with ``ast``. Neither check starts a Spark session.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib
+import pkgutil
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -67,3 +72,16 @@ def unreachable_queries() -> list[str]:
 def test_every_contract_query_body_is_reachable():
     dead = unreachable_queries()
     assert not dead, f"q_* bodies with no registry entry, bench.py entry or caller: {dead}"
+
+
+def test_every_exported_name_resolves():
+    """Import every module of the package (no Spark session starts) and
+    look up each name its ``__all__`` lists: a deleted function whose
+    export stayed behind fails here."""
+    import datawarehouse_group10_spark as pkg
+
+    mods = [pkg] + [importlib.import_module(info.name) for info in
+                    pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")]
+    stale = [f"{m.__name__}.{n}" for m in mods
+             for n in getattr(m, "__all__", ()) if not hasattr(m, n)]
+    assert not stale, f"__all__ names with no definition: {stale}"
