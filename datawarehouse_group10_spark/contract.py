@@ -911,32 +911,6 @@ def _sf_tag(sf_dir: str) -> str:
     return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
 
 
-#: Input size above which q_tpch_subquery_suite materializes its shared
-#: (partkey, suppkey) pair aggregate once instead of letting per-leg
-#: column pruning re-derive it per leg (r18, VERDICT r17 #1). 16 GiB
-#: default: well past every fixture tier (sf1.0 lineitem is ~0.6 GB,
-#: where the pruned narrow scans measure faster), well below any
-#: at-scale corpus where four full fact scans dominate. Conf-able for
-#: deployment tuning.
-SUBQ_MATERIALIZE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SUBQ_MATERIALIZE_MIN_BYTES", str(16 << 30))
-)
-
-
-def _dir_bytes(path: str) -> int:
-    """Total bytes of the parquet files under ``path`` (one listing;
-    the same driver-side signal the staged layouts use for sizing)."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
-
-
 def _layout_ready(path: str) -> bool:
     """True iff ``path`` holds a COMPLETE staged layout; wipes any
     half-written residue (no _SUCCESS marker) so the caller rebuilds."""
@@ -2221,25 +2195,11 @@ def q_tpch_subquery_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("_r15"),
     )
-    # SCALE-ADAPTIVE materialization (r18 — the MOR broadcast-guard
-    # pattern): whether the shared aggregate should be materialized
-    # once (CTE materialization) or left to Catalyst depends on input
-    # size. Below the threshold, per-leg column pruning splits the
-    # shared plan into four NARROW single-measure aggregates — each
-    # leg scans 2-4 parquet columns, which at fixture scale beats
-    # paying a materialization (measured: eager localCheckpoint was
-    # 4.6 -> 7.5 s at sf0.1, so small inputs take the pruned path).
-    # Above it — the 100 TB regime — four independent full-corpus
-    # scans+aggregations dominate everything else in the suite, and
-    # ONE scan + one |pairs|-sized materialization (|pairs| is ~5-10x
-    # smaller than lineitem, read four times from executor storage)
-    # replaces them; localCheckpoint is per-execution, inside the
-    # timed region, never reused across runs. Both paths are value-
-    # identical (pinned by test_subquery_pair_materialized_path).
-    if _dir_bytes(
-        os.path.join(sf_dir, "lineitem.parquet")
-    ) >= SUBQ_MATERIALIZE_MIN_BYTES:
-        pair = pair.localCheckpoint(eager=True)
+    # Left to Catalyst, per-leg column pruning splits the shared plan
+    # into four NARROW single-measure aggregates (each leg scans 2-4
+    # parquet columns), which at fixture scale beats materializing
+    # the pair aggregate once (measured: eager localCheckpoint was
+    # 4.6 -> 7.5 s at sf0.1).
 
     # q2: correlated min + join-back, over the shared pair aggregate
     small = part.filter(F.col("p_size") < 10).select("p_partkey")
@@ -3595,9 +3555,7 @@ def q_sim_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable SimHash near-dup pairs (md5-derived 32-bit halves): the
     oracle recomputes the signature bit sums, the 4x16-bit pigeonhole
-    blocks, and bit_count hamming — full bit-level parity. The xxhash64
-    variant (simhash_dup_pairs) is the faster production default with
-    identical structure; its semantics are pinned by pytest."""
+    blocks, and bit_count hamming — full bit-level parity."""
     _utc(spark)
     from .functions.dedup import simhash_dup_pairs_portable
 
@@ -4152,10 +4110,10 @@ def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the coarse quantizer (16 deterministic cells) picks the 6 cells
     nearest the query driver-side, :func:`ivf_assign` restricts the
     scan to them, and the TRAINED-codebook ADC ranking + exact top-50
-    rerank of :func:`pq_topk` runs over that restricted set only. The
-    oracle replays probe selection, cell assignment, the unrolled
-    Lloyd training, the per-cell ADC add chain, and the refine cut in
-    SQL. Rides sim_ann_suite as the 'ivfpq' surface.
+    rerank of :func:`ivfpq_topk_codes` runs over that restricted set
+    only. The oracle replays probe selection, cell assignment, the
+    unrolled Lloyd training, the per-cell ADC add chain, and the refine
+    cut in SQL. Rides sim_ann_suite as the 'ivfpq' surface.
 
     Since r17 (VERDICT r16 #5) the probe runs over the STAGED code
     table, partitioned by ``_cell`` — the 6-cell restriction prunes
@@ -4697,10 +4655,8 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Longest pipelines first so the pool's tail is one heavy
         # pipeline, not a queue behind it. Width: 4 in flight measured
         # the sweet spot on local[32] (7-wide thrashed the shared 8g
-        # driver heap — rep times swung 21-78s; 4-wide is stable);
-        # conf-able for smaller drivers via SPARK_GRAFT_STREAM_WIDTH
-        # (VERDICT r17 #7 — width only changes scheduling, never the
-        # per-pipeline outputs; pinned by test_stream_suite_width_one).
+        # driver heap — rep times swung 21-78s; 4-wide is stable).
+        # Width only changes scheduling, never the per-pipeline outputs.
         runners = [
             ("cdc", lambda: run_stream_cdc_apply(
                 cdc_stream, cdc_run, "o_month", ["o_orderkey"],
@@ -4728,7 +4684,6 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sess_stream, sess_out, sess_ckpt
             )),
         ]
-        width = int(os.environ.get("SPARK_GRAFT_STREAM_WIDTH", "4"))
 
         def _timed(name, fn):
             # per-pipeline wall clock (r18, guide §1): queue wait is
@@ -4743,7 +4698,7 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                     STREAM_SUITE_TIMINGS[name] = round(time.time() - t0, 3)
             return run
 
-        with ThreadPoolExecutor(max_workers=max(1, width)) as pool:
+        with ThreadPoolExecutor(max_workers=4) as pool:
             # The hourly future is looked up BY NAME, not position
             # (ADVICE r17 #2: a 'longest first' re-tune must not be
             # able to silently bind the wrong future).
@@ -5233,8 +5188,7 @@ def q_a_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Portable HLL over the document texts: per-register max-rho rows plus
     # the integer-scaled register sum and the raw estimator, all
     # bit-stable cross-engine (operators/aggregates.py:
-    # hll_portable_registers — the driver-checkable face of the
-    # Datasketches hll_sketch_by production path). The estimator
+    # hll_portable_registers). The estimator
     # numerator constant alpha_m * m^2 * 2^33 is precomputed in Python
     # and embedded as the SAME repr literal in the SQL oracle, so the
     # only float op each engine performs is one IEEE division.
@@ -5316,8 +5270,8 @@ def q_a_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash aggregate on the bucket id + a tiny occupied-bucket prefix
     # window — next to q_a7's exact percentiles above; integer rank
     # thresholds and integer bucket edges keep the section bit-stable
-    # cross-engine (the production approximation is approx_percentiles,
-    # this is the oracle-checkable face of the quantile-sketch family).
+    # cross-engine (the oracle-checkable face of the quantile-sketch
+    # family).
     from .operators.aggregates import histogram_quantiles
 
     hq = (
@@ -5735,8 +5689,7 @@ def zordered_orders(spark: SparkSession, sf_dir: str) -> str:
 #: oracle text: 2^12 registers; numerator = alpha_m * m^2 * 2^33 for the
 #: integer-scaled raw estimator (no small-range correction — that needs
 #: ln(), which is libm-dependent and NOT cross-engine stable; the
-#: registered surface exposes the registers + raw estimator, production
-#: estimation is hll_sketch_by/hll_rollup).
+#: registered surface exposes the registers + raw estimator).
 _HLL_P = 12
 _HLL_NUM = (0.7213 / (1.0 + 1.079 / 4096.0)) * 16777216.0 * 8589934592.0
 
@@ -8470,8 +8423,8 @@ SELECT 'pq' AS surface, t.* FROM ({_PQ_TOPK_SQL}) t
 #: probe = the 6 cells nearest the query (the _IVF_TOPK_SQL ranking),
 #: cell membership = the same argmin assignment, and the ADC ranking +
 #: refine runs ONLY over probed cells' members — the SQL replay of
-#: functions/similarity.py::ivfpq_topk's composition, training CTEs
-#: included.
+#: functions/similarity.py::ivfpq_topk_codes over pq_encode codes,
+#: training CTEs included.
 _IVFPQ_TOPK_SQL = f"""
 WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 1),
 cents AS (
@@ -8550,7 +8503,7 @@ SELECT 'ivfpq' AS surface, t.* FROM ({_IVFPQ_TOPK_SQL}) t
 #: pointed at resvec), codes quantize residuals of probed cells only,
 #: and each row's ADC terms use the query residual against ITS cell's
 #: centroid — the SQL replay of
-#: functions/similarity.py::ivfpq_topk(residual=True) +
+#: functions/similarity.py::ivfpq_topk_codes(residual=True) +
 #: ivfpq_train_residual_codebooks.
 _IVFPQ_RES_TOPK_SQL = f"""
 WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 1),

@@ -19,15 +19,12 @@ from .dedup import (
     minhash_lsh_dup_pairs,
     build_minhash_index,
     incremental_minhash_dup_pairs,
-    simhash64,
-    simhash_dup_pairs,
     ngram_jaccard_pairs,
 )
 from .similarity import (
     cosine_similarity_col,
     brute_force_topk,
     lsh_bucket_topk,
-    pairwise_near_dup,
 )
 from .semistructured import json_fields
 
@@ -42,12 +39,9 @@ __all__ = [
     "minhash_lsh_dup_pairs",
     "build_minhash_index",
     "incremental_minhash_dup_pairs",
-    "simhash64",
-    "simhash_dup_pairs",
     "ngram_jaccard_pairs",
     "cosine_similarity_col",
     "brute_force_topk",
     "lsh_bucket_topk",
-    "pairwise_near_dup",
     "json_fields",
 ]

@@ -9,9 +9,10 @@ Scale design notes (the whole point of these implementations):
   uniform) and the band-bucket self-join (keyed by (band, hash), uniform by
   construction). Candidate pairs are verified with exact Jaccard on the
   candidates only — never all-pairs.
-- SimHash is a single groupBy(doc) with 64 bit-sum aggregates; near-dup
-  lookup joins on rotated prefix keys.
-- All hashing is xxhash64 (JVM built-in, codegen) — no Python in any path.
+- SimHash is a single groupBy(doc) with 64 bit-sum aggregates over md5
+  token halves; near-dup lookup joins on 16-bit block keys.
+- MinHash hashing is xxhash64 (JVM built-in, codegen) — no Python in any
+  path.
 """
 
 from __future__ import annotations
@@ -781,93 +782,15 @@ def incremental_minhash_dup_pairs(
 # SimHash
 
 
-def simhash64(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash per document: sign of per-bit weighted sums of token
-    hashes. One explode + one groupBy(doc) with 64 conditional-sum
-    aggregates — all JVM-side bit arithmetic."""
-    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
-    h = F.xxhash64("tok")
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{j}")
-        for j in range(64)
-    ]
-    sums = tok.groupBy(id_col).agg(*bit_sums)
-    sim = None
-    for j in range(64):
-        bit = F.when(F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("bigint"), j)).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        sim = bit if sim is None else sim.bitwiseOR(bit)
-    return sums.select(F.col(id_col), sim.alias("simhash"))
-
-
-def simhash_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance <= max_hamming, using
-    4x16-bit block keys (pigeonhole: any pair within distance 3 shares at
-    least one exact 16-bit block) to avoid the all-pairs join.
-
-    ``max_hamming`` must be <= 3: with 4 blocks the pigeonhole guarantee
-    breaks at distance 4 (a pair can differ in every block) and recall
-    silently degrades — refuse rather than return wrong answers.
-    """
-    if max_hamming > 3:
-        raise ValueError(
-            "simhash_dup_pairs: max_hamming must be <= 3 for 4-block "
-            "pigeonhole completeness; use more blocks or MinHash-LSH for "
-            "looser thresholds"
-        )
-    sig = simhash64(df, text_col, id_col)
-    blocks = sig.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("blk"),
-                    F.shiftright("simhash", i * 16).bitwiseAND(F.lit(0xFFFF)).alias("key"),
-                )
-                for i in range(4)
-            ])
-        ).alias("b"),
-    ).select(id_col, "simhash", "b.blk", "b.key")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(b, on=[F.col("a.blk") == F.col("b.blk"), F.col("a.key") == F.col("b.key"),
-                      F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.withColumn("hamming", hamming.cast("int")).filter(
-        F.col("hamming") <= max_hamming
-    ).select("id_a", "id_b", "hamming")
-
-
 def simhash_portable(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Engine-portable SimHash: token hash = md5 (identical hex on every
     engine) split into two UNSIGNED 32-bit halves carried as bigints —
     (sim_hi, sim_lo) instead of one signed 64-bit value, so no shift ever
-    touches the sign bit on any engine. Same aggregation shape as
-    :func:`simhash64` (one explode + one groupBy with 64 conditional
-    sums); md5 costs more than xxhash64 per token, which is why the
-    xxhash64 variant stays the production default and THIS one backs the
-    driver-oracle-checked query."""
+    touches the sign bit on any engine. One explode + one groupBy with
+    64 conditional sums; every step is reproducible in SQL, so the
+    query that runs it is driver-oracle-checked."""
     tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
     hi = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
     lo = F.conv(F.substring(F.md5("tok"), 9, 8), 16, 10).cast("bigint")
@@ -904,9 +827,10 @@ def simhash_dup_pairs_portable(
     id_col: str = "doc_id",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Near-dup pairs by portable-SimHash Hamming distance, same 4x16-bit
-    pigeonhole blocking as :func:`simhash_dup_pairs` (and the same
-    max_hamming<=3 completeness guard). Every step — md5 halves, bit-sum
+    """Near-dup pairs by portable-SimHash Hamming distance with 4x16-bit
+    pigeonhole blocking: a pair within Hamming 3 agrees on at least one
+    16-bit block, so ``max_hamming`` > 3 is refused (the blocking would
+    miss pairs). Every step — md5 halves, bit-sum
     signs, block keys, bit_count(xor) — is reproducible in ANSI-ish SQL,
     so this variant carries a full DuckDB oracle."""
     if max_hamming > 3:

@@ -104,41 +104,6 @@ def mixture_sample(
     return df.filter(b < (rate_expr * _BUCKETS).cast("bigint"))
 
 
-def stratified_take(
-    df: DataFrame,
-    by: list[str],
-    k: int,
-    id_col: str = "doc_id",
-    seed: str = "take",
-) -> DataFrame:
-    """Exactly-k-per-stratum sampling: keep the k rows of each ``by``
-    group with the smallest salted hash — the quota companion to
-    :func:`mixture_sample`'s rate-based thinning (a mixture recipe that
-    says "25k docs from each source" needs a COUNT guarantee, not a
-    probability).
-
-    Deterministic (same seed → same sample, stable under re-runs and
-    retries — no RNG), uniform WITHIN each stratum (the salted md5 order
-    is independent of any data ordering), and one window pass: rank
-    over (stratum, hash) and filter — the shuffle is on the stratum
-    key, state per group is the running rank, never a per-group sort
-    spill beyond Spark's own window machinery. Groups smaller than k
-    keep all their rows.
-    """
-    h = F.md5(
-        F.concat_ws("|", F.lit(seed), *[F.col(c).cast("string") for c in by],
-                    F.col(id_col).cast("string"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*by).orderBy(h.asc(), F.col(id_col).asc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
 # ---------------------------------------------------------------------------
 # DSIR — Data Selection via Importance Resampling (Xie et al. 2023,
 # arXiv:2302.03169): select raw-corpus documents whose hashed n-gram

@@ -11,8 +11,8 @@
   neighbors), then exact-ranked. At 100 TB this turns a full-corpus scan
   per query into a partition-pruned bucket read when the table is written
   partitioned by bucket code.
-- ``pairwise_near_dup``: embedding-cosine near-duplicate pairs via the same
-  LSH bucketing (self-join within buckets only).
+- ``banded_near_dup_pairs``: embedding-cosine near-duplicate pairs via
+  banded sign-LSH over explicit planes (self-join within buckets only).
 """
 
 from __future__ import annotations
@@ -193,38 +193,6 @@ def lsh_bucket_topk(
     )
 
 
-def pairwise_near_dup(
-    df: DataFrame,
-    threshold: float = 0.9,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 10,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: LSH-bucket self-join (equal
-    codes only), exact cosine on candidates, filter by threshold."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    codes = df.select(
-        F.col(id_col), F.col(vec_col), hyperplane_codes(vec_col, dim, n_planes, seed).alias("_code")
-    )
-    a, b = codes.alias("a"), codes.alias("b")
-    cand = a.join(
-        b,
-        on=[F.col("a._code") == F.col("b._code"), F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.col(f"a.{vec_col}").alias("va"),
-        F.col(f"b.{vec_col}").alias("vb"),
-    )
-    cos = _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
-    return cand.withColumn("cosine", cos).filter(F.col("cosine") >= threshold).select(
-        "id_a", "id_b", "cosine"
-    )
-
-
 def banded_near_dup_pairs(
     df: DataFrame,
     planes: list[list[float]],
@@ -236,8 +204,7 @@ def banded_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via BANDED sign-LSH with
     EXPLICIT hyperplanes (e.g. a fixed sample of corpus vectors) — the
-    oracle-checkable sibling of :func:`pairwise_near_dup` and the exact
-    structural analogue of MinHash LSH banding for Jaccard:
+    exact structural analogue of MinHash LSH banding for Jaccard:
 
     - ``len(planes)`` sign bits are split into ``bands`` bands of
       ``r = len(planes)//bands`` bits; each row gets one code per band.
@@ -650,7 +617,7 @@ def _adc_col(
     """The PQ asymmetric-distance Column over a row's codes: per
     subspace, the query-to-entry distance the code selects, summed
     LEFT-ASSOCIATIVELY so the add chain is bit-identical on any
-    engine (the oracle contract of :func:`pq_topk`).
+    engine (the oracle contract of :func:`pq_topk_codes`).
 
     The per-entry distance TABLES are pure constants (literal query x
     literal codebooks), so they are computed DRIVER-SIDE (r17) with
@@ -671,42 +638,6 @@ def _adc_col(
     return approx
 
 
-def pq_topk(
-    df: DataFrame,
-    query: list[float],
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    refine: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """PQ asymmetric-distance top-k: rank by the ADC approximation
-    (sum over subspaces of the query-to-codebook-entry distance each
-    row's code selects), take the best ``refine`` candidates, then
-    exact-rank those by cosine. The per-subspace distance tables are
-    constant expressions (literal codebooks x literal query), so
-    Catalyst folds them at plan time and the per-row cost is M array
-    lookups + one add chain — no join, no shuffle; the only ordered
-    steps are two TakeOrderedAndProject heaps (refine, then k).
-
-    Determinism for the oracle: the ADC sum is a LEFT-ASSOCIATIVE add
-    chain (term0 + term1 + ...) and every dot product is the same
-    sequential fold on both engines, so the refine-boundary ordering
-    (approx distance, then id) is bit-identical."""
-    enc = pq_encode(df, codebooks, vec_col)
-    cand = (
-        enc.withColumn("_adc", _adc_col(query, codebooks))
-        .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
-        .limit(refine)
-    )
-    sim = cosine_similarity_col(vec_col, query)
-    return (
-        cand.select(id_col, sim.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def pq_topk_codes(
     enc: DataFrame,
     corpus: DataFrame,
@@ -725,9 +656,9 @@ def pq_topk_codes(
     of re-deriving them from the raw vectors (M x K folded distance
     expressions per row, and a full read of the embedding column —
     at 100 TB the difference between scanning a few hundred GB of
-    codes and the whole corpus). The ADC ranking is byte-identical to
-    :func:`pq_topk` (:func:`_adc_col` is shared), the refine cut
-    tie-breaks on id identically, and the exact rerank fetches the
+    codes and the whole corpus). The ADC ranking is
+    :func:`_adc_col`'s left-associative chain, the refine cut
+    tie-breaks on id, and the exact rerank fetches the
     ``refine`` winners' vectors with a broadcast semi-join back to the
     corpus by id — O(refine) rows moved, never a second corpus scan
     wired through the TakeOrdered."""
@@ -922,87 +853,6 @@ def ivfpq_train_residual_codebooks(
     )
 
 
-def ivfpq_topk(
-    df: DataFrame,
-    query: list[float],
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    n_probe: int = 4,
-    refine: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    residual: bool = False,
-) -> DataFrame:
-    """IVF x PQ composed ANN (r13, VERDICT r12 #6) — the standard
-    100 TB index layout (FAISS IVFPQ/IVFADC): the IVF coarse quantizer
-    restricts the search to the ``n_probe`` cells nearest the query,
-    and only THOSE cells' vectors are PQ-coded and ADC-ranked; the
-    best ``refine`` candidates are exact-reranked by cosine.
-
-    Composition, not new machinery: probe selection is
-    :func:`ivf_topk`'s driver-side centroid ranking, cell restriction
-    is :func:`ivf_assign` + an isin filter, and the ADC scan is
-    :func:`pq_topk` over the restricted DataFrame — every stage keeps
-    its existing determinism contract, so the whole path is
-    oracle-checkable end to end.
-
-    Scale shape: the ADC work drops from O(N) (PQ-only) to
-    O(N * n_probe / n_cells), and the cell restriction is QUERY-AWARE
-    — it keeps the fraction of the corpus most likely to hold true
-    neighbors, which is what lets IVFPQ beat a PQ scan over any
-    query-oblivious subsample of equal size (pytest-pinned). As with
-    :func:`ivf_topk`, the production layout persists the assignment
-    once, partitioned by ``_cell``, making every query a
-    partition-pruned scan; codes are 4 bytes/vector, so a probed
-    cell's codes sit in executor memory.
-
-    ``residual=False`` (the oracled surface): codes quantize the raw
-    vectors — every component bit-reproducible on both engines.
-    ``residual=True`` (FAISS's default): codes quantize
-    ``x - centroid[cell]`` (pass codebooks from
-    :func:`ivfpq_train_residual_codebooks`), and the ADC distance
-    table is computed PER PROBED CELL against the query's residual
-    ``q - centroid`` — per row, the table is selected by ``_cell``
-    (one array lookup over n_probe literal tables; still plan-folded,
-    still no join/shuffle). Finer quantization at the same entry
-    budget → better candidate ranking at equal (n_probe, refine);
-    pytest pins the recall edge over the non-residual variant on a
-    clustered corpus."""
-    def sqdist(a: list[float], b: list[float]) -> float:
-        return sum((x - y) ** 2 for x, y in zip(a, b))
-
-    order = sorted(centroids, key=lambda c: (sqdist(c[1], query), c[0]))
-    probe = [cid for cid, _ in order[:n_probe]]
-    assigned = ivf_assign(df, centroids, vec_col).filter(
-        F.col("_cell").isin(probe)
-    )
-    if not residual:
-        return pq_topk(
-            assigned.drop("_cell"), query, codebooks, k=k, refine=refine,
-            vec_col=vec_col, id_col=id_col,
-        )
-
-    enc = pq_encode(
-        assigned.withColumn("_res", _residual_col(vec_col, centroids)),
-        codebooks,
-        vec_col="_res",
-    )
-    cand = (
-        enc.withColumn(
-            "_adc", _res_adc_col(query, probe, centroids, codebooks)
-        )
-        .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
-        .limit(refine)
-    )
-    sim = cosine_similarity_col(vec_col, query)
-    return (
-        cand.select(id_col, sim.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def _res_adc_col(
     query: list[float],
     probe: list[int],
@@ -1010,8 +860,7 @@ def _res_adc_col(
     codebooks: list[list[list[float]]],
     code_col: str = "_pq",
 ) -> Column:
-    """The RESIDUAL ADC Column (r17, factored from :func:`ivfpq_topk`
-    so :func:`ivfpq_topk_codes` shares the arithmetic): per probed
+    """The RESIDUAL ADC Column of :func:`ivfpq_topk_codes`: per probed
     cell, the distance table for THAT cell's query residual; per row,
     the table is selected by ``_cell`` and the entry by the code —
     the same left-associative fold as the non-residual chain."""
@@ -1066,8 +915,17 @@ def ivfpq_topk_codes(
     partitioned by ``_cell`` and the filter prunes whole directories);
     the ADC chain is the shared :func:`_adc_col` /
     :func:`_res_adc_col` arithmetic; the exact rerank broadcast-joins
-    the ``refine`` winners back to the corpus by id. Results are
-    bit-identical to :func:`ivfpq_topk` over the same inputs."""
+    the ``refine`` winners back to the corpus by id.
+
+    ``residual=False``: codes quantize the raw vectors
+    (``pq_encode(ivf_assign(corpus, centroids), codebooks)``).
+    ``residual=True`` (FAISS IVFPQ's ``by_residual``): codes quantize
+    ``x - centroid[cell]`` (codebooks from
+    :func:`ivfpq_train_residual_codebooks`, codes from
+    :func:`pq_encode` over :func:`_residual_col`), and the ADC table is
+    computed per probed cell against the query residual
+    ``q - centroid`` — finer quantization at the same entry budget, so
+    better candidate ranking at equal (n_probe, refine)."""
     def sqdist(a: list[float], b: list[float]) -> float:
         return sum((x - y) ** 2 for x, y in zip(a, b))
 

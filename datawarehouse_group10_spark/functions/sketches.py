@@ -1,7 +1,7 @@
 """Mergeable frequency sketches: count-min over item streams.
 
 Companion to the cardinality sketches in ``operators/aggregates.py``
-(Datasketches HLL + the portable register variant): where HLL answers
+(the portable HLL register set): where HLL answers
 "how many DISTINCT items", count-min answers "about how often does item
 x occur" in fixed memory, with one-sided error (estimates never
 undercount) and ELEMENTWISE-SUM mergeability — per-partition or per-day

@@ -23,11 +23,10 @@ from .aggregates import (
     reciprocal_probability,
     last_appearance,
     mart_statistics,
-    approx_percentiles,
 )
 from .windows import days_since_last, recency_bucket, percent_display, top_k
 from .scd import scd2_apply, scd2_as_of
-from .temporal import asof_join, range_join, time_bucket, rolling_agg
+from .temporal import asof_join, range_join
 from .skew import (
     salted_join,
     two_phase_agg,
@@ -53,15 +52,12 @@ __all__ = [
     "reciprocal_probability",
     "last_appearance",
     "mart_statistics",
-    "approx_percentiles",
     "days_since_last",
     "recency_bucket",
     "percent_display",
     "top_k",
     "asof_join",
     "range_join",
-    "time_bucket",
-    "rolling_agg",
     "scd2_apply",
     "scd2_as_of",
     "salted_join",

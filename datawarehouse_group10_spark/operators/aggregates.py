@@ -62,22 +62,6 @@ def mart_statistics(mart: DataFrame) -> DataFrame:
     )
 
 
-def row_count_audit(df: DataFrame) -> int:
-    """A6: COUNT(*) audit for the process_log row-count delta
-    (ETLMain.java:222-230)."""
-    return df.count()
-
-
-def approx_distinct_counts(df: DataFrame, cols: list[str], rsd: float = 0.05) -> DataFrame:
-    """Approximate distinct counts (HyperLogLog++) next to their exact
-    counterparts' column names — the constant-memory scale path where an
-    exact countDistinct would shuffle every distinct value. ``rsd`` is
-    the guaranteed relative standard deviation."""
-    return df.agg(
-        *[F.approx_count_distinct(c, rsd).cast("bigint").alias(f"{c}_approx") for c in cols]
-    )
-
-
 def profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """One-pass column profiling: per column, row/null/distinct counts and
     min/max rendered as strings. The whole profile is ONE aggregate job
@@ -114,58 +98,6 @@ def profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
         out,
         "column string, n_rows bigint, n_nulls bigint, n_distinct bigint, "
         "min_value string, max_value string",
-    )
-
-
-def approx_percentiles(
-    df: DataFrame,
-    value_col: str,
-    percentiles: list[float],
-    accuracy: int = 10_000,
-    by: list[str] | None = None,
-) -> DataFrame:
-    """Percentiles at 100 TB scale: ``approx_percentile`` (Greenwald-
-    Khanna sketch) — single pass, mergeable partial sketches, memory
-    O(accuracy) per group instead of a full sort. Error is bounded by
-    1/accuracy of rank (accuracy=10k → ±0.01% rank error).
-
-    The exact variant (``percentile``, used by the a7/a_extended oracle
-    queries) totally sorts each group — right for dashboard-grade
-    numbers at moderate group sizes, wrong as a default over a 100 TB
-    fact table. This is the default for monitoring/profiling at scale;
-    results land as one column per requested percentile (``p50``,
-    ``p99_9`` ...).
-    """
-    def _name(p: float) -> str:
-        return ("p" + f"{p * 100:g}").replace(".", "_")
-
-    aggs = [
-        F.percentile_approx(F.col(value_col), p, accuracy).alias(_name(p))
-        for p in percentiles
-    ]
-    return df.groupBy(*(by or [])).agg(*aggs)
-
-
-def hll_sketch_by(
-    df: DataFrame,
-    value_col: str,
-    by: list[str] | None = None,
-    lg_k: int = 12,
-) -> DataFrame:
-    """Cardinality at 100 TB scale: per-group Datasketches HLL sketches
-    (``hll_sketch_agg``) — single pass, fixed O(2^lg_k) memory per group,
-    and the sketch column is a PERSISTABLE binary: write it with the
-    partition (per day, per source) and later roll up any combination of
-    partitions with ``hll_rollup`` without touching the raw data. That
-    union-mergeability is the property exact ``COUNT(DISTINCT)`` can
-    never have — exact distinct over a 100 TB corpus is a full shuffle
-    of every distinct value, every time the question changes.
-
-    lg_k=12 → ~1.6 KB sketches, ~1.6% relative standard error.
-    """
-    return df.groupBy(*(by or [])).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("hll_sketch"),
-        F.count("*").cast("bigint").alias("n_rows"),
     )
 
 
@@ -219,16 +151,14 @@ def hll_portable_registers(
 ) -> DataFrame:
     """Engine-portable HLL register set: (bucket, max_rho), one row per
     NON-EMPTY register — the same make-the-sketch-bit-checkable move as
-    :func:`simhash_portable` (production stays
-    :func:`hll_sketch_by`'s Datasketches binaries; THIS variant exists
-    so the sketch path carries a full driver oracle).
+    :func:`simhash_portable`, so the sketch path carries a full driver
+    oracle.
 
     Hash = md5 split into unsigned 32-bit halves (identical hex on every
     engine): the HIGH half mod 2^p picks the register, rho = leading-
     zero count of the LOW half + 1 (33 when the low half is 0 — a
     32-bit-truncated HLL, which only loses precision at cardinalities
-    far beyond 2^32 where the production Datasketches path rules
-    anyway). bit-length via ``bin()`` string length, which renders
+    far beyond 2^32). bit-length via ``bin()`` string length, which renders
     identically (no leading zeros, '0' for 0) in Spark and DuckDB.
 
     Plan shape: one projection + ONE hash aggregate on the uniform
@@ -257,30 +187,6 @@ def hll_portable_registers(
     )
 
 
-def hll_rollup(
-    sketches: DataFrame,
-    by: list[str] | None = None,
-    sketch_col: str = "hll_sketch",
-) -> DataFrame:
-    """Merge previously materialized HLL sketches to a coarser grain (or
-    to one global row with ``by=None``) and estimate: the
-    re-aggregation path that makes per-partition sketches composable —
-    day sketches roll to months, per-source to corpus, at sketch-size
-    cost."""
-    return (
-        sketches.groupBy(*(by or []))
-        .agg(
-            F.hll_union_agg(F.col(sketch_col)).alias("merged"),
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-        )
-        .select(
-            *(by or []),
-            F.hll_sketch_estimate("merged").cast("bigint").alias("approx_distinct"),
-            "n_rows",
-        )
-    )
-
-
 def histogram_quantiles(
     df: DataFrame,
     value_col: str,
@@ -300,8 +206,7 @@ def histogram_quantiles(
     ``(bucket+1) * bucket_width`` in BOTH engines, the whole surface is
     bit-stable cross-engine — unlike a t-digest there is no
     data-order-dependent centroid state, which is what makes this the
-    oracle-checkable face of the quantile-sketch family (the
-    production approximation stays :func:`approx_percentiles`).
+    oracle-checkable face of the quantile-sketch family.
 
     Plan shape: ONE hash aggregate on the (uniform) bucket id, a
     running-sum window over the occupied buckets (tiny by construction
@@ -377,13 +282,12 @@ def value_histogram(
 ) -> DataFrame:
     """The fixed-width bin histogram (_bkt, _cnt) behind
     :func:`histogram_quantiles` — exposed separately because it is the
-    MERGEABLE partial: per-partition / per-day histograms are summed by
-    :func:`merge_value_histograms` into the corpus histogram without
-    touching raw data, the same partial-aggregate algebra as
-    merge_partial_aggs (sums), merge_count_min (counters), and
-    hll_rollup (registers). At 100 TB the quantile question is answered
-    by maintaining per-increment histograms and merging, never
-    re-scanning history."""
+    MERGEABLE partial: per-partition / per-day histograms merge into the
+    corpus histogram with ``merge_partial_aggs(hists, ["_bkt"],
+    {"_cnt": "sum"})`` without touching raw data, the same
+    partial-aggregate algebra as merge_count_min (counters). At 100 TB
+    the quantile question is answered by maintaining per-increment
+    histograms and merging, never re-scanning history."""
     if bucket_width <= 0:
         raise ValueError(f"bucket_width must be positive, got {bucket_width}")
     return (
@@ -397,10 +301,3 @@ def value_histogram(
     )
 
 
-def merge_value_histograms(*hists: DataFrame) -> DataFrame:
-    """Elementwise-sum merge of histograms built with the SAME
-    bucket_width: union + one aggregate on the bucket id."""
-    out = hists[0]
-    for h in hists[1:]:
-        out = out.unionByName(h)
-    return out.groupBy("_bkt").agg(F.sum("_cnt").cast("bigint").alias("_cnt"))

@@ -20,7 +20,7 @@ plans chosen for the 100 TB case:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["asof_join", "range_join", "gap_fill", "interval_point_counts"]
@@ -275,7 +275,7 @@ def gap_fill(
     ffill_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Time-series densification: given bucketed observations (one row
-    per ``keys`` + ``time_col``, e.g. :func:`time_bucket` output), emit
+    per ``keys`` + ``time_col``, e.g. ``date_trunc`` output), emit
     the COMPLETE per-key grid from each key's min to max bucket at
     ``step`` intervals. Missing buckets appear with ``is_gap = 1``,
     ``zero_cols`` coalesced to 0 (counts), every other observation
@@ -286,7 +286,7 @@ def gap_fill(
 
     Scale shape: one aggregate on ``keys`` for the spans, a
     ``sequence``+``explode`` grid build (row multiplication bounded by
-    span/step per key — pre-bucket with :func:`time_bucket` so the
+    span/step per key — pre-bucket with ``date_trunc`` so the
     grid, not raw events, is what multiplies), one equi-join back on
     (keys, time), and one per-key window pass for the forward-fill.
     All JVM-side; no driver loops. A key whose span/step exceeds
@@ -356,57 +356,3 @@ def gap_fill(
     ).drop("_obs")
 
 
-def time_bucket(
-    df: DataFrame,
-    ts_col: str,
-    every: str,
-    by: list[str] | None = None,
-    aggs: dict[str, Column] | None = None,
-) -> DataFrame:
-    """Hypertable-style downsampling: fixed time buckets (``every`` is an
-    interval string like ``"15 minutes"``) × optional group keys, with
-    the given aggregates. The bucket comes from the built-in tumbling
-    ``F.window`` — a pure projection, so the only shuffle is the
-    aggregation itself (partial map-side combine applies). Returns
-    ``bucket_start`` plus ``by`` plus one column per agg.
-    """
-    keys = [F.window(F.col(ts_col), every).getField("start").alias("bucket_start")]
-    keys += [F.col(c) for c in (by or [])]
-    out_aggs = aggs or {"n": F.count("*")}
-    return df.groupBy(*keys).agg(
-        *[c.alias(name) for name, c in out_aggs.items()]
-    )
-
-
-def rolling_agg(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    value_col: str,
-    trailing_seconds: int,
-    aggs: tuple[str, ...] = ("avg", "sum", "count"),
-) -> DataFrame:
-    """Per-row trailing-window aggregates: for each row, aggregate
-    ``value_col`` over the same key's rows in
-    ``[ts - trailing_seconds, ts]`` (event-time RANGE frame, so
-    irregular sampling and duplicate timestamps are handled exactly —
-    a ROWS frame would not be).
-
-    Scale shape: one shuffle on ``key``, then a per-partition sort;
-    window state is the trailing frame only. Skewed keys inherit the
-    usual window caveat (one key = one task's sort) — pre-aggregate to
-    a coarser grain first if a single key's row count is unbounded.
-    Output adds ``roll_<agg>`` columns.
-    """
-    w = (
-        Window.partitionBy(key)
-        .orderBy(F.col(ts_col).cast("timestamp").cast("long"))
-        .rangeBetween(-int(trailing_seconds), 0)
-    )
-    out = df
-    fns = {"avg": F.avg, "sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
-    for a in aggs:
-        if a not in fns:
-            raise ValueError(f"rolling_agg: unsupported agg {a!r}")
-        out = out.withColumn(f"roll_{a}", fns[a](F.col(value_col)).over(w))
-    return out

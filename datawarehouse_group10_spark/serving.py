@@ -25,6 +25,7 @@ import json
 import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import urlsplit
 
 import pyarrow.parquet as pq
 
@@ -77,7 +78,7 @@ class MartServer:
                 pass
 
             def do_GET(self):
-                route = self.path.rstrip("/")
+                route = urlsplit(self.path).path.rstrip("/")
                 rows = outer.rows() if route in ("/mart/all", "/mart/statistic") else None
                 data = outer._bodies[route] if rows else b""
                 self.send_response(200 if rows else 404 if rows is None else 503)

@@ -7,7 +7,6 @@ from .parquet_source import (
     events_ts_layout,
     read_events,
     write_layer,
-    write_sorted_layer,
 )
 from .jdbc_source import jdbc_read_options, read_jdbc_table, write_jdbc_table
 from .config_tables import (
@@ -25,7 +24,6 @@ __all__ = [
     "events_ts_layout",
     "read_events",
     "write_layer",
-    "write_sorted_layer",
     "jdbc_read_options",
     "read_jdbc_table",
     "write_jdbc_table",

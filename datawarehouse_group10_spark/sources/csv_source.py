@@ -5,20 +5,24 @@ Replaces the reference's hand-rolled directory scan + line splitter
 and CSV writer with BOM (crawl_data/.../LotteryCrawler.java:298-308, S2).
 
 Spark reads the whole directory natively — one job, splittable across
-executors — so the per-file Java loop disappears. Short rows (<4 fields,
-CsvLoader.java:39): Spark null-pads missing TRAILING fields rather than
-flagging them malformed, so a 2-field row reaches bronze with NULL date
-and is dropped by the silver transform's null filter — the same
-skip-and-continue tolerance (T6) as the reference, applied one layer
-later; rows that are structurally unparseable are dropped at read by
-DROPMALFORMED. UTF-8 BOM files parse because Spark's univocity parser
-strips the BOM from the first header cell.
+executors — so the per-file Java loop disappears. Field-count rule
+(CsvLoader.java:38-39): the reference keeps a line when ``split(",")``
+gives at least four fields, and Java's ``split`` drops trailing empty
+fields. So ``...,created,`` and ``...,created,extra`` are kept (their
+first four fields are used) and ``...,01-01-2024,`` (empty fourth field)
+is dropped. :func:`read_crawl_csv` parses PERMISSIVE — short rows are
+null-padded, extra fields ignored — and then drops rows whose fourth
+field is empty, which gives that outcome. (One shape differs: a row with
+an empty fourth field but a non-empty later one, which the reference
+keeps, is dropped here.) UTF-8 BOM files parse because Spark's univocity
+parser strips the BOM from the first header cell.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 
 from ..schemas import RAW_CRAWL_ALT
 
@@ -35,31 +39,40 @@ CRAWL_CSV_SCHEMA = "prize STRING, number_value STRING, full_date STRING, created
 BRONZE_SCHEMA = CRAWL_CSV_SCHEMA + ", load_timestamp TIMESTAMP"
 
 
-def read_crawl_csv_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Bronze ingest: every :data:`CSV_GLOB` file under ``path`` -> typed
-    staging rows.
+def read_crawl_csv(
+    reader: DataFrameReader | DataStreamReader, path: str
+) -> DataFrame:
+    """The crawl-file parse policy, for ``spark.read`` and
+    ``spark.readStream`` alike: every :data:`CSV_GLOB` file under ``path``
+    -> typed staging rows.
 
-    Output columns follow the staging DDL (prize, number_value, full_date as
-    raw strings) plus the ``load_timestamp`` audit column the reference stamps
-    per row (CsvLoader.java:43, operator S6).
+    Output columns follow the staging DDL (prize, number_value, full_date,
+    created_at as raw strings) plus the ``load_timestamp`` audit column the
+    reference stamps per row (CsvLoader.java:43, operator S6). Rows the
+    reference's four-field rule skips are dropped (module docstring), and
+    so are rows whose prize or number is empty.
 
     At scale: the directory listing is distributed, each file splits on block
     boundaries, and the explicit schema avoids an inference pass over 100 TB.
     """
     df = (
-        spark.read.schema(CRAWL_CSV_SCHEMA)
+        reader.schema(CRAWL_CSV_SCHEMA)
         .option("header", "true")
-        .option("mode", "DROPMALFORMED")
+        .option("mode", "PERMISSIVE")
         .option("pathGlobFilter", CSV_GLOB)
         .option("encoding", "UTF-8")
         .csv(path)
     )
-    # The reference drops rows with fewer than 4 fields (CsvLoader.java:39):
-    # with DROPMALFORMED short rows already vanish, but rows where the prize
-    # or number is empty would survive as NULLs — filter them the same way.
     return df.filter(
-        F.col("prize").isNotNull() & F.col("number_value").isNotNull()
+        F.col("prize").isNotNull()
+        & F.col("number_value").isNotNull()
+        & F.col("created_at").isNotNull()
     ).withColumn("load_timestamp", F.current_timestamp())
+
+
+def read_crawl_csv_dir(spark: SparkSession, path: str) -> DataFrame:
+    """Bronze ingest of the crawl directory ``path`` (:func:`read_crawl_csv`)."""
+    return read_crawl_csv(spark.read, path)
 
 
 def write_crawl_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

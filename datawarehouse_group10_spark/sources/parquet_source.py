@@ -198,91 +198,3 @@ def remove_layer(path: str) -> None:
     shutil.rmtree(os.path.join(parent, f"_{name}.versions"), ignore_errors=True)
 
 
-def write_sorted_layer(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    num_files: int | None = None,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write with a data-skipping layout: range-partition on ``sort_cols``
-    then sort within each partition, so every output file (and every row
-    group inside it) covers a NARROW, non-overlapping range of the sort
-    key. Parquet footers carry per-column min/max; a selective filter on
-    the sort key then skips whole files and row groups at scan time
-    instead of reading and discarding — at 100 TB the difference between
-    touching a few hundred MB and the whole table.
-
-    Use for the column(s) queries filter on most (event time, tenant id).
-    ``partition_by`` composes: directory-level partition pruning first,
-    min/max skipping within each partition. One shuffle
-    (``repartitionByRange`` samples the key to build balanced range
-    bounds — skew-tolerant by construction), then a per-partition sort
-    that spills if needed; no global sort ever happens.
-    """
-    n = int(
-        num_files
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    out = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
-    w = out.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def compact_layer(
-    spark: SparkSession,
-    path: str,
-    target_mb: int = 128,
-    sort_cols: list[str] | None = None,
-) -> dict[str, int]:
-    """Small-file compaction for a parquet layer (the OPTIMIZE maintenance
-    op): rewrite ``path`` so each output file is ~``target_mb``. Streaming
-    sinks and per-batch incremental loads accumulate thousands of tiny
-    files; at scale every one costs a task + a footer read + an open, and
-    scan throughput collapses long before data volume is the problem.
-
-    Sizing reads the layer's actual bytes through the Hadoop FS API (works
-    on hdfs:///s3a:// paths, not just local). Without ``sort_cols`` the
-    rewrite uses ``coalesce`` — NO shuffle, files merge in place; with
-    ``sort_cols`` it re-establishes the data-skipping layout via
-    ``repartitionByRange`` + ``sortWithinPartitions`` (one shuffle), the
-    same contract as ``write_sorted_layer``.
-
-    The swap is write-to-sibling-then-rename through the FS API. That is
-    atomic per rename on HDFS (and fine for an offline maintenance window
-    on object stores); a lakehouse table format would make the whole
-    operation transactional — this is the plain-parquet equivalent.
-
-    Returns ``{"files_before", "files_after", "bytes"}``.
-    """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(hconf)
-    total_bytes = int(fs.getContentSummary(hpath).getLength())
-    n_files = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
-
-    df = spark.read.parquet(path)
-    files_before = len(df.inputFiles())
-    if sort_cols:
-        out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        out = df.coalesce(n_files)
-
-    tmp = path.rstrip("/") + ".compact.tmp"
-    tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
-    out.write.mode("overwrite").parquet(tmp)
-    fs.delete(hpath, True)
-    fs.rename(tmp_path, hpath)
-
-    files_after = len(spark.read.parquet(path).inputFiles())
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "bytes": total_bytes,
-    }

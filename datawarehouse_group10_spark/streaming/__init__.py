@@ -31,7 +31,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.csv_source import CSV_GLOB
+from ..sources.csv_source import read_crawl_csv
 
 __all__ = [
     "read_crawl_csv_stream",
@@ -144,23 +144,13 @@ def read_events_stream(spark: SparkSession, events_path: str) -> DataFrame:
 def read_crawl_csv_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """Streaming twin of sources.read_crawl_csv_dir (operators S2/S3/S6):
-    every :data:`CSV_GLOB` file landing in ``path`` becomes a micro-batch
-    of bronze rows with the ``load_timestamp`` audit column."""
-    reader = (
-        spark.readStream.schema(
-            "prize STRING, number_value STRING, full_date STRING, created_at STRING"
-        )
-        .option("header", "true")
-        .option("mode", "DROPMALFORMED")
-        .option("pathGlobFilter", CSV_GLOB)
-    )
+    """Streaming form of sources.read_crawl_csv_dir (operators S2/S3/S6):
+    every crawl file landing in ``path`` becomes a micro-batch of bronze
+    rows, parsed by the same :func:`sources.csv_source.read_crawl_csv`."""
+    reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.csv(_as_stream_dir(path))
-    return df.filter(
-        F.col("prize").isNotNull() & F.col("number_value").isNotNull()
-    ).withColumn("load_timestamp", F.current_timestamp())
+    return read_crawl_csv(reader, _as_stream_dir(path))
 
 
 def events_hourly_counts(

@@ -12,14 +12,13 @@ from datawarehouse_group10_spark.functions.dedup import (
     exact_dedup,
     minhash_lsh_dup_pairs,
     ngram_jaccard_pairs,
-    simhash64,
-    simhash_dup_pairs,
+    simhash_dup_pairs_portable,
+    simhash_portable,
 )
 from datawarehouse_group10_spark.functions.similarity import (
     brute_force_topk,
     cosine_similarity_col,
     lsh_bucket_topk,
-    pairwise_near_dup,
 )
 from datawarehouse_group10_spark.functions.text import (
     bpe_token_estimate,
@@ -463,12 +462,15 @@ def test_ngram_jaccard_near_pair(spark, docs):
 
 
 def test_simhash_near_dup_and_guard(spark, docs):
-    sims = {r["doc_id"]: r["simhash"] for r in simhash64(docs).collect()}
-    assert sims[1] == sims[2]             # identical text -> identical simhash
-    pairs = {(r["id_a"], r["id_b"]) for r in simhash_dup_pairs(docs).collect()}
+    sims = {
+        r["doc_id"]: (r["sim_hi"], r["sim_lo"])
+        for r in simhash_portable(docs).collect()
+    }
+    assert sims[1] == sims[2]             # identical text -> identical halves
+    pairs = {(r["id_a"], r["id_b"]) for r in simhash_dup_pairs_portable(docs).collect()}
     assert (1, 2) in pairs
     with pytest.raises(ValueError, match="max_hamming"):
-        simhash_dup_pairs(docs, max_hamming=4)
+        simhash_dup_pairs_portable(docs, max_hamming=4)
 
 
 def test_text_analysis(spark, docs):
@@ -564,19 +566,6 @@ def test_lsh_topk_agrees_with_brute_force(spark, vecs):
     assert brute == approx == [1]
 
 
-def test_pairwise_near_dup_buckets(spark, vecs):
-    pairs = {
-        (r["id_a"], r["id_b"]) for r in pairwise_near_dup(vecs, threshold=0.9).collect()
-    }
-    # LSH recall is approximate, but identical-direction pairs share buckets
-    assert pairs <= {(1, 2), (3, 4)}
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in pairwise_near_dup(vecs, threshold=0.9, n_planes=1).collect()
-    }
-    assert (1, 2) in exact
-
-
 def test_banded_near_dup_pairs(spark, vecs):
     from datawarehouse_group10_spark.functions.similarity import banded_near_dup_pairs
 
@@ -638,7 +627,7 @@ def test_banded_near_dup_bucket_cap(spark):
 
 def test_pq_topk_full_refine_equals_brute_force(spark):
     """PQ ANN (r11): with refine >= corpus size the exact re-rank sees
-    every row, so pq_topk is deterministically EQUAL to brute force
+    every row, so pq_topk_codes is deterministically EQUAL to brute force
     regardless of quantization error — the same full-probe equivalence
     the IVF kNN join pins. With a small refine the ADC scan still ranks
     an exact duplicate of the query first (its codes match the query's
@@ -649,7 +638,7 @@ def test_pq_topk_full_refine_equals_brute_force(spark):
         brute_force_topk,
         pq_codebooks,
         pq_encode,
-        pq_topk,
+        pq_topk_codes,
     )
 
     n, d = 40, 8
@@ -660,10 +649,11 @@ def test_pq_topk_full_refine_equals_brute_force(spark):
     q = rows[7][1]
     books = pq_codebooks(corpus, m=4, k=8)
     assert len(books) == 4 and len(books[0]) == 8 and len(books[0][0]) == d // 4
+    enc = pq_encode(corpus, books)
 
     full = [
         (r["vec_id"], round(r["cosine"], 9))
-        for r in pq_topk(corpus, q, books, k=5, refine=n).collect()
+        for r in pq_topk_codes(enc, corpus, q, books, k=5, refine=n).collect()
     ]
     brute = [
         (r["vec_id"], round(r["cosine"], 9))
@@ -673,13 +663,13 @@ def test_pq_topk_full_refine_equals_brute_force(spark):
 
     # narrow refine: the query's own row (codes identical in every
     # subspace -> minimal ADC) survives the candidate cut and ranks #1
-    narrow = pq_topk(corpus, q, books, k=1, refine=4).collect()
+    narrow = pq_topk_codes(enc, corpus, q, books, k=1, refine=4).collect()
     assert narrow[0]["vec_id"] == 7
     assert narrow[0]["cosine"] == pytest.approx(1.0)
 
     # codes are one small int per subspace — the 4-byte representation
-    enc = pq_encode(corpus, books).select("_pq").first()[0]
-    assert len(enc) == 4 and all(0 <= c < 8 for c in enc)
+    codes = enc.select("_pq").first()[0]
+    assert len(codes) == 4 and all(0 <= c < 8 for c in codes)
 
     with pytest.raises(ValueError, match="not divisible"):
         pq_codebooks(corpus, m=3, k=8)
@@ -702,7 +692,8 @@ def test_pq_trained_codebooks_deterministic_and_better_recall(spark):
 
     from datawarehouse_group10_spark.functions.similarity import (
         pq_codebooks,
-        pq_topk,
+        pq_encode,
+        pq_topk_codes,
         pq_train_codebooks,
     )
 
@@ -748,6 +739,7 @@ def test_pq_trained_codebooks_deterministic_and_better_recall(spark):
         )
 
     def recall(books) -> float:
+        enc = pq_encode(corpus, books)
         hits = 0
         for pair in range(6):
             q = member(pair, 1, 0)
@@ -760,7 +752,7 @@ def test_pq_trained_codebooks_deterministic_and_better_recall(spark):
             }
             got = {
                 r["vec_id"]
-                for r in pq_topk(corpus, q, books, k=10, refine=12).collect()
+                for r in pq_topk_codes(enc, corpus, q, books, k=10, refine=12).collect()
             }
             hits += len(exact & got)
         return hits / (6 * 10)
@@ -1130,26 +1122,10 @@ def test_kmeans_centroids_deterministic_balanced_no_recall_loss(spark):
 
 
 def test_simhash_portable_matches_xxhash_structure(spark, docs):
-    """The md5-halved portable SimHash finds the same exact-duplicate
-    pairs (hamming 0) as the xxhash64 variant — hash choice changes
-    near-miss pairs, never identical-text pairs — and its halves stay
-    inside unsigned 32-bit range (no sign-bit hazards on any engine)."""
-    from datawarehouse_group10_spark.functions.dedup import (
-        simhash_dup_pairs_portable,
-        simhash_portable,
-    )
-
-    fast = {(r["id_a"], r["id_b"]) for r in
-            simhash_dup_pairs(docs, max_hamming=0).collect()}
-    port = {(r["id_a"], r["id_b"]) for r in
-            simhash_dup_pairs_portable(docs, max_hamming=0).collect()}
-    assert fast == port and len(port) >= 1
-
+    """The md5-halved portable SimHash keeps its halves inside unsigned
+    32-bit range (no sign-bit hazards on any engine)."""
     sig = simhash_portable(docs).collect()
     assert all(0 <= r["sim_hi"] < 2**32 and 0 <= r["sim_lo"] < 2**32 for r in sig)
-
-    with pytest.raises(ValueError):
-        simhash_dup_pairs_portable(docs, max_hamming=4)
 
 
 def test_ivf_cell_layout_prunes_partitions(spark, tmp_path):
@@ -1502,29 +1478,6 @@ def test_knn_join_and_ivf_variant(spark):
     assert recall >= 0.5, recall
 
 
-def test_stratified_take_exact_quota_and_determinism(spark):
-    """stratified_take keeps exactly k rows per stratum (all rows when
-    the stratum is smaller), the same set on re-run, and a DIFFERENT
-    uniform subset under a different seed."""
-    from datawarehouse_group10_spark.functions.sampling import stratified_take
-
-    rows = [(i, f"s{i % 3}") for i in range(100)] + [(1000, "tiny")]
-    df = spark.createDataFrame(rows, "doc_id bigint, source string")
-    take = stratified_take(df, ["source"], k=10)
-    got = [(r["source"], r["doc_id"]) for r in take.collect()]
-    from collections import Counter
-
-    per = Counter(s for s, _ in got)
-    assert per == {"s0": 10, "s1": 10, "s2": 10, "tiny": 1}
-    again = [(r["source"], r["doc_id"]) for r in stratified_take(df, ["source"], k=10).collect()]
-    assert sorted(got) == sorted(again)
-    other = {
-        (r["source"], r["doc_id"])
-        for r in stratified_take(df, ["source"], k=10, seed="other").collect()
-    }
-    assert other != set(got)
-
-
 def test_dsir_enriches_target_like_docs(spark):
     """DSIR semantics on a corpus with a real distribution shift: docs
     drawn from the target vocabulary must out-weigh docs from a disjoint
@@ -1725,7 +1678,7 @@ def test_stream_cdc_apply_retries_lost_occ_race_in_stream(
 
 
 def test_ivfpq_beats_pq_subsample_at_equal_scan_fraction(spark):
-    """ivfpq_topk (r13, VERDICT r12 #6): at an equal ADC'd-row budget
+    """ivfpq_topk_codes (r13, VERDICT r12 #6): at an equal ADC'd-row budget
     (4 of 16 cells ~ 25% of the corpus), the IVF probe is QUERY-AWARE
     — it keeps the cells nearest the query, which hold the true
     neighbors — so recall@10 beats a PQ scan over a query-OBLIVIOUS
@@ -1734,9 +1687,11 @@ def test_ivfpq_beats_pq_subsample_at_equal_scan_fraction(spark):
     import math as _math
 
     from datawarehouse_group10_spark.functions.similarity import (
-        ivfpq_topk,
+        ivf_assign,
+        ivfpq_topk_codes,
         kmeans_centroids,
-        pq_topk,
+        pq_encode,
+        pq_topk_codes,
         pq_train_codebooks,
     )
 
@@ -1768,6 +1723,10 @@ def test_ivfpq_beats_pq_subsample_at_equal_scan_fraction(spark):
     )
     cents = kmeans_centroids(corpus, k=16, n_iter=2)
     books = pq_train_codebooks(corpus, m=4, k=16, n_iter=2)
+    enc = pq_encode(ivf_assign(corpus, cents), books)
+    # query-oblivious ~25% subsample, same PQ machinery
+    sample = corpus.filter(F.crc32(F.col("vec_id").cast("string")) % 4 == 0)
+    sample_enc = pq_encode(sample, books)
 
     def cos(a, b):
         return sum(x * y for x, y in zip(a, b)) / (
@@ -1788,16 +1747,16 @@ def test_ivfpq_beats_pq_subsample_at_equal_scan_fraction(spark):
         }
         got = {
             r["vec_id"]
-            for r in ivfpq_topk(
-                corpus, q, cents, books, k=10, n_probe=4, refine=30
+            for r in ivfpq_topk_codes(
+                enc, corpus, q, cents, books, k=10, n_probe=4, refine=30
             ).collect()
         }
         ivfpq_hits += len(got & exact)
-        # query-oblivious ~25% subsample, same PQ machinery
-        sample = corpus.filter(F.crc32(F.col("vec_id").cast("string")) % 4 == 0)
         got_sub = {
             r["vec_id"]
-            for r in pq_topk(sample, q, books, k=10, refine=30).collect()
+            for r in pq_topk_codes(
+                sample_enc, sample, q, books, k=10, refine=30
+            ).collect()
         }
         sub_hits += len(got_sub & exact)
     ivfpq_recall = ivfpq_hits / (10 * n_q)
@@ -1818,9 +1777,12 @@ def test_ivfpq_residual_codes_beat_global_codes(spark):
     import math as _math
 
     from datawarehouse_group10_spark.functions.similarity import (
-        ivfpq_topk,
+        _residual_col,
+        ivf_assign,
+        ivfpq_topk_codes,
         ivfpq_train_residual_codebooks,
         kmeans_centroids,
+        pq_encode,
         pq_train_codebooks,
     )
 
@@ -1849,6 +1811,13 @@ def test_ivfpq_residual_codes_beat_global_codes(spark):
     books_res = ivfpq_train_residual_codebooks(
         corpus, cents, m=4, k=16, n_iter=2
     )
+    assigned = ivf_assign(corpus, cents)
+    enc_global = pq_encode(assigned, books_global)
+    enc_res = pq_encode(
+        assigned.withColumn("_res", _residual_col("embedding", cents)),
+        books_res,
+        vec_col="_res",
+    )
 
     def cos(a, b):
         return sum(x * y for x, y in zip(a, b)) / (
@@ -1867,14 +1836,14 @@ def test_ivfpq_residual_codes_beat_global_codes(spark):
                 key=lambda t: (-t[1], t[0]),
             )[:10]
         }
-        for tag, books, res in (
-            ("global", books_global, False),
-            ("residual", books_res, True),
+        for tag, enc, books, res in (
+            ("global", enc_global, books_global, False),
+            ("residual", enc_res, books_res, True),
         ):
             got = {
                 r["vec_id"]
-                for r in ivfpq_topk(
-                    corpus, q, cents, books,
+                for r in ivfpq_topk_codes(
+                    enc, corpus, q, cents, books,
                     k=10, n_probe=1, refine=12, residual=res,
                 ).collect()
             }

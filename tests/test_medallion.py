@@ -212,10 +212,7 @@ def test_merge_mart_equals_full_recompute(spark, lottery_bronze_rows):
 
 
 def test_profile_and_approx_distinct(spark):
-    from datawarehouse_group10_spark.operators.aggregates import (
-        approx_distinct_counts,
-        profile,
-    )
+    from datawarehouse_group10_spark.operators.aggregates import profile
 
     df = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, None), (4, "a")], "k int, v string"
@@ -224,9 +221,6 @@ def test_profile_and_approx_distinct(spark):
     assert prof["v"]["n_nulls"] == 1 and prof["v"]["n_distinct"] == 2
     assert prof["k"]["min_value"] == "1" and prof["k"]["max_value"] == "4"
     assert prof["k"]["n_rows"] == 4
-    big = spark.range(0, 10000).select((F.col("id") % 1000).alias("x"))
-    approx = approx_distinct_counts(big, ["x"]).first()["x_approx"]
-    assert abs(approx - 1000) / 1000 < 0.1   # HLL within guaranteed rsd
 
 
 def test_repeated_pipeline_runs_do_not_leak_cached_rdds(spark, lottery_bronze_rows):

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from datawarehouse_group10_spark.operators.aggregates import (
     draws_per_date,
     last_appearance,
-    row_count_audit,
 )
 from datawarehouse_group10_spark.operators.joins import (
     anti_join_new_rows,
@@ -57,10 +56,6 @@ def test_a3_last_appearance(spark):
     )
     out = {r["k"]: r["last_appeared_date"] for r in last_appearance(df, "k").collect()}
     assert out == {"x": dt.date(2024, 2, 1), "y": dt.date(2024, 1, 5)}
-
-
-def test_a6_row_count(spark):
-    assert row_count_audit(spark.range(7)) == 7
 
 
 def test_w2_lag_null_first(spark):
@@ -290,27 +285,6 @@ def test_bucketed_suite_variants_single_shuffle(spark):
     key = lambda df: sorted(map(tuple, df.collect()))
     assert key(q21b) == key(plain21)
     assert key(q20b) == key(plain20)
-
-
-def test_subquery_pair_materialized_path(spark, monkeypatch):
-    """q_tpch_subquery_suite's shared (partkey, suppkey) pair aggregate
-    is materialized once (localCheckpoint) when the lineitem input
-    crosses SUBQ_MATERIALIZE_MIN_BYTES (r18, VERDICT r17 #1 — the
-    scale-adaptive CTE-materialization guard). Both regimes must return
-    identical rows: the default pruned path (threshold far above any
-    fixture) and the forced-materialized path (threshold 0)."""
-    from datawarehouse_group10_spark import contract
-
-    sf = "/root/testdata/sf0.001"
-    key = lambda df: sorted(map(tuple, df.collect()))
-    default_rows = key(contract.q_tpch_subquery_suite(spark, sf))
-    assert contract.SUBQ_MATERIALIZE_MIN_BYTES > contract._dir_bytes(
-        os.path.join(sf, "lineitem.parquet")
-    ), "fixture tiers must take the pruned path by default"
-    monkeypatch.setattr(contract, "SUBQ_MATERIALIZE_MIN_BYTES", 0)
-    ckpt_rows = key(contract.q_tpch_subquery_suite(spark, sf))
-    assert ckpt_rows == default_rows
-    assert len(ckpt_rows) > 0
 
 
 def test_q21_cluster_once_single_pair_exchange(spark):
@@ -648,61 +622,6 @@ def test_scd2_apply_versions_and_as_of(spark):
     assert asof == {(1, "LA"), (2, "CHI")}
 
 
-def test_time_bucket_and_rolling_agg(spark):
-    """time_bucket downsamples into exact tumbling buckets; rolling_agg
-    computes event-time trailing-window aggregates (RANGE frame: ties
-    and irregular gaps handled exactly)."""
-    from datetime import datetime
-
-    from datawarehouse_group10_spark.operators.temporal import (
-        rolling_agg,
-        time_bucket,
-    )
-
-    rows = [
-        (1, datetime(2024, 1, 1, 10, 0, 0), 10.0),
-        (1, datetime(2024, 1, 1, 10, 10, 0), 20.0),
-        (1, datetime(2024, 1, 1, 10, 40, 0), 30.0),   # outside 15m of 2nd
-        (2, datetime(2024, 1, 1, 10, 5, 0), 100.0),
-    ]
-    df = spark.createDataFrame(rows, "k bigint, ts timestamp, v double")
-
-    tb = {
-        (r["k"], str(r["bucket_start"]), r["n"], r["sum_v"])
-        for r in time_bucket(
-            df, "ts", "15 minutes", by=["k"],
-            aggs={"n": F.count("*"), "sum_v": F.sum("v")},
-        ).collect()
-    }
-    assert tb == {
-        (1, "2024-01-01 10:00:00", 2, 30.0),
-        (1, "2024-01-01 10:30:00", 1, 30.0),
-        (2, "2024-01-01 10:00:00", 1, 100.0),
-    }
-
-    ra = {
-        (r["k"], str(r["ts"])): (r["roll_count"], r["roll_sum"])
-        for r in rolling_agg(df, "k", "ts", "v", trailing_seconds=900).collect()
-    }
-    assert ra[(1, "2024-01-01 10:00:00")] == (1, 10.0)
-    assert ra[(1, "2024-01-01 10:10:00")] == (2, 30.0)   # 10:00 within 15m
-    assert ra[(1, "2024-01-01 10:40:00")] == (1, 30.0)   # both others aged out
-    assert ra[(2, "2024-01-01 10:05:00")] == (1, 100.0)
-
-
-def test_approx_percentiles_within_rank_error(spark):
-    """Sketch percentiles land within the documented rank-error bound of
-    the exact values (single pass, no full sort)."""
-    from datawarehouse_group10_spark.operators.aggregates import approx_percentiles
-
-    df = spark.range(0, 10_001).selectExpr("CAST(id AS DOUBLE) AS v")
-    got = approx_percentiles(df, "v", [0.5, 0.9, 0.99], accuracy=10_000).collect()[0]
-    # rank error <= n/accuracy ~ 1 rank to either side here
-    assert abs(got["p50"] - 5000) <= 2
-    assert abs(got["p90"] - 9000) <= 2
-    assert abs(got["p99"] - 9900) <= 2
-
-
 def test_tpch_suites_and_paragraph_dedup_plan_shapes(spark):
     """Scale-shape pins for the round-4 additions:
     - tpch_scalar_suite: the part side of q14/q17/q19 broadcasts (no
@@ -754,38 +673,6 @@ def test_tpch_suites_and_paragraph_dedup_plan_shapes(spark):
     j7 = plan_of("j7_range_join")
     assert "SortMergeJoin" not in j7, j7
     assert "BroadcastHashJoin" in j7, j7
-
-
-def test_hll_sketches_merge_and_estimate(spark):
-    """Per-group HLL sketches estimate within the lg_k error envelope and
-    — the scale property — the UNION of per-source sketches estimates
-    the global cardinality without rescanning rows."""
-    from datawarehouse_group10_spark.operators.aggregates import (
-        hll_rollup,
-        hll_sketch_by,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    exact_global = docs.select("text").distinct().count()
-    exact_by_src = {
-        r["source"]: r["n"]
-        for r in docs.groupBy("source")
-        .agg(F.countDistinct("text").alias("n"))
-        .collect()
-    }
-
-    per_src = hll_sketch_by(docs, "text", by=["source"])
-    est_by_src = {
-        r["source"]: r["approx_distinct"]
-        for r in hll_rollup(per_src, by=["source"]).collect()
-    }
-    for src, exact in exact_by_src.items():
-        assert abs(est_by_src[src] - exact) <= max(3, 0.05 * exact), src
-
-    # roll the per-source sketches up to one global estimate: no raw scan
-    global_row = hll_rollup(per_src).collect()[0]
-    assert abs(global_row["approx_distinct"] - exact_global) <= 0.05 * exact_global
-    assert global_row["n_rows"] == docs.count()
 
 
 def test_hll_portable_registers_estimate_and_determinism(spark):
@@ -1241,7 +1128,7 @@ def test_value_histogram_split_merge_equals_whole(spark):
     that answers quantile questions over increments without
     re-scanning history."""
     from datawarehouse_group10_spark.operators.aggregates import (
-        merge_value_histograms,
+        merge_partial_aggs,
         value_histogram,
     )
 
@@ -1251,8 +1138,10 @@ def test_value_histogram_split_merge_equals_whole(spark):
     b = df.filter(F.col("v") >= 150)
     merged = {
         (r["_bkt"], r["_cnt"])
-        for r in merge_value_histograms(
-            value_histogram(a, "v", 10.0), value_histogram(b, "v", 10.0)
+        for r in merge_partial_aggs(
+            [value_histogram(a, "v", 10.0), value_histogram(b, "v", 10.0)],
+            ["_bkt"],
+            {"_cnt": "sum"},
         ).collect()
     }
     whole = {

@@ -70,6 +70,35 @@ def test_s3_csv_dir_scan(spark, csv_dir):
     assert all(r["load_timestamp"] is not None for r in rows)  # S6 audit col
 
 
+def test_csv_field_count_rule_matches_reference(spark, tmp_path):
+    """The reference keeps a line when Java's ``split(",")`` gives at
+    least four fields (CsvLoader.java:38-39), and ``split`` drops
+    trailing empty fields: a trailing comma or an extra field keeps the
+    row, an empty fourth field drops it. The batch and streaming readers
+    share one parse policy, so both give the reference's rows."""
+    created = "2024-01-01T19:05:00.000Z"
+    (tmp_path / "data_01012024.csv").write_text(
+        "prize,number_value,full_date,created_at\n"
+        f"Giải Bảy,07,01-01-2024,{created}\n"
+        f"Giải Bảy,11,01-01-2024,{created},\n"
+        f"Giải Bảy,12,01-01-2024,{created},extra\n"
+        "Giải Bảy,13,01-01-2024,\n"
+        "Giải Bảy,14,01-01-2024\n"
+        "Giải Bảy,15\n",
+        encoding="utf-8",
+    )
+    batch = read_crawl_csv_dir(spark, str(tmp_path))
+    stream = run_stream_to_table(
+        read_crawl_csv_stream(spark, str(tmp_path)), "csv_field_rule_stream",
+        output_mode="append",
+    )
+    for df in (batch, stream):
+        rows = sorted(tuple(r) for r in df.drop("load_timestamp").collect())
+        assert rows == [
+            ("Giải Bảy", n, "01-01-2024", created) for n in ("07", "11", "12")
+        ]
+
+
 def test_s2_csv_sink_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([("a", "1")], "x string, y string")
     out = str(tmp_path / "out")
@@ -695,6 +724,8 @@ def test_http_mart_serving(spark, tmp_path):
         base = f"http://127.0.0.1:{srv.port}"
         rows = json.load(urllib.request.urlopen(f"{base}/mart/all"))
         assert {r["number_value"] for r in rows} == {"7", "23", "45"}
+        # a query string (a dashboard's cache-buster) routes on the path
+        assert json.load(urllib.request.urlopen(f"{base}/mart/all?_=1")) == rows
         stat = json.load(urllib.request.urlopen(f"{base}/mart/statistic"))
         assert stat == {
             "totalOccurrences": 20,
@@ -973,50 +1004,6 @@ def test_stream_interval_join_matches_batch(spark):
     assert len(a) > 0
 
 
-def test_sorted_layout_yields_skippable_files(spark, tmp_path):
-    """write_sorted_layer produces files whose parquet min/max stats are
-    narrow and non-overlapping on the sort key (so selective scans skip
-    them), and a filtered read pushes the predicate to the scan."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from datawarehouse_group10_spark.sources import write_sorted_layer
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    out = str(tmp_path / "sorted")
-    write_sorted_layer(ev, out, sort_cols=["user_id"], num_files=8)
-
-    files = sorted(glob.glob(f"{out}/*.parquet"))
-    assert len(files) >= 4
-    spans, bounds = [], []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        col_idx = [md.schema.column(i).name for i in range(md.num_columns)].index("user_id")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col_idx).statistics
-            mins.append(st.min), maxs.append(st.max)
-        spans.append(max(maxs) - min(mins))
-        bounds.append((min(mins), max(maxs)))
-    lo = min(b[0] for b in bounds)
-    hi = max(b[1] for b in bounds)
-    # each file covers a narrow slice of the key domain...
-    assert max(spans) < (hi - lo) / 2
-    # ...and the slices are pairwise non-overlapping (range partitioning)
-    bounds.sort()
-    for (lo1, hi1), (lo2, _hi2) in zip(bounds, bounds[1:]):
-        assert hi1 <= lo2
-    # the filter reaches the parquet scan as a pushed predicate
-    plan = (
-        spark.read.parquet(out)
-        .filter("user_id = 42")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PushedFilters" in plan and "user_id" in plan
-
-
 def test_stream_mart_upsert_matches_batch(spark, csv_dir, tmp_path):
     """foreachBatch incremental view maintenance: streaming the crawl dir
     one file per microbatch and merging each partial mart into the
@@ -1084,39 +1071,6 @@ def test_stream_mart_upsert_leaves_pipeline_caches_alone(spark, csv_dir, tmp_pat
         as_of="2024-01-10",
     )
     assert n_cached() == before
-
-
-def test_compact_layer_merges_small_files(spark, tmp_path):
-    """Compaction rewrites a many-small-files layer to ~target-size files
-    without changing its contents; the sort_cols variant re-establishes
-    the skippable (disjoint min/max) layout."""
-    from datawarehouse_group10_spark.sources.parquet_source import compact_layer
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    layer = str(tmp_path / "layer")
-    docs.repartition(32).write.parquet(layer)
-    before = {tuple(r) for r in spark.read.parquet(layer).collect()}
-
-    stats = compact_layer(spark, layer, target_mb=512)
-    assert stats["files_before"] == 32
-    assert stats["files_after"] == 1
-    assert {tuple(r) for r in spark.read.parquet(layer).collect()} == before
-
-    # sorted variant: files carry disjoint doc_id ranges
-    layer2 = str(tmp_path / "layer2")
-    docs.repartition(16).write.parquet(layer2)
-    import pyspark.sql.functions as SF
-
-    compact_layer(spark, layer2, target_mb=1, sort_cols=["doc_id"])
-    per_file = (
-        spark.read.parquet(layer2)
-        .groupBy(SF.input_file_name().alias("f"))
-        .agg(SF.min("doc_id").alias("lo"), SF.max("doc_id").alias("hi"))
-        .collect()
-    )
-    spans = sorted((r["lo"], r["hi"]) for r in per_file)
-    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
-    assert {tuple(r) for r in spark.read.parquet(layer2).collect()} == before
 
 
 def test_events_loader_adapts_to_both_physical_layouts(spark, tmp_path):
