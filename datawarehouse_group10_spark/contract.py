@@ -81,6 +81,7 @@ from .plans.medallion import (
     build_dim_date,
     build_dim_number,
     build_mart,
+    gold_rollup,
     merge_mart,
     run_full_pipeline,
 )
@@ -334,13 +335,13 @@ def q_pipeline_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipeline_dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     silver = bronze_to_silver(lottery_bronze(spark, sf_dir))
-    return stable(build_dim_date(silver))
+    return stable(build_dim_date(gold_rollup(silver)))
 
 
 def q_pipeline_dim_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     silver = bronze_to_silver(lottery_bronze(spark, sf_dir))
-    return stable(build_dim_number(silver))
+    return stable(build_dim_number(gold_rollup(silver)))
 
 
 def q_pipeline_fact_prize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,8 +372,8 @@ def q_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     bronze = lottery_bronze(spark, sf_dir)
     day = F.substring("full_date", 1, 2).cast("int")
-    m1 = build_mart(bronze_to_silver(bronze.filter(day <= 15)), as_of=AS_OF)
-    m2 = build_mart(bronze_to_silver(bronze.filter(day > 15)), as_of=AS_OF)
+    m1 = build_mart(gold_rollup(bronze_to_silver(bronze.filter(day <= 15))), as_of=AS_OF)
+    m2 = build_mart(gold_rollup(bronze_to_silver(bronze.filter(day > 15))), as_of=AS_OF)
     merged = merge_mart(m1, m2)
     return stable(
         merged.withColumn(

@@ -46,8 +46,9 @@ def count_min_sketch(
     (j, bucket) key counts them — map-side partial combine applies, so
     the shuffle moves at most depth*width rows per partition no matter
     the input size. Merging two sketches is a union + the same groupBy
-    (elementwise sum); :func:`merge_count_min` does exactly that, and
-    the pytest property pins split-merge == whole-corpus equality.
+    (elementwise sum): ``merge_partial_aggs(sketches, ["j", "bucket"],
+    {"cnt": "sum"})``, and the pytest property pins split-merge ==
+    whole-corpus equality.
     """
     item = F.col(item_col)
     cells = df.select(
@@ -65,17 +66,6 @@ def count_min_sketch(
             F.col("cell.j").alias("j"), F.col("cell.bucket").alias("bucket")
         )
         .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-
-
-def merge_count_min(*sketches: DataFrame) -> DataFrame:
-    """Elementwise-sum merge of CMS matrices built with the SAME
-    (depth, width, hash family): union + one aggregate on (j, bucket)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("j", "bucket").agg(
-        F.sum("cnt").cast("bigint").alias("cnt")
     )
 
 

@@ -285,7 +285,7 @@ def value_histogram(
     MERGEABLE partial: per-partition / per-day histograms merge into the
     corpus histogram with ``merge_partial_aggs(hists, ["_bkt"],
     {"_cnt": "sum"})`` without touching raw data, the same
-    partial-aggregate algebra as merge_count_min (counters). At 100 TB
+    partial-aggregate algebra as the count-min sketch's counters. At 100 TB
     the quantile question is answered by maintaining per-increment
     histograms and merging, never re-scanning history."""
     if bucket_width <= 0:

@@ -7,6 +7,7 @@ from .medallion import (
     build_fact_prize,
     build_mart,
     full_dim_number,
+    gold_rollup,
     run_full_pipeline,
 )
 from .orchestrator import ProcessLog
@@ -18,6 +19,7 @@ __all__ = [
     "build_fact_prize",
     "build_mart",
     "full_dim_number",
+    "gold_rollup",
     "run_full_pipeline",
     "ProcessLog",
 ]

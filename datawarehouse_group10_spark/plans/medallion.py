@@ -1,7 +1,9 @@
 """The medallion pipeline: bronze (raw crawl rows) -> silver (typed
-transform) -> gold (star schema) and mart (serving aggregate). Both gold
-and the mart read silver: the mart is one per-number group of silver, not
-a rollup of the fact, so writing it does not re-derive the fact lineage.
+transform) -> gold (star schema) and mart (serving aggregate). All of gold
+and the mart are built from one per-(date, number) rollup of silver
+(:func:`gold_rollup`): dim_date is its distinct dates, dim_number and the
+mart are one group of it by number, and fact_prize is its rows plus window
+columns. No gold layer reads another gold layer.
 
 This is the Spark-first re-expression of the reference's P2-P4 stages
 (StagingDW, transform_staging, load_warehouse) as four declarative
@@ -37,8 +39,8 @@ from ..operators.transforms import (
     surrogate_date_key,
     vietnamese_day_name,
 )
-from ..operators.joins import anti_join_new_rows, broadcast_lookup_join
-from ..operators.aggregates import draws_per_date, reciprocal_probability
+from ..operators.joins import anti_join_new_rows
+from ..operators.aggregates import reciprocal_probability
 from ..operators.windows import days_since_last
 
 
@@ -49,67 +51,84 @@ def bronze_to_silver(bronze: DataFrame) -> DataFrame:
     decade bucket and 0/1 flags. Unparseable rows drop (T6 tolerance);
     the <2-char guard is inside last_k_digits.
     """
-    num = last_k_digits("number_value", 2)
-    dt = parse_draw_date("full_date")
-    flags = derive_flags(F.col("number_value_int"), F.col("full_date_d"))
+    n, d = F.col("number_value"), F.col("full_date")
+    flags = derive_flags(n, d)
     return (
         filter_prize(bronze, GIAI_BAY)
-        .withColumn("number_value_int", num)
-        .withColumn("full_date_d", dt)
-        .filter(F.col("number_value_int").isNotNull() & F.col("full_date_d").isNotNull())
-        .withColumn("range_group", decade_bucket("number_value_int"))
-        .withColumn("is_weekend", flags["is_weekend"])
-        .withColumn("is_even", flags["is_even"])
         .select(
-            F.col("number_value_int").alias("number_value"),
-            F.col("full_date_d").alias("full_date"),
-            "range_group",
-            "is_weekend",
-            "is_even",
-            F.col("load_timestamp"),
+            last_k_digits("number_value", 2).alias("number_value"),
+            parse_draw_date("full_date").alias("full_date"),
+            "load_timestamp",
+        )
+        .filter(n.isNotNull() & d.isNotNull())
+        .select(
+            n,
+            d,
+            decade_bucket("number_value").alias("range_group"),
+            flags["is_weekend"].alias("is_weekend"),
+            flags["is_even"].alias("is_even"),
+            "load_timestamp",
         )
     )
 
 
-def build_dim_date(silver: DataFrame, existing: DataFrame | None = None) -> DataFrame:
-    """Gold dim_date (T8-T10 + J2 anti-join dedupe vs existing dimension).
+def gold_rollup(silver: DataFrame) -> DataFrame:
+    """Silver -> the per-(date, number) rollup every gold layer is built from.
 
-    Distinct draw dates -> calendar attributes. At scale the distinct is a
-    partial-agg shuffle on a low-cardinality key (dates), which is cheap.
+    One row per draw date and normalised number (the dim_number natural
+    key, T7): ``rows`` counts the silver rows, intra-date duplicates
+    included (SURVEY 2.7.2), and ``is_even`` is their flag. It holds at
+    most 100 rows per draw date, so it is coalesced to one partition: a
+    single-partition input satisfies the distribution of every group and
+    window above it, and a gold plan over the cached rollup has no
+    exchange, so no extra Spark job.
     """
-    cal = calendar_attributes("full_date")
-    dim = (
-        silver.select("full_date")
-        .distinct()
-        .withColumn("date_key", surrogate_date_key("full_date"))
-        .withColumn("day_of_month", cal["day_of_month"])
-        .withColumn("month_of_year", cal["month_of_year"])
-        .withColumn("year_value", cal["year_value"])
-        .withColumn("year_month_value", cal["year_month_value"])
-        .withColumn("day_name", vietnamese_day_name("full_date"))
-        .withColumn("is_weekend", F.dayofweek("full_date").isin(1, 7).cast("int"))
-        .select(
-            "date_key", "full_date", "day_of_month", "month_of_year",
-            "year_value", "year_month_value", "day_name", "is_weekend",
+    return (
+        silver.groupBy(
+            "full_date",
+            normalize_numeric_string(F.col("number_value").cast("string")).alias("number_value"),
         )
+        .agg(F.count(F.lit(1)).alias("rows"), F.max("is_even").alias("is_even"))
+        .coalesce(1)
+    )
+
+
+def _number_order() -> Window:
+    """dim_number's natural-key order: integer value, non-numeric keys last."""
+    return Window.orderBy(F.col("number_value").try_cast("int").asc_nulls_last(), "number_value")
+
+
+def build_dim_date(rollup: DataFrame, existing: DataFrame | None = None) -> DataFrame:
+    """Gold dim_date (T8-T10 + J2 anti-join dedupe vs existing dimension):
+    the rollup's distinct draw dates with their calendar attributes."""
+    d = F.col("full_date")
+    cal = calendar_attributes(d)
+    dim = rollup.select("full_date").distinct().select(
+        surrogate_date_key(d).alias("date_key"),
+        d,
+        cal["day_of_month"].alias("day_of_month"),
+        cal["month_of_year"].alias("month_of_year"),
+        cal["year_value"].alias("year_value"),
+        cal["year_month_value"].alias("year_month_value"),
+        vietnamese_day_name(d).alias("day_name"),
+        F.dayofweek(d).isin(1, 7).cast("int").alias("is_weekend"),
     )
     if existing is not None:
         dim = anti_join_new_rows(dim, existing, "date_key")
     return dim
 
 
-def build_dim_number(silver: DataFrame, existing: DataFrame | None = None) -> DataFrame:
-    """Gold dim_number (T7, T11, J3; deterministic surrogate key).
+def build_dim_number(rollup: DataFrame, existing: DataFrame | None = None) -> DataFrame:
+    """Gold dim_number (T7, T11, J3; deterministic surrogate key): one
+    group of the rollup by natural key (the normalised number string).
 
-    Natural key = normalized number string (leading zeros stripped, T7).
     number_key = row_number() over natural-key order: deterministic, unlike
-    the reference's AUTO_INCREMENT (documented deviation, SURVEY 4).
-    The window has no partition, but it runs over <=100 distinct rows
-    post-aggregation (silver's ``number_value`` is the draw number's last
-    two digits, see :func:`bronze_to_silver`), so the single-partition
-    sort is trivial. A high-cardinality natural key would need keys
-    assigned without a global sort (``monotonically_increasing_id()``, or
-    per-partition dense ranks plus a partition-offset cumulative sum).
+    the reference's AUTO_INCREMENT (documented deviation, SURVEY 4). The
+    window has no partition, but it runs over <=100 distinct rows (silver's
+    ``number_value`` is the draw number's last two digits, see
+    :func:`bronze_to_silver`). A high-cardinality natural key would need
+    keys assigned without a global sort (``monotonically_increasing_id()``,
+    or per-partition dense ranks plus a partition-offset cumulative sum).
 
     Incremental semantics (mirrors AUTO_INCREMENT continuing past the
     existing max, ETLMain.java:299-302): when ``existing`` is given, only
@@ -118,18 +137,9 @@ def build_dim_number(silver: DataFrame, existing: DataFrame | None = None) -> Da
     already-issued keys. Callers needing the full dimension union the
     result with ``existing`` (see :func:`full_dim_number`).
     """
-    base = (
-        silver.select(
-            normalize_numeric_string(F.col("number_value").cast("string")).alias("number_value"),
-            "is_even",
-            "full_date",
-        )
-        .groupBy("number_value")
-        .agg(
-            F.max("is_even").cast("int").alias("is_even"),
-            F.max("full_date").alias("last_appeared_date"),
-        )
-        .withColumn("last_digit", last_digit("number_value"))
+    base = rollup.groupBy("number_value").agg(
+        F.max("is_even").cast("int").alias("is_even"),
+        F.max("full_date").alias("last_appeared_date"),
     )
     key_offset = F.lit(0)
     if existing is not None:
@@ -140,56 +150,52 @@ def build_dim_number(silver: DataFrame, existing: DataFrame | None = None) -> Da
         )
         base = base.crossJoin(F.broadcast(offset_df))
         key_offset = F.col("_key_offset")
-    w = Window.orderBy(F.col("number_value").try_cast("int").asc_nulls_last(), F.col("number_value"))
-    return base.withColumn(
-        "number_key", (F.row_number().over(w) + key_offset).cast("int")
-    ).select(
-        "number_key", "number_value", "is_even", "last_digit", "last_appeared_date"
+    return base.select(
+        (F.row_number().over(_number_order()) + key_offset)
+        .cast("int").alias("number_key"),
+        "number_value",
+        "is_even",
+        last_digit("number_value").alias("last_digit"),
+        "last_appeared_date",
     )
 
 
 def full_dim_number(new: DataFrame, existing: DataFrame | None = None) -> DataFrame:
     """The complete dimension after an incremental load: existing members
-    (keys unchanged) plus newly issued ones. Pass THIS to
-    :func:`build_fact_prize` so facts for already-known numbers keep
-    resolving (an inner join against only-new members would drop them)."""
+    (keys unchanged) plus newly issued ones."""
     if existing is None:
         return new
     return existing.select(*new.columns).unionByName(new)
 
 
-def build_fact_prize(
-    silver: DataFrame,
-    dim_number: DataFrame,
-    existing: DataFrame | None = None,
-) -> DataFrame:
-    """Gold fact_prize (W1-W2, A1-A2, J1, J4 + SURVEY 2.7 grain rules).
+def build_fact_prize(rollup: DataFrame, existing: DataFrame | None = None) -> DataFrame:
+    """Gold fact_prize (W1-W2, A1-A2, J4 + SURVEY 2.7 grain rules): one
+    row per rollup row.
 
     Grain = distinct (date, number): intra-date duplicate numbers collapse
-    to one row with occurrence_count=1 (2.7.1), while total_draws counts ALL
-    transform rows of that date including the duplicates (2.7.2).
+    to one row with occurrence_count=1 (2.7.1), while total_draws sums the
+    date's silver rows including the duplicates (2.7.2, A1). number_key is
+    the dense rank in dim_number's key order, which is dim_number's
+    row_number key for the same number, so no join resolves it.
     days_since_last = lag over per-number date order, NULL on first
     appearance (2.7.3) — computed over the full input (documented deviation).
     """
-    total = draws_per_date(silver)  # A1
-    distinct_dn = (
-        silver.select(
-            surrogate_date_key("full_date").alias("date_key"),
-            F.col("full_date"),
-            normalize_numeric_string(F.col("number_value").cast("string")).alias("number_value"),
-        )
-        .dropDuplicates(["date_key", "number_value"])
-    )
+    # coalesce keeps total_draws non-nullable, like the per-date count it is.
+    total_draws = F.coalesce(F.sum("rows").over(Window.partitionBy("full_date")), F.lit(0))
     fact = (
-        distinct_dn
-        .join(F.broadcast(total), "full_date", "inner")  # A1 attach
-        .transform(lambda d: broadcast_lookup_join(d, dim_number.select("number_key", "number_value"), "number_value"))  # J1
-        .withColumn("probability_value", reciprocal_probability())  # A2
-        .transform(lambda d: days_since_last(d, key="number_key", date_col="full_date"))  # W2
-        .withColumn("occurrence_count", F.lit(1).cast("int"))
+        rollup.select(
+            surrogate_date_key("full_date").alias("date_key"),
+            F.dense_rank().over(_number_order()).alias("number_key"),
+            F.lit(1).cast("int").alias("occurrence_count"),
+            total_draws.cast("int").alias("total_draws"),
+            "full_date",
+            "number_value",
+        )
+        .transform(lambda d: days_since_last(d, key="number_value", date_col="full_date"))  # W2
         .select(
-            "date_key", "number_key", "occurrence_count",
-            "total_draws", "probability_value", "days_since_last", "full_date",
+            "date_key", "number_key", "occurrence_count", "total_draws",
+            reciprocal_probability().alias("probability_value"),  # A2
+            "days_since_last", "full_date",
         )
     )
     if existing is not None:
@@ -197,47 +203,38 @@ def build_fact_prize(
     return fact
 
 
-def build_mart(silver: DataFrame, as_of: str | None = None) -> DataFrame:
-    """Silver -> serving mart (A4/Q3) [mart SQL absent in reference;
+def build_mart(rollup: DataFrame, as_of: str | None = None) -> DataFrame:
+    """Rollup -> serving mart (A4/Q3) [mart SQL absent in reference;
     reconstructed from the JPA entity Backend/.../entity/Mart.java:15-34 —
     SURVEY 2.8].
 
-    One group of silver by normalised number (the dim_number natural key):
+    One group of the rollup by normalised number (the dim_number natural key):
 
-    - total_occurrences = distinct draw dates of the number as DECIMAL(32,0):
-      the fact_prize row count of the number, since the fact grain is
-      distinct (date, number) (SURVEY 2.7.1)
+    - total_occurrences = the number's draw dates as DECIMAL(32,0): its
+      fact_prize row count, since the fact grain is distinct (date, number)
+      (SURVEY 2.7.1)
     - total_draws       = every silver row, intra-date duplicates included
-      (SURVEY 2.7.2): the per-number row counts summed over the <=100-row
-      group result, so silver is scanned once
+      (SURVEY 2.7.2): the rollup's row counts summed over the whole
+      <=100-row group result
     - probability       = total_occurrences / total_draws as DECIMAL(36,4)
     - days_since_last   = vs ``as_of`` (current_date if None)
 
-    These equal the fact + dim_number rollup (pinned in test_medallion.py)
-    without re-deriving the fact lineage.
+    These equal the fact + dim_number rollup (pinned in test_medallion.py).
     """
-    per_number = (
-        silver.groupBy(
-            normalize_numeric_string(F.col("number_value").cast("string")).alias("number_value")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.countDistinct("full_date").cast(DecimalType(32, 0)).alias("total_occurrences"),
-            F.max("full_date").alias("last_appeared_date"),
-        )
-        .withColumn("total_draws", F.sum("rows").over(Window.partitionBy()).cast("int"))
+    per_number = rollup.groupBy("number_value").agg(
+        F.sum("rows").alias("rows"),
+        F.count(F.lit(1)).cast(DecimalType(32, 0)).alias("total_occurrences"),
+        F.max("full_date").alias("last_appeared_date"),
     )
+    total_draws = F.sum("rows").over(Window.partitionBy()).cast("int")
     as_of_col = F.to_date(F.lit(as_of)) if as_of else F.current_date()
-    return (
-        per_number.withColumn(
-            "probability",
-            (F.col("total_occurrences") / F.col("total_draws")).cast(DecimalType(36, 4)),
-        )
-        .withColumn("days_since_last", F.datediff(as_of_col, F.col("last_appeared_date")).cast("int"))
-        .select(
-            "number_value", "total_occurrences", "total_draws",
-            "probability", "last_appeared_date", "days_since_last",
-        )
+    return per_number.select(
+        "number_value",
+        "total_occurrences",
+        total_draws.alias("total_draws"),
+        (F.col("total_occurrences") / total_draws).cast(DecimalType(36, 4)).alias("probability"),
+        "last_appeared_date",
+        F.datediff(as_of_col, F.col("last_appeared_date")).cast("int").alias("days_since_last"),
     )
 
 
@@ -319,29 +316,27 @@ def run_full_pipeline(
 ) -> dict[str, DataFrame]:
     """End-to-end P2->P4: returns every layer keyed by name.
 
-    Silver and dim_number are cached before fanning out — the in-memory
-    equivalent of what a deployed medallion does by WRITING silver to
-    parquet: dim_date, dim_number, fact, and mart all read silver, and
-    without persistence Catalyst re-derives the whole bronze scan +
-    transform chain once per consumer (~5x the work). Caches from the
-    PREVIOUS invocation are unpersisted on entry (see
-    :func:`release_pipeline_caches`) — repeated pipeline runs in one
-    session do not leak storage. A caller that needs only the mart
-    should call ``build_mart(bronze_to_silver(bronze), as_of)`` instead,
-    which caches nothing and leaves this call's caches alone.
+    Silver and the gold rollup (:func:`gold_rollup`) are cached before
+    fanning out — the in-memory equivalent of what a deployed medallion
+    does by WRITING silver to parquet: the silver write and the rollup
+    read silver, and dim_date, dim_number, fact and mart all read the
+    rollup, so without persistence Catalyst re-derives the bronze scan,
+    the transform chain and the rollup's shuffle once per consumer. The
+    first gold write materializes the rollup; the other three then run no
+    exchange. Caches from the PREVIOUS invocation are unpersisted on entry
+    (see :func:`release_pipeline_caches`) — repeated pipeline runs in one
+    session do not leak storage. A caller that needs only the mart should
+    call ``build_mart(gold_rollup(bronze_to_silver(bronze)), as_of)``
+    instead, which caches nothing and leaves this call's caches alone.
     """
     release_pipeline_caches()
     silver = bronze_to_silver(bronze).cache()
-    _ACTIVE_CACHES.append(silver)
-    dim_date = build_dim_date(silver)
-    dim_number = build_dim_number(silver).cache()
-    _ACTIVE_CACHES.append(dim_number)
-    fact = build_fact_prize(silver, dim_number)
-    mart = build_mart(silver, as_of=as_of)
+    rollup = gold_rollup(silver).cache()
+    _ACTIVE_CACHES.extend([silver, rollup])
     return {
         "silver": silver,
-        "dim_date": dim_date,
-        "dim_number": dim_number,
-        "fact_prize": fact,
-        "mart": mart,
+        "dim_date": build_dim_date(rollup),
+        "dim_number": build_dim_number(rollup),
+        "fact_prize": build_fact_prize(rollup),
+        "mart": build_mart(rollup, as_of=as_of),
     }

@@ -18,8 +18,10 @@ from __future__ import annotations
 
 import fnmatch
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.dataset as ds
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.config_tables import source_config
@@ -87,13 +89,25 @@ def run_warehouse_job(
     log.run_stage("P3", _p3)
 
     # P4: star schema + mart (the reference's loadDimDate/loadDimNumber/
-    # loadFactPrize + mart build, ETLMain.java:233-430).
-    def _p4() -> int:
+    # loadFactPrize + mart build, ETLMain.java:233-430), written inside the
+    # mart publish so the mart link swaps only after all four layers are
+    # written. dim_date goes first and materializes the cached gold rollup;
+    # the other three then read it at the same time on driver threads,
+    # which inherit this thread's job group and local properties.
+    def _write_gold(mart_path: str) -> None:
         write_layer(layers["dim_date"], os.path.join(output_dir, "dim_date"))
-        write_layer(layers["dim_number"], os.path.join(output_dir, "dim_number"))
-        write_layer(layers["fact_prize"], os.path.join(output_dir, "fact_prize"))
-        publish_layer(os.path.join(output_dir, "mart"),
-                      lambda path: write_layer(layers["mart"], path))
+        writes = [(layers["dim_number"], os.path.join(output_dir, "dim_number")),
+                  (layers["fact_prize"], os.path.join(output_dir, "fact_prize")),
+                  (layers["mart"], mart_path)]
+        with ThreadPoolExecutor(len(writes)) as pool:
+            futures = [pool.submit(inheritable_thread_target(spark)(write_layer), df, path)
+                       for df, path in writes]
+        # Leaving the pool waited for every write; now raise the first error.
+        for f in futures:
+            f.result()
+
+    def _p4() -> int:
+        publish_layer(os.path.join(output_dir, "mart"), _write_gold)
         return _written_rows(os.path.join(output_dir, "fact_prize"))
 
     log.run_stage("P4", _p4)

@@ -87,17 +87,22 @@ def read_alt_crawl_csv(spark: SparkSession, path: str) -> DataFrame:
     ``process_code,ngay_trung,thu,ten_giai,so_trung,range_group,
     is_weekend,is_even,crawl_time`` with yyyy-MM-dd dates and true/false
     booleans) mapped onto the canonical bronze columns so the same silver
-    transform runs on either vintage of file."""
+    transform runs on either vintage of file. Parsed PERMISSIVE, like
+    :func:`read_crawl_csv`: short rows are null-padded, then rows without a
+    prize, a number or a crawl time are dropped, so every query of the
+    result sees the same rows whichever columns it reads."""
     df = (
         spark.read.schema(RAW_CRAWL_ALT)
         .option("header", "true")
-        .option("mode", "DROPMALFORMED")
+        .option("mode", "PERMISSIVE")
         .option("pathGlobFilter", CSV_GLOB)
         .option("encoding", "UTF-8")
         .csv(path)
     )
     return df.filter(
-        F.col("ten_giai").isNotNull() & F.col("so_trung").isNotNull()
+        F.col("ten_giai").isNotNull()
+        & F.col("so_trung").isNotNull()
+        & F.col("crawl_time").isNotNull()
     ).select(
         F.col("ten_giai").alias("prize"),
         F.col("so_trung").alias("number_value"),

@@ -297,17 +297,17 @@ def run_stream_mart_upsert(
     as a new version; on a lakehouse table format the same body becomes
     a MERGE INTO and the checkpoint semantics carry over unchanged.
     The batch body builds only the mart (``build_mart`` over the
-    batch's silver) and caches nothing, so a long-lived stream neither
+    rollup of the batch's silver) and caches nothing, so a long-lived stream neither
     accumulates cache entries nor releases the caches of an earlier
     ``run_full_pipeline`` call in the same session.
     """
-    from ..plans.medallion import bronze_to_silver, build_mart, merge_mart
+    from ..plans.medallion import bronze_to_silver, build_mart, gold_rollup, merge_mart
     from ..sources.parquet_source import publish_layer
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_mart = build_mart(bronze_to_silver(batch_df), as_of=as_of)
+        batch_mart = build_mart(gold_rollup(bronze_to_silver(batch_df)), as_of=as_of)
         merged = batch_mart  # the first batch: no mart published yet
         if os.path.exists(mart_dir):
             merged = merge_mart(batch_df.sparkSession.read.parquet(mart_dir), batch_mart)

@@ -16,6 +16,7 @@ from datawarehouse_group10_spark.plans.medallion import (
     build_fact_prize,
     build_mart,
     full_dim_number,
+    gold_rollup,
     run_full_pipeline,
 )
 
@@ -52,7 +53,7 @@ def test_days_since_last_null_on_first(spark, lottery_bronze_rows):
 
 
 def test_dim_number_normalization_and_keys(spark, lottery_bronze_rows):
-    dim = build_dim_number(bronze_to_silver(lottery_bronze_rows)).collect()
+    dim = build_dim_number(gold_rollup(bronze_to_silver(lottery_bronze_rows))).collect()
     values = [r["number_value"] for r in dim]
     assert values == ["7", "23", "41", "99"]           # zeros stripped, int order
     assert [r["number_key"] for r in dim] == [1, 2, 3, 4]
@@ -61,7 +62,7 @@ def test_dim_number_normalization_and_keys(spark, lottery_bronze_rows):
 
 def test_incremental_dim_number_keys_continue(spark, lottery_bronze_rows):
     silver = bronze_to_silver(lottery_bronze_rows)
-    existing = build_dim_number(silver)
+    existing = build_dim_number(gold_rollup(silver))
     # new batch introduces 55 (and repeats 23, which must not be re-issued)
     ts = dt.datetime(2024, 1, 7)
     new_bronze = spark.createDataFrame(
@@ -71,11 +72,11 @@ def test_incremental_dim_number_keys_continue(spark, lottery_bronze_rows):
         ],
         lottery_bronze_rows.schema,
     )
-    new_silver = bronze_to_silver(new_bronze)
-    delta = build_dim_number(new_silver, existing=existing).collect()
+    new_rollup = gold_rollup(bronze_to_silver(new_bronze))
+    delta = build_dim_number(new_rollup, existing=existing).collect()
     assert [(r["number_value"], r["number_key"]) for r in delta] == [("55", 5)]
     full = full_dim_number(
-        build_dim_number(new_silver, existing=existing), existing
+        build_dim_number(new_rollup, existing=existing), existing
     )
     assert full.count() == 5
     # keys stay unique and stable
@@ -96,7 +97,7 @@ def _fact_rollup_mart(fact, dim_number, as_of):
     """The mart as a rollup of the star schema: per-number SUM of fact
     occurrences and MAX date through dim_number, over total_draws summed
     from one fact row per date. build_mart must give the same rows from
-    silver alone."""
+    its one per-number group of the rollup."""
     per_date = fact.select("date_key", "total_draws").dropDuplicates(["date_key"])
     total = per_date.agg(F.sum("total_draws").cast("int").alias("total_draws"))
     per_number = (
@@ -149,21 +150,49 @@ def _multi_day_bronze(spark, days=20, seed=11):
 
 
 def test_mart_from_silver_equals_fact_rollup(spark, lottery_bronze_rows):
-    """build_mart(silver) is the fact + dim_number rollup, on the SURVEY
-    §2.7 trap rows (intra-date duplicate included) and on a generated
-    multi-day history."""
+    """The mart built from silver's gold rollup is the fact + dim_number
+    rollup, on the SURVEY §2.7 trap rows (intra-date duplicate included)
+    and on a generated multi-day history. The fact's dense-rank number_key
+    must resolve through dim_number's row_number key for this to hold."""
     as_of = "2024-02-15"
     for bronze in (lottery_bronze_rows, _multi_day_bronze(spark)):
         silver = bronze_to_silver(bronze)
-        dim = build_dim_number(silver)
-        oracle = _fact_rollup_mart(build_fact_prize(silver, dim), dim, as_of)
-        mart = build_mart(silver, as_of=as_of)
+        rollup = gold_rollup(silver)
+        dim = build_dim_number(rollup)
+        oracle = _fact_rollup_mart(build_fact_prize(rollup), dim, as_of)
+        mart = build_mart(rollup, as_of=as_of)
         assert mart.dtypes == oracle.dtypes
         got, want = sorted(mart.collect()), sorted(oracle.collect())
         assert got == want
         assert len(got) == dim.count() >= 4
         # SURVEY 2.7.2: the denominator counts every silver row, dups included
         assert {r["total_draws"] for r in got} == {silver.count()}
+
+
+def test_fact_and_mart_except_all_their_written_parquet(spark, tmp_path):
+    """The fact and the mart of run_full_pipeline equal, row for row, the
+    parquet run_warehouse_job wrote for them: exceptAll is empty in both
+    directions. Spark 4.1 must be able to plan set operations over the
+    fact's lineage (a fact plan that broadcast-joined a cached dimension
+    failed them with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)."""
+    from datawarehouse_group10_spark.plans.warehouse_job import run_warehouse_job
+    from datawarehouse_group10_spark.sources import read_crawl_csv_dir
+
+    csv, out = tmp_path / "csv", str(tmp_path / "dwh")
+    csv.mkdir()
+    for day, nums in (("01-01-2024", "07 23 23 99"), ("02-01-2024", "23 41 07 07")):
+        (csv / f"xsmb_{day}.csv").write_text(
+            "prize,number_value,full_date,created_at\n"
+            + "".join(f"Giải Bảy,{n},{day},x\n" for n in nums.split()),
+            encoding="utf-8",
+        )
+    run_warehouse_job(spark, csv_dir=str(csv), output_dir=out, as_of="2024-01-10")
+    layers = run_full_pipeline(read_crawl_csv_dir(spark, str(csv)), as_of="2024-01-10")
+    for name in ("fact_prize", "mart"):
+        built, written = layers[name], spark.read.parquet(f"{out}/{name}")
+        assert built.exceptAll(written).count() == 0, name
+        assert written.exceptAll(built).count() == 0, name
+        assert built.count() == written.count() > 0, name
 
 
 def test_statistics_deterministic_tiebreak(spark, lottery_bronze_rows):
@@ -177,7 +206,7 @@ def test_statistics_deterministic_tiebreak(spark, lottery_bronze_rows):
 
 
 def test_dim_date_attributes(spark, lottery_bronze_rows):
-    dim = build_dim_date(bronze_to_silver(lottery_bronze_rows))
+    dim = build_dim_date(gold_rollup(bronze_to_silver(lottery_bronze_rows)))
     rows = {r["date_key"]: r for r in dim.collect()}
     assert set(rows) == {20240101, 20240102}
     r = rows[20240101]
@@ -188,11 +217,10 @@ def test_dim_date_attributes(spark, lottery_bronze_rows):
 
 
 def test_fact_anti_join_idempotent_reload(spark, lottery_bronze_rows):
-    silver = bronze_to_silver(lottery_bronze_rows)
-    dim = build_dim_number(silver)
-    fact1 = build_fact_prize(silver, dim)
+    rollup = gold_rollup(bronze_to_silver(lottery_bronze_rows))
+    fact1 = build_fact_prize(rollup)
     # re-loading the same batch against the existing fact adds nothing (J4)
-    fact2 = build_fact_prize(silver, dim, existing=fact1)
+    fact2 = build_fact_prize(rollup, existing=fact1)
     assert fact2.count() == 0
 
 
@@ -240,7 +268,7 @@ def test_repeated_pipeline_runs_do_not_leak_cached_rdds(spark, lottery_bronze_ro
         out = run_full_pipeline(lottery_bronze_rows, as_of="2024-01-10")
         out["mart"].count()  # materialize -> populates the caches
     # after 3 runs only the LAST invocation's caches may have been added:
-    # silver (read by every gold layer and the mart) and dim_number
+    # silver and the gold rollup every gold layer and the mart read
     assert n_cached() - baseline <= 2
     release_pipeline_caches()
     assert n_cached() - baseline <= 0

@@ -958,8 +958,8 @@ def test_count_min_sketch_merge_and_one_sided_error(spark):
     from datawarehouse_group10_spark.functions.sketches import (
         cms_point_estimates,
         count_min_sketch,
-        merge_count_min,
     )
+    from datawarehouse_group10_spark.operators.aggregates import merge_partial_aggs
     from datawarehouse_group10_spark.functions.text import tokens
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
@@ -972,7 +972,8 @@ def test_count_min_sketch_merge_and_one_sided_error(spark):
         count_min_sketch(stream.filter(F.col("source") == s), "t")
         for s, in stream.select("source").distinct().collect()
     ]
-    merged = merge_count_min(*halves)
+    # CMS matrices merge elementwise: the cell counters are sum partials.
+    merged = merge_partial_aggs(halves, ["j", "bucket"], {"cnt": "sum"})
     as_map = lambda df: {(r["j"], r["bucket"]): r["cnt"] for r in df.collect()}
     assert as_map(merged) == as_map(whole)
 

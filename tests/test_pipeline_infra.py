@@ -342,6 +342,27 @@ def test_alt_crawl_format_maps_to_bronze(spark, tmp_path):
     assert len(out) == 1 and out[0]["number_value"] == 74
 
 
+def test_alt_crawl_reader_drops_short_rows(spark, tmp_path):
+    """The alt-layout reader applies the canonical reader's rule: a row
+    cut short before its crawl time (5 of 9 fields) is dropped, and
+    count() and collect() see the same rows, none with a NULL
+    created_at."""
+    from datawarehouse_group10_spark.sources.csv_source import read_alt_crawl_csv
+
+    (tmp_path / "alt.csv").write_text(
+        "process_code,ngay_trung,thu,ten_giai,so_trung,range_group,"
+        "is_weekend,is_even,crawl_time\n"
+        "CRAWL_001,2025-10-23,Thứ năm,Giải Bảy,74,70-79,false,true,2025-10-23 00:56:14\n"
+        "CRAWL_001,2025-10-23,Thứ năm,Giải Bảy,75\n",
+        encoding="utf-8",
+    )
+    bronze = read_alt_crawl_csv(spark, str(tmp_path))
+    rows = bronze.collect()
+    assert bronze.count() == len(rows) == 1
+    assert rows[0]["number_value"] == "74"
+    assert bronze.filter(F.col("created_at").isNull()).count() == 0
+
+
 def test_warehouse_job_end_to_end(spark, tmp_path):
     from datawarehouse_group10_spark.plans.warehouse_job import (
         SQL_MART_STATISTIC,
@@ -467,19 +488,25 @@ def _parquet_files(path):
 
 #: Spark jobs of a daily run_warehouse_job on a warm output directory,
 #: measured on the 2-day fixture below (the perfbench 30-day corpus takes
-#: the same 18). A rise means a layer re-derives another layer's lineage
-#: or a read infers a schema again.
-DAILY_RUN_MAX_JOBS = 18
+#: the same 8): bronze 1, silver 1, dim_date 2 (it materializes the gold
+#: rollup, whose group is the run's one exchange), then dim_number,
+#: fact_prize and the mart 1 each. A rise means a gold layer shuffles
+#: again, a layer re-derives another layer's lineage or a read infers a
+#: schema again.
+DAILY_RUN_MAX_JOBS = 8
 
 
 def test_daily_run_job_and_file_counts(spark, tmp_path):
     """Pin the fixed per-run costs, which do not depend on the host: the
     second daily run uses at most DAILY_RUN_MAX_JOBS Spark jobs (counted
-    by job group), and fact_prize is written as the same number of files
-    for 2 and for 20 draw days (no file per date)."""
+    by job group), no run starts a job outside its job group (the gold
+    writes on driver threads inherit it), and fact_prize is written as
+    the same number of files for 2 and for 20 draw days (no file per
+    date)."""
     from datawarehouse_group10_spark.plans.warehouse_job import run_warehouse_job
 
     sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
 
     def land_and_run(days, runs):
         csv, out = tmp_path / f"csv{days}", str(tmp_path / f"dwh{days}")
@@ -496,6 +523,42 @@ def test_daily_run_job_and_file_counts(spark, tmp_path):
     jobs = len(sc.statusTracker().getJobIdsForGroup("daily-run-2-1"))
     assert 0 < jobs <= DAILY_RUN_MAX_JOBS, jobs
     assert land_and_run(20, runs=1) == files_2_days
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_failed_gold_write_keeps_the_published_mart(spark, tmp_path, monkeypatch):
+    """A failed gold write fails P4 as a whole: the ledger logs FAILED, the
+    mart link still resolves to the version the previous run published,
+    and no Spark job of the run is still active when the call returns
+    (the concurrent gold writes are waited for before P4 raises)."""
+    from datawarehouse_group10_spark.plans import warehouse_job
+
+    csv, out = tmp_path / "csv", str(tmp_path / "dwh")
+    _land_crawl_days(csv, 2)
+    warehouse_job.run_warehouse_job(spark, csv_dir=str(csv), output_dir=out, as_of="2024-02-01")
+    served = os.path.realpath(os.path.join(out, "mart"))
+    write_layer = warehouse_job.write_layer
+    finished = []
+
+    def write_failing_fact(df, path):
+        if os.path.basename(path) == "fact_prize":
+            raise OSError("fact_prize write failed")
+        write_layer(df, path)
+        finished.append(os.path.basename(path))
+
+    monkeypatch.setattr(warehouse_job, "write_layer", write_failing_fact)
+    with pytest.raises(OSError, match="fact_prize write failed"):
+        warehouse_job.run_warehouse_job(spark, csv_dir=str(csv), output_dir=out, as_of="2024-02-01")
+    # Every other write had finished when P4 raised.
+    assert sorted(finished) == ["bronze", "dim_date", "dim_number", "mart", "silver"]
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert os.path.realpath(os.path.join(out, "mart")) == served
+    assert spark.read.parquet(served).count() > 0
+    log = ProcessLog(os.path.join(out, "process_log"))
+    assert log.latest_status("P4") == "FAILED"
+    p4 = [r for r in spark.read.parquet(log.path).orderBy("process_id").collect()
+          if r["process_code"] == "P4"]
+    assert (p4[-1]["status"], p4[-1]["message"]) == ("FAILED", "fact_prize write failed")
 
 
 def test_warehouse_job_replaces_date_partitioned_fact(spark, tmp_path):
@@ -1051,7 +1114,7 @@ def test_stream_mart_upsert_matches_batch(spark, csv_dir, tmp_path):
 
 def test_stream_mart_upsert_leaves_pipeline_caches_alone(spark, csv_dir, tmp_path):
     """A mart-only caller caches nothing and releases nothing: the silver
-    and dim_number caches of an earlier run_full_pipeline call are still
+    and gold rollup caches of an earlier run_full_pipeline call are still
     resident after a stream upserts the mart."""
     from datawarehouse_group10_spark.plans.medallion import run_full_pipeline
     from datawarehouse_group10_spark.streaming import run_stream_mart_upsert

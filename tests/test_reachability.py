@@ -42,7 +42,6 @@ KEEP = {
     "range_join": "the reference interval_point_counts is pinned equal to",
     "bloom_bits": "the reference the sized bloom filter is pinned bit-identical to",
     "kmeans_centroids": "builds the centroids the IVF recall pins measure",
-    "merge_count_min": "the count-min merge of the sketch mergeability pin",
     "_adpcm_encode_samples": "the reference IMA-ADPCM codec",
     "_adpcm_decode_nibbles": "the reference IMA-ADPCM codec",
     "_adpcm_wav_container": "the reference IMA-ADPCM codec",
