@@ -1317,15 +1317,14 @@ def snapshot_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
        RE-REFERENCED in the v2 manifest (no per-file work) — then
        swaps the pointer. v1's files are never modified or deleted, so
        a reader that resolved v1 before (or during) the optimize scans
-       consistent data throughout; space reclaim is the EXPLICIT
-       ``snapshot_gc`` with a retention window, not an implicit race.
+       consistent data throughout.
 
     The ``a_extended`` 'snapshot' section aggregates the committed
     snapshot per month against the plain-table SQL oracle — a pointer
     naming a wrong/partial version, lost/duplicated rows in the staged
     v2, or a re-referenced partition resolving to wrong data all break
     the driver hash. Pointer-swap atomicity, reader isolation, no-op
-    re-runs, O(touched) commit metadata, and GC retention are
+    re-runs and O(touched) commit metadata are
     pytest-pinned (tests/test_pipeline_infra.py)."""
     from .sources.layout import snapshot_compact, snapshot_read, snapshot_write
 

@@ -19,8 +19,7 @@ plans chosen for the 100 TB case:
   user with millions of events costs the same as anyone else. The
   WINDOWED plan's skew bound is different and documented on
   ``funnel_steps`` itself (measured under a 10%-of-all-events power
-  user at sf3.0 by ``scripts/funnel_skew_check.py``; numbers in
-  PERF.md r12).
+  user at sf3.0; numbers in PERF.md r12).
 - ``cohort_retention``: two hash aggregates (first-activity per user,
   distinct user-period activity) joined on the user key, then one
   aggregate on (cohort, offset). All shuffle keys are uniform (user id,
@@ -85,7 +84,7 @@ def funnel_steps(
     shuffle), so a user owning fraction f of a corpus with T event
     types costs one task ~O(f*N*2/T * log(...)) per pass, not f*N.
     Measured at sf3.0 with a synthetic user owning 10% of ALL events
-    (scripts/funnel_skew_check.py; PERF.md r12): the hot task stays
+    (PERF.md r12): the hot task stays
     within single-digit multiples of the stage median and a low share
     of stage wall-clock. For a user so hot that even its two-type
     slice dominates a stage, pre-aggregate duplicates per (_u, _n,

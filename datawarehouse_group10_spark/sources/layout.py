@@ -40,22 +40,14 @@ __all__ = [
     "MemoryMetaStore",
     "snapshot_write",
     "snapshot_read",
-    "snapshot_read_path",
-    "snapshot_scan_groups",
     "snapshot_manifest",
     "snapshot_version",
     "snapshot_version_at",
-    "snapshot_history",
     "snapshot_diff",
     "snapshot_compact",
-    "snapshot_backfill",
     "snapshot_merge",
     "snapshot_delete",
-    "snapshot_delete_where",
-    "snapshot_publish",
     "snapshot_evolve_partitioning",
-    "snapshot_restore",
-    "snapshot_gc",
 ]
 
 
@@ -320,10 +312,8 @@ def compact_partitions(
 # stream paid per batch — which is exactly the directory-listing step
 # Delta/Iceberg replace with manifest files, now replaced here too.
 # A file belonging to a committed snapshot is NEVER modified or
-# deleted by maintenance, so in-flight readers are consistent for as
-# long as their snapshot is retained; space is reclaimed by the
-# EXPLICIT snapshot_gc, which keeps every data directory any retained
-# manifest still references.
+# deleted by the layout, so in-flight readers stay consistent and
+# every committed version stays readable as time travel.
 #
 # Portability: both commit artifacts — the manifest and the pointer —
 # are single small-object writes, atomic on POSIX (rename) AND on
@@ -355,15 +345,15 @@ class ConcurrentWriteError(RuntimeError):
     """A snapshot commit lost the optimistic-concurrency race: the base
     version this writer planned against already has a committed
     successor. The writer's staging (data root + manifest + claim) is
-    orphaned for gc; callers retry by replanning against the NEW
-    committed version."""
+    left orphaned and never read; callers retry by replanning against
+    the NEW committed version."""
 
 
 class MetaStore:
     """The metadata-plane I/O seam (r13, VERDICT r12 #2) — the exact
     point Delta plugs a LogStore. Every snapshot-layout METADATA object
     (manifests, claims, commit tokens, the ``_COMMITTED`` pointer)
-    moves through one of these five primitives; the DATA plane (parquet
+    moves through one of these four primitives; the DATA plane (parquet
     partition directories) stays on whatever filesystem Spark writes.
     Keys are absolute POSIX-style path strings.
 
@@ -398,10 +388,6 @@ class MetaStore:
     def list(self, dirpath: str) -> list[str]:
         """Basenames of keys directly under ``dirpath`` (no recursion);
         empty when the prefix is absent."""
-        raise NotImplementedError
-
-    def delete(self, key: str) -> None:
-        """Remove ``key`` if present (idempotent)."""
         raise NotImplementedError
 
 
@@ -480,12 +466,6 @@ class PosixMetaStore(MetaStore):
             return []
         return sorted(os.listdir(dirpath))
 
-    def delete(self, key: str) -> None:
-        import os
-
-        if os.path.exists(key):
-            os.remove(key)
-
 
 class MemoryMetaStore(MetaStore):
     """In-memory fake for tests: a dict under one mutex, whose ONLY
@@ -531,10 +511,6 @@ class MemoryMetaStore(MetaStore):
                     if k.startswith(prefix) and "/" not in k[len(prefix):]
                 }
             )
-
-    def delete(self, key: str) -> None:
-        with self._mu:
-            self._data.pop(key, None)
 
 
 #: The active metadata store. Tests (and an eventual object-store
@@ -611,7 +587,7 @@ def _commit_chain(path: str) -> list[int]:
     a version with a manifest on disk but NOT in this chain is an
     orphaned OCC loser — its manifest was written before it lost the
     race — and must never be readable as history. Tokens are tiny and
-    retained forever (snapshot_gc keeps them), so the walk is complete;
+    never deleted, so the walk is complete;
     it costs O(chain) small reads and runs only for EXPLICIT time
     travel, never on the committed-pointer hot path."""
     chain: list[int] = []
@@ -632,7 +608,7 @@ def _version_is_committed(path: str, version: int) -> bool:
     manifests without ``base`` fall back to the O(chain) walk."""
     raw = _manifest_read(path, version)
     if raw is None:
-        return version in _commit_chain(path)  # reclaimed-commit case
+        return version in _commit_chain(path)  # version file deleted
     base = raw.get("base")
     if base is None:
         return version in _commit_chain(path)
@@ -902,7 +878,7 @@ def _manifest_resolve(
             if seg_raw is None:
                 raise FileNotFoundError(
                     f"manifest segment seg_{sid} under {path} is missing — "
-                    "metadata corrupted or gc raced a reader past retention"
+                    "metadata corrupted"
                 )
             segs_read += 1
             nbytes += len(seg_raw)
@@ -1591,8 +1567,7 @@ def _key_bloom_extra(
 def _key_bloom_digests(
     spark, df, pk_col: Column, spec: dict, m_of: dict[str, int]
 ) -> dict[str, dict]:
-    """The shared digest pass behind :func:`_key_bloom_extra` and
-    :func:`snapshot_rebuild_blooms` (r17, VERDICT r16 #2): given any
+    """The digest pass behind :func:`_key_bloom_extra`: given any
     DataFrame carrying the policy's key columns, a partition-key
     Column mapping each row to the manifest entry that owns it, and a
     per-key bloom size, compute ``{partition_key: {"kb": ...}}`` in
@@ -1749,7 +1724,7 @@ def _key_bloom_probe(
 
 #: Metadata bytes the most recent _stage_version commit wrote (segment
 #: + version file) — observability for the O(touched)-metadata pytest
-#: pin and the PERF commit-cost curve. Not part of any on-disk state.
+#: pin. Not part of any on-disk state.
 LAST_COMMIT_META_BYTES = 0
 
 
@@ -1766,7 +1741,6 @@ def _stage_version(
     key_bloom_spec: dict | None = None,
     synth_entries=None,
     extra_meta: dict | None = None,
-    publish: bool = True,
     allow_respec: bool = False,
 ) -> tuple[int, dict]:
     """Shared commit protocol for every snapshot writer: CLAIM the next
@@ -1801,7 +1775,7 @@ def _stage_version(
     (:func:`_snapshot_commit_cas`). Crash-safe at every step: until
     the pointer swap the table stays committed at the old version with
     only orphan staging (claim, data root, segment, version file) that
-    allocation skips and gc reclaims; a crash BETWEEN the commit token
+    allocation skips; a crash BETWEEN the commit token
     and the pointer swap is rolled forward by the next writer on that
     base."""
     import json
@@ -2135,13 +2109,7 @@ def _stage_version(
     meta_bytes += len(json.dumps(manifest, separators=(",", ":")))
     LAST_COMMIT_META_BYTES = meta_bytes
     _manifest_write(path, manifest)
-    if publish:
-        _snapshot_commit_cas(path, base_version, version)
-    # publish=False (r14, write-audit-publish): everything is staged —
-    # data root, segments, version file — but no commit token and no
-    # pointer swap. Readers can't see it (the version file records its
-    # base for the later snapshot_publish CAS); an abandoned staging
-    # is exactly the orphan shape gc(orphans=True) reclaims.
+    _snapshot_commit_cas(path, base_version, version)
     manifest = dict(manifest)
     manifest["partitions"] = parts
     return version, manifest
@@ -2175,17 +2143,15 @@ def _ts_norm(ts) -> float:
 
 def snapshot_version_at(path: str, ts) -> int:
     """AS-OF-TIMESTAMP time travel resolution (r14 — Delta's
-    ``TIMESTAMP AS OF``): the latest committed, still-retained version
+    ``TIMESTAMP AS OF``): the latest committed version
     whose commit wall-clock time is <= ``ts`` (epoch seconds, datetime,
     or ISO-8601 string; naive values read as UTC). Commit times are
     stamped into every version file by the shared staging protocol;
-    resolution walks the commit chain's version files — O(retention
+    resolution walks the commit chain's version files — O(history
     depth) tiny reads, explicit-time-travel only, never the
     committed-pointer hot path. Versions predating the timestamp
     feature carry no stamp and count as arbitrarily old (eligible
-    under any ``ts``). Raises when ``ts`` predates every retained
-    commit — including a table gc'd past it: retention is the visible
-    knob bounding how far back an as-of query can reach."""
+    under any ``ts``). Raises when ``ts`` predates every commit."""
     norm = _ts_norm(ts)
     committed = snapshot_version(path)
     best = None
@@ -2194,41 +2160,24 @@ def snapshot_version_at(path: str, ts) -> int:
             break
         raw = _manifest_read(path, v)
         if raw is None:
-            continue  # gc-reclaimed: not readable history anymore
+            continue  # version file gone: not readable history anymore
         cts = raw.get("ts")
         if cts is None or cts <= norm:
             best = v if best is None else max(best, v)
     if best is None:
         raise ValueError(
-            f"no retained commit under {path} at or before {ts!r} — "
-            "the timestamp predates the table or its retention window"
+            f"no commit under {path} at or before {ts!r} — "
+            "the timestamp predates the table"
         )
     return best
 
 
-def _validated_raw(
-    path: str, version: int | None, staged: bool = False
-) -> tuple[int, dict]:
+def _validated_raw(path: str, version: int | None) -> tuple[int, dict]:
     """Resolve + validate a version number and return its RAW version
     file (segments unresolved) — the shared front half of every plan:
     commit-pointer default, time-travel bounds, orphaned-OCC-loser
-    rejection, gc-reclaimed error. Scoped readers (r14) take the raw
-    and resolve only the segments their key scope overlaps.
-
-    ``staged=True`` (r14, write-audit-publish) is the AUDIT read: the
-    explicit ``version`` is accepted purely on its version file
-    existing — no pointer bound, no lineage check — because the whole
-    point is reading a staged-not-yet-published commit. Callers opt in
-    per read; nothing on the default path changes."""
-    if staged:
-        if version is None:
-            raise ValueError("staged=True needs an explicit version")
-        raw = _manifest_read(path, version)
-        if raw is None:
-            raise FileNotFoundError(
-                f"no staged version file v{version} under {path}"
-            )
-        return version, raw
+    rejection, missing-version-file error. Scoped readers (r14) take
+    the raw and resolve only the segments their key scope overlaps."""
     committed = snapshot_version(path)
     if version is None:
         version = committed
@@ -2253,9 +2202,9 @@ def _validated_raw(
     raw = _manifest_read(path, version)
     if raw is None:
         raise FileNotFoundError(
-            f"snapshot v{version} under {path} was reclaimed by "
-            "snapshot_gc — raise its `keep` retention to time-travel "
-            "this far back"
+            f"snapshot v{version} under {path} has no version file — "
+            "it was deleted outside the layout, so time travel cannot "
+            "reach it"
         )
     return version, raw
 
@@ -2264,15 +2213,14 @@ def snapshot_manifest(path: str, version: int | None = None) -> dict:
     """Resolve a version's FULL manifest — every partition entry.
     ``version=None`` resolves the committed pointer. An explicit
     ``version`` is TIME TRAVEL: read the table as of that commit —
-    valid for any version at or below the committed pointer that
-    snapshot_gc has not reclaimed. Versions above the pointer are a
-    writer's uncommitted staging and raise ValueError; reclaimed
-    versions raise FileNotFoundError naming the retention knob, so a
-    reader pinned to an old version fails loudly instead of silently
-    reading the wrong data.
+    valid for any committed version at or below the committed pointer.
+    Versions above the pointer are a writer's uncommitted staging and
+    raise ValueError; a version whose version file is gone raises
+    FileNotFoundError, so a reader pinned to an old version fails
+    loudly instead of silently reading the wrong data.
 
-    This is the EXPLICIT full-metadata surface (history, compaction
-    planning, operator inspection). The scan/merge/diff plan paths do
+    This is the EXPLICIT full-metadata surface (compaction planning,
+    operator inspection). The scan/merge/diff plan paths do
     NOT call it anymore (r14, VERDICT r13 #1): they resolve scoped, so
     a pruned read of one partition never parses a million entries."""
     version, raw = _validated_raw(path, version)
@@ -2346,7 +2294,7 @@ def _file_passes_prune(f_stats: dict, norm_prune: dict) -> bool:
 
 
 #: Observability for the file-skipping pytest pin (r14): of the
-#: partitions the most recent snapshot_scan_groups applied per-file
+#: partitions the most recent :func:`_scan_plan` applied per-file
 #: pruning to, how many files existed vs were planned for scanning.
 LAST_SCAN_FILES_TOTAL = 0
 LAST_SCAN_FILES_READ = 0
@@ -2357,18 +2305,29 @@ def _scan_plan(
     version: int | None = None,
     partitions: set[str] | None = None,
     prune: dict[str, tuple] | None = None,
-    staged: bool = False,
 ) -> tuple[list[tuple[str, list[str]]], list[dict], object, dict]:
-    """``(scan_groups, dv_refs, partition_col, raw)`` — the full scan plan:
-    the data-directory groups :func:`snapshot_scan_groups` returns,
-    plus the merge-on-read delete-file descriptors (r14) of every
-    SCANNED partition that carries outstanding deletes, plus the
-    manifest's partition-col spec (needed to derive the partition key
-    the delete anti-join scopes on). See the public wrapper for the
-    group semantics."""
+    """``(scan_groups, dv_refs, partition_col, raw)`` — the full scan plan.
+
+    ``scan_groups`` is ``[(base_path, [partition_dirs...]), ...]``, one
+    group per version root that owns data (optionally restricted to a
+    set of partition VALUES). Each group reads with ``basePath`` set to
+    its root so hive partition-column inference works; group count is
+    bounded by the number of version roots that own live data, not the
+    partition count.
+    ``prune`` drops every partition whose manifest [min, max] for ALL
+    given ``{col: (lo, hi)}`` columns provably misses the range
+    (missing/incomparable stats keep it); the scan is a SUPERSET of the
+    matching rows. The manifest resolve is SCOPED by ``partitions`` (or
+    by a string-bounded prune on a single identity partition column),
+    so segments outside the scope are never opened.
+
+    ``dv_refs`` are the merge-on-read delete-file descriptors (r14) of
+    every SCANNED partition that carries outstanding deletes, and
+    ``partition_col`` is the manifest's spec (needed to derive the
+    partition key the delete anti-join scopes on)."""
     import os
 
-    version, raw = _validated_raw(path, version, staged=staged)
+    version, raw = _validated_raw(path, version)
     pc = raw["partition_col"]
     pcols = _pcols(pc)
     norm_prune = _norm_prune(prune)
@@ -2481,42 +2440,6 @@ def _scan_plan(
     )
 
 
-def snapshot_scan_groups(
-    path: str,
-    version: int | None = None,
-    partitions: set[str] | None = None,
-    prune: dict[str, tuple] | None = None,
-) -> list[tuple[str, list[str]]]:
-    """The physical scan plan for a snapshot (optionally restricted to
-    a set of partition VALUES — manifest-level partition pruning):
-    ``[(base_path, [partition_dirs...]), ...]``, one group per version
-    root that owns data. Each group reads with ``basePath`` set to its
-    root so hive partition-column inference works; group count is
-    bounded by the retention depth (maintenance consolidates refs),
-    not the partition count.
-
-    ``prune`` (r12) is READ-side stats pruning — the reader twin of
-    the MERGE probe's: ``{col: (lo, hi)}`` drops every partition whose
-    manifest [min, max] for ALL given columns provably misses the
-    range (missing/incomparable stats keep the partition — pruning is
-    only ever an optimization). The scan is a SUPERSET of the matching
-    rows; the caller still applies its row filter. Bounds are compared
-    after :func:`_stat_norm` (pass dates/timestamps as such or as
-    ISO-8601 strings).
-
-    Plan-time metadata is O(relevant) (r14, VERDICT r13 #1): the
-    manifest resolve is SCOPED by ``partitions`` (or, for a prune on a
-    single partition column with string-normed bounds — the
-    date-partitioned hot path — by the key range itself), so segments
-    whose key range misses the scope are never opened or parsed.
-
-    DATA directories only: a partition's outstanding merge-on-read
-    delete files (r14) are NOT reflected here — external single-dir
-    consumers get a superset scan. In-engine readers go through
-    :func:`snapshot_read` / :func:`_read_version`, which apply them."""
-    return _scan_plan(path, version, partitions, prune)[0]
-
-
 def _read_version(
     spark,
     path: str,
@@ -2524,7 +2447,6 @@ def _read_version(
     partitions: set[str] | None = None,
     prune: dict[str, tuple] | None = None,
     schema_json: str | None = None,
-    staged: bool = False,
     schema_ctx: dict | None = None,
 ) -> DataFrame | None:
     """Scan a snapshot version AND apply its outstanding merge-on-read
@@ -2552,7 +2474,7 @@ def _read_version(
     never resurrects)."""
     import os
 
-    groups, dvs, pc, raw = _scan_plan(path, version, partitions, prune, staged)
+    groups, dvs, pc, raw = _scan_plan(path, version, partitions, prune)
     # ``schema_ctx`` (r15): map roots through ANOTHER version's schema
     # state — snapshot_diff reads its FROM side through the TO
     # version's schema_log, so both sides of the diff land in the TO
@@ -2857,7 +2779,7 @@ def _root_schema(raw: dict, root_version: int):
     "ids": [...]}`` records appended by :func:`snapshot_evolve_schema`
     — "roots numbered < V were written under this schema". Recorded in
     the CURRENT version file (carried commit-to-commit), so the
-    mapping survives gc of the root's own version file. Tables that
+    mapping does not depend on the root's own version file. Tables that
     never evolved have no log: zero overhead."""
     for rec in raw.get("schema_log") or ():
         if root_version < rec["before"]:
@@ -2940,42 +2862,35 @@ def snapshot_read(
     partitions: set[str] | None = None,
     prune: dict[str, tuple] | None = None,
     as_of=None,
-    staged: bool = False,
 ) -> DataFrame:
     """Read a snapshot version as a DataFrame — the canonical reader:
     resolve the manifest once, scan exactly the partition directories
     it references (grouped per owning version root), union the groups.
     ``partitions`` restricts the scan to those partition values;
     ``prune`` drops partitions whose manifest column stats provably
-    miss a ``{col: (lo, hi)}`` range (see :func:`snapshot_scan_groups`
-    — the result is a SUPERSET of matching rows, apply your row filter
-    on top). Both are manifest-level pruning: the dropped partitions
-    cost no directory listing, no footer read, no task — and since r14
-    no metadata parse either (the resolve inside scan_groups is scoped;
+    miss a ``{col: (lo, hi)}`` range (see :func:`_scan_plan` — the
+    result is a SUPERSET of matching rows, apply your row filter on
+    top). Both are manifest-level pruning: the dropped partitions cost
+    no directory listing, no footer read, no task — and since r14 no
+    metadata parse either (the resolve inside the scan plan is scoped;
     the schema comes from the version FILE, never a full resolve).
 
     ``as_of`` (r14) is TIMESTAMP time travel — epoch seconds,
     datetime, or ISO-8601 string (naive = UTC), resolved to the latest
-    retained commit at or before that instant
+    commit at or before that instant
     (:func:`snapshot_version_at`); mutually exclusive with
-    ``version``.
-
-    ``staged=True`` (r14) is the WRITE-AUDIT-PUBLISH audit read: an
-    explicit ``version`` staged with ``publish=False`` reads without
-    pointer/lineage validation (the version file alone vouches for
-    it), so a quality gate can inspect the would-be commit before
-    :func:`snapshot_publish` makes it visible to everyone else."""
+    ``version``."""
     if as_of is not None:
-        if version is not None or staged:
+        if version is not None:
             raise ValueError(
-                "snapshot_read: as_of is exclusive with version/staged"
+                "snapshot_read: as_of is exclusive with version"
             )
         version = snapshot_version_at(path, as_of)
-    _v, raw = _validated_raw(path, version, staged=staged)
+    _v, raw = _validated_raw(path, version)
     m = raw  # schema lives in the version file itself
     df = _read_version(
         spark, path, version, partitions, prune,
-        schema_json=m.get("schema"), staged=staged,
+        schema_json=m.get("schema"),
     )
     if df is None:
         if partitions is not None or prune is not None:
@@ -3003,33 +2918,6 @@ def snapshot_read(
             f"snapshot under {path} references no partitions"
         )
     return df
-
-
-def snapshot_read_path(path: str, version: int | None = None) -> str:
-    """Resolve a snapshot to a SINGLE scannable directory, via the
-    manifest. Valid only while every partition the manifest references
-    lives in one version root (true after a full load, or once
-    maintenance has rewritten everything); a multi-root snapshot raises
-    with a pointer to :func:`snapshot_read`, which handles the general
-    case. Kept for single-dir consumers (external engines that want
-    one path); in-engine readers use :func:`snapshot_read`."""
-    import os
-
-    groups, dvs, _pc, _raw = _scan_plan(path, version)
-    if dvs:
-        raise ValueError(
-            f"snapshot under {path} carries outstanding merge-on-read "
-            "delete files — no directory scan alone is the table; "
-            "read it with snapshot_read(), or fold the deletes with "
-            "snapshot_compact() first"
-        )
-    roots = {base for base, _dirs in groups}
-    if len(roots) != 1:
-        raise ValueError(
-            f"snapshot under {path} spans {len(roots)} version roots — "
-            "no single directory holds it; read it with snapshot_read()"
-        )
-    return next(iter(roots))
 
 
 def snapshot_write(
@@ -3065,7 +2953,7 @@ def snapshot_write(
     target is ~:data:`KEY_BLOOM_TARGET_FPR` FP at the partition's
     key count — a 50k-key hot partition gets a bigger digest instead
     of a saturated useless one. A filter at the cap degrades to "no
-    pruning", never to a wrong answer. Merges and backfills maintain
+    pruning", never to a wrong answer. Merges maintain
     the blooms automatically from the persisted policy; pre-policy
     partitions simply stay unpruned until first rewritten."""
     import os
@@ -3138,84 +3026,6 @@ def snapshot_write(
     return os.path.join(path, f"v{version}")
 
 
-def snapshot_history(path: str) -> list[dict[str, int | bool]]:
-    """The table's retained commit history, oldest first: one entry per
-    retained version with file count, total bytes, row count (straight
-    from the manifest — no footer walk), and whether it is the
-    committed snapshot. Data roots above the committed pointer (a
-    writer's staging or a pre-commit crash's orphan) appear flagged
-    ``committed=False`` with stats walked from disk if they lack a
-    manifest; GC-reclaimed versions (manifest deleted) are absent even
-    if newer manifests still reference some of their data dirs.
-
-    ``lineage`` (r13) distinguishes the two kinds of
-    ``committed=False`` entries at or below the pointer: True = a real
-    historical commit (time-travelable), False = an orphaned OCC
-    loser's staging (its manifest exists but it never won its CAS —
-    not readable history; ``snapshot_gc(orphans=True)`` reclaims
-    it)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    committed = _snapshot_committed(path)
-    out: list[dict[str, int | bool]] = []
-    seg_cache: dict = {}  # segments are shared across versions (r15)
-    for v in _snapshot_versions(path):
-        m = _manifest_resolve(
-            path, _manifest_read(path, v), seg_cache=seg_cache
-        )
-        if m is not None:
-            h = {
-                "version": v,
-                "committed": v == committed,
-                "lineage": v == committed
-                or _version_is_committed(path, v),
-                "files": sum(e["files"] for e in m["partitions"].values()),
-                "rows": sum(e["rows"] for e in m["partitions"].values()),
-                "bytes": sum(e["bytes"] for e in m["partitions"].values()),
-            }
-            if m.get("ts") is not None:
-                h["ts"] = m["ts"]  # commit wall time (r14, as-of anchor)
-            dv_rows = sum(
-                (e.get("dv") or {}).get("rows", 0)
-                for e in m["partitions"].values()
-            )
-            if dv_rows:
-                # physical rows minus outstanding merge-on-read
-                # deletes = the logical row count readers see (an
-                # upper bound: a delete key can match several rows)
-                h["dv_rows"] = dv_rows
-            out.append(h)
-            continue
-        if committed is not None and v <= committed:
-            # manifest reclaimed by gc -> not a readable commit anymore
-            continue
-        snap = os.path.join(path, f"v{v}")
-        files = rows = nbytes = 0
-        for dirpath, dirnames, names in os.walk(snap):
-            # delete files are not data files
-            dirnames[:] = [d for d in dirnames if d != "_dv"]
-            for f in names:
-                if not f.endswith(".parquet"):
-                    continue
-                full = os.path.join(dirpath, f)
-                files += 1
-                nbytes += os.path.getsize(full)
-                rows += pq.ParquetFile(full).metadata.num_rows
-        out.append(
-            {
-                "version": v,
-                "committed": False,
-                "lineage": False,
-                "files": files,
-                "rows": rows,
-                "bytes": nbytes,
-            }
-        )
-    return out
-
-
 def _diff_manifests(
     path: str, from_version: int, to_version: int
 ) -> tuple[set[str], dict, dict]:
@@ -3256,8 +3066,7 @@ def _diff_manifests(
             if seg_raw is None:
                 raise FileNotFoundError(
                     f"manifest segment seg_{sid} under {path} is "
-                    "missing — metadata corrupted or gc raced a "
-                    "reader past retention"
+                    "missing — metadata corrupted"
                 )
             cand |= set(json.loads(seg_raw.decode("utf-8"))["entries"])
         a_m = _manifest_resolve(path, a_raw, keys=cand)
@@ -3742,84 +3551,6 @@ def snapshot_compact(
     }
 
 
-def snapshot_backfill(
-    df: DataFrame, path: str, partition_col: str
-) -> dict[str, int]:
-    """Partition backfill under the snapshot-pointer layout — the
-    reader-safe twin of :func:`overwrite_partitions`: stage ``v<N+1>``
-    holding ONLY the batch's partitions rewritten from ``df`` (one file
-    per partition), re-reference every OTHER partition's existing data
-    directory in the new manifest, swap the pointer. Replay-idempotent
-    the same way dynamic partition overwrite is (re-running a batch
-    replaces exactly its own partitions — as a new version instead of
-    an in-place directory swap), with no commit window a concurrent
-    reader can observe, and commit cost O(batch partitions) regardless
-    of table size. Returns {"partitions_backfilled", "old_version",
-    "new_version"}."""
-    committed, raw = _validated_raw(path, None)
-    pcols = _pcols(partition_col)
-    touched = {
-        r[0]
-        for r in df.select(
-            _part_key_col(partition_col).alias("_pkey")
-        ).distinct().collect()
-    }
-    if not touched:
-        return {
-            "partitions_backfilled": 0,
-            "old_version": committed,
-            "new_version": committed,
-        }
-    # a backfill replaces exactly its batch's partitions — the only
-    # manifest entries it needs are theirs (r14: scoped resolve; the
-    # typed format carries n_live, so the count stays maintained)
-    segs = raw.get("segments")
-    base_partial = (
-        isinstance(segs, list)
-        and bool(segs)
-        and all(isinstance(s, dict) for s in segs)
-        and raw.get("n_live") is not None
-    )
-    m = _manifest_resolve(
-        path, raw, keys=touched if base_partial else None
-    )
-
-    bf_write = _derive_pcols(df, partition_col)
-
-    def writer(snap: str) -> None:
-        (
-            bf_write.repartition(*pcols)
-            .write.mode("append")
-            .partitionBy(*pcols)
-            .parquet(snap)
-        )
-
-    bloom_spec = m.get("key_bloom")
-    bloom_extra = None
-    if bloom_spec is not None:
-        bf_schema = m.get("schema") or df.schema.json()
-        spark = df.sparkSession
-
-        def bloom_extra(snap: str, _fresh: set[str], recs=None) -> dict:
-            return _key_bloom_extra(
-                spark, snap, partition_col, bloom_spec, bf_schema,
-                recs=recs,
-            )
-
-    version, _new_m = _stage_version(
-        path, partition_col, m, touched, writer,
-        base_version=committed,
-        schema_json=m.get("schema") or df.schema.json(),
-        base_partial=base_partial,
-        entry_extra=bloom_extra,
-    )
-    return {
-        "partitions_backfilled": len(touched),
-        "old_version": committed,
-        "new_version": version,
-    }
-
-
 #: Optional plan-capture hook (r12, VERDICT r11 #3): when a plan audit
 #: is listening (scripts/plan_audit.py sets this to
 #: streaming.capture_plan), snapshot_merge records the formatted plan
@@ -4132,7 +3863,6 @@ def snapshot_merge(
     update_cols: list[str] | None = None,
     write_shards: int | str | None = None,
     target_file_bytes: int = 128 << 20,
-    publish: bool = True,
     extra_meta: dict | None = None,
 ) -> dict[str, int]:
     """Row-level MERGE INTO the snapshot-pointer table with
@@ -4596,8 +4326,7 @@ def snapshot_merge(
     version, _new_m = _stage_version(
         path, partition_col, m, touched, writer, base_version=committed,
         schema_json=schema_json, base_partial=base_partial,
-        entry_extra=bloom_extra, publish=publish,
-        extra_meta=extra_meta,
+        entry_extra=bloom_extra, extra_meta=extra_meta,
     )
     return {
         "partitions_rewritten": len(touched),
@@ -4609,9 +4338,6 @@ def snapshot_merge(
         "partitions_total": raw.get("n_live", len(parts)),
         "write_shards": auto_shards,
         "old_version": committed,
-        # publish=False (r14 WAP): this is the STAGED version — audit
-        # it with snapshot_read(version=..., staged=True), then
-        # snapshot_publish() it (or abandon it to gc)
         "new_version": version,
     }
 
@@ -4622,7 +4348,6 @@ def snapshot_delete(
     path: str,
     partition_col,
     key_cols: list[str],
-    publish: bool = True,
     extra_meta: dict | None = None,
 ) -> dict[str, int]:
     """Row-level DELETE with MERGE-ON-READ granularity (r14) — the
@@ -4824,7 +4549,6 @@ def snapshot_delete(
             ),
         }
         or None,
-        publish=publish,
     )
     dv_rows = sum(
         (new_m["partitions"][k].get("dv") or {}).get("rows", 0)
@@ -4851,7 +4575,6 @@ def snapshot_upsert_mor(
     delete_col: str | None = None,
     seq_col: str | None = None,
     extra_meta: dict | None = None,
-    publish: bool = True,
 ) -> dict[str, int]:
     """MERGE-ON-READ UPSERT (r15, VERDICT r14 #5) — the Flink->Iceberg
     mixed-CDC-batch shape: land an N-row batch of full-row upserts
@@ -5281,7 +5004,6 @@ def snapshot_upsert_mor(
             ),
         }
         or None,
-        publish=publish,
     )
     dv_rows = sum(
         (new_m["partitions"][k].get("dv") or {}).get("rows", 0)
@@ -5426,8 +5148,9 @@ def snapshot_evolve_schema(
 
     Refused: evolving a partition SOURCE column of any live spec
     (identity or transform — directory layouts and probe scoping key
-    on those names), DROPPING a key-bloom policy column (clear or
-    re-key via snapshot_set_key_bloom first), and DROPPING the
+    on those names), DROPPING a key-bloom policy column (reload the
+    table with :func:`snapshot_write` under another ``key_bloom``
+    first), and DROPPING the
     delete-key column while merge-on-read delete files are
     outstanding. Everything else composes with outstanding deletes
     (r16, VERDICT r15 #4): delete keys are addressed by FIELD ID
@@ -5545,7 +5268,8 @@ def snapshot_evolve_schema(
     # column's physical TYPE, so evolution must keep both coherent.
     # DROP of a bloom column is refused (the policy would reference a
     # missing column and every later merge's bloom maintenance would
-    # fail) — clear or re-key it first (snapshot_set_key_bloom).
+    # fail) — reload the table under another policy first
+    # (snapshot_write's key_bloom).
     # RENAME rewrites the policy's cols through the rename map; WIDEN
     # keeps the names but changes xxhash64's input width (int and
     # bigint hash differently), so BOTH bump the policy GENERATION:
@@ -5558,8 +5282,8 @@ def snapshot_evolve_schema(
     if bad_kb:
         raise ValueError(
             f"snapshot_evolve_schema: column(s) {bad_kb} are key-bloom "
-            "policy sources — clear or re-key the policy first "
-            "(snapshot_set_key_bloom(path, None) clears it)"
+            "policy sources — reload the table with "
+            "snapshot_write(key_bloom=None or other columns) first"
         )
     new_kb_spec = None
     if kb_spec is not None and (
@@ -5698,507 +5422,6 @@ def snapshot_evolve_schema(
         "fields": len(fields),
         "next_fid": nf,
     }
-
-
-def snapshot_set_key_bloom(
-    path: str,
-    cols: list[str] | None,
-    bits: int = 8192,
-    hashes: int = 6,
-    max_bits: int = KEY_BLOOM_MAX_M,
-) -> dict[str, int]:
-    """Set, re-key, or CLEAR a table's key-bloom pruning policy with a
-    pure-metadata commit (r16, ADVICE r15) — the policy-management
-    verb :func:`snapshot_evolve_schema`'s bloom-column guard points
-    at. ``cols=None`` clears the policy (existing per-partition
-    digests stop being consulted and age out as partitions rewrite);
-    a column list installs a new policy whose GENERATION is bumped
-    past the old one, so digests built under any previous policy —
-    even one over the same column names — are ignored by the probe
-    instead of producing incompatible-hash false negatives. Digests
-    (re)build lazily: each merge/backfill/upsert stamps the
-    partitions it rewrites; untouched partitions simply stay unpruned,
-    exactly the pre-policy behavior."""
-    committed, raw = _validated_raw(path, None)
-    # the generation watermark (``kb_gen``) outlives the policy itself:
-    # it advances past every epoch that ever built digests, so a
-    # clear-then-reinstall (possibly with a type-widening evolution in
-    # between, when no policy guard was active) can never alias
-    # old-epoch digests into the new policy
-    watermark = max(
-        int(raw.get("kb_gen", 0)),
-        int((raw.get("key_bloom") or {}).get("gen", 0)),
-    )
-    spec = None
-    if cols is not None:
-        if bits < 8 or bits % 8:
-            raise ValueError(
-                f"key_bloom bits must be a positive multiple of 8, "
-                f"got {bits}"
-            )
-        # reject bad hash counts AT POLICY-SET TIME (r17, ADVICE r16
-        # #4): hashes=0 used to commit fine and then die much later
-        # with ZeroDivisionError inside _key_bloom_extra's
-        # bits-per-key sizing on the first merge/backfill — the
-        # failure surfaced on an unrelated hot path instead of at the
-        # bad input
-        if not isinstance(hashes, int) or isinstance(hashes, bool) \
-                or hashes < 1:
-            raise ValueError(
-                f"key_bloom hashes must be a positive integer, "
-                f"got {hashes!r}"
-            )
-        if raw.get("schema") is not None:
-            import json as _json
-
-            known = {
-                f["name"]
-                for f in _json.loads(raw["schema"])["fields"]
-            }
-            missing = sorted(set(cols) - known)
-            if missing:
-                raise ValueError(
-                    f"snapshot_set_key_bloom: unknown column(s) "
-                    f"{missing}"
-                )
-        spec = {"cols": list(cols), "m": int(bits), "k": int(hashes)}
-        if max_bits != KEY_BLOOM_MAX_M:
-            spec["mx"] = int(max_bits)
-        if raw.get("key_bloom") is not None or watermark:
-            watermark += 1
-            spec["gen"] = watermark
-    elif raw.get("key_bloom") is not None:
-        watermark += 1  # retire the live epoch
-    m = _manifest_resolve(path, raw)
-    version, _m = _stage_version(
-        path, raw["partition_col"], m, set(), None,
-        base_version=committed,
-        extra_meta={
-            "key_bloom": spec,
-            **({"kb_gen": watermark} if watermark else {}),
-        },
-    )
-    return {"old_version": committed, "new_version": version}
-
-
-def snapshot_rebuild_blooms(
-    spark,
-    path: str,
-    partitions: set[str] | None = None,
-    force: bool = False,
-) -> dict[str, int]:
-    """Recompute per-partition key-bloom digests WITHOUT rewriting any
-    data (r17, VERDICT r16 #2) — the maintenance verb that restores
-    probe pruning after an evolution bumped the policy generation.
-
-    A key-column widen/rename (or a re-keyed policy) correctly
-    degrades stale digests to "no pruning" (their xxhash64 bits are
-    incompatible with the new probe), but pruning then stays off until
-    each partition happens to be REWRITTEN — on a 100 TB mostly-cold
-    table that can be forever. This verb scans the affected
-    partitions' live rows under the CURRENT schema (so widened
-    columns hash at their current type), packs fresh current-gen
-    digests executor-side (one :func:`_key_bloom_digests` pass per
-    live spec — mixed-spec tables mid-migration group entries by
-    write spec so each row's owning entry resolves under its own
-    layout), and commits them as a pure-METADATA delta: entries
-    re-reference their existing data roots, only the ``kb`` field
-    changes.
-
-    By default only entries whose digest is missing or from a stale
-    policy epoch rebuild; ``force=True`` rebuilds every selected
-    entry (e.g. to shrink digests after mass deletes). Entries with
-    zero live rows get an all-zero digest — the exact member set.
-    Sizing follows the write path's auto-sizing from the manifest's
-    recorded row counts (floor ``m``, cap ``mx``, target FPR
-    :data:`KEY_BLOOM_TARGET_FPR`)."""
-    import base64
-    import math
-
-    committed, raw = _validated_raw(path, None)
-    spec = raw.get("key_bloom")
-    if spec is None:
-        raise ValueError(
-            "snapshot_rebuild_blooms: table has no key-bloom policy "
-            "(set one with snapshot_set_key_bloom first)"
-        )
-    m = _manifest_resolve(path, raw)
-    parts = m["partitions"]
-    unknown = sorted(set(partitions or ()) - set(parts))
-    if unknown:
-        raise ValueError(
-            f"snapshot_rebuild_blooms: unknown partition(s) {unknown}"
-        )
-
-    def _current(kb) -> bool:
-        return (
-            kb is not None
-            and list(kb["cols"]) == list(spec["cols"])
-            and kb["k"] == spec["k"]
-            and kb.get("gen") == spec.get("gen")
-        )
-
-    targets = {
-        k: e
-        for k, e in parts.items()
-        if (partitions is None or k in partitions)
-        and (force or not _current(e.get("kb")))
-    }
-    if not targets:
-        return {
-            "rebuilt": 0,
-            "old_version": committed,
-            "new_version": committed,
-        }
-    kh = spec["k"]
-    mbits = spec["m"]
-    mmax = max(int(spec.get("mx", KEY_BLOOM_MAX_M)), mbits)
-    bits_per_key = -kh / math.log(
-        1.0 - KEY_BLOOM_TARGET_FPR ** (1.0 / kh)
-    )
-    m_of: dict[str, int] = {}
-    for k, e in targets.items():
-        need = int(bits_per_key * max(1, int(e.get("rows") or 0))) + 1
-        mm = mbits
-        while mm < need and mm * 2 <= mmax:
-            mm *= 2
-        m_of[k] = mm
-    groups: dict[str, list[str]] = {}
-    for k, e in targets.items():
-        groups.setdefault(
-            repr(_pc_store(_entry_pc(raw, e))), []
-        ).append(k)
-    digests: dict[str, dict] = {}
-    for _store, keys in sorted(groups.items()):
-        gpc = _entry_pc(raw, targets[keys[0]])
-        df = _read_version(spark, path, partitions=set(keys))
-        if df is not None:
-            digests.update(
-                _key_bloom_digests(
-                    spark, df, _part_key_col(gpc), spec,
-                    {k: m_of[k] for k in keys},
-                )
-            )
-    for k in targets:
-        if k not in digests:
-            digests[k] = {
-                "kb": {
-                    "cols": list(spec["cols"]),
-                    "m": m_of[k],
-                    "k": kh,
-                    "b": base64.b64encode(
-                        bytes(m_of[k] // 8)
-                    ).decode("ascii"),
-                    **({"gen": spec["gen"]} if "gen" in spec else {}),
-                }
-            }
-
-    def synth(_snap: str, _recs=None) -> dict:
-        return {
-            k: {**dict(e), **digests[k]} for k, e in targets.items()
-        }
-
-    version, _m = _stage_version(
-        path, raw["partition_col"], m, set(targets), None,
-        base_version=committed, schema_json=m.get("schema"),
-        synth_entries=synth,
-    )
-    return {
-        "rebuilt": len(targets),
-        "old_version": committed,
-        "new_version": version,
-    }
-
-
-def snapshot_publish(path: str, version: int) -> dict[str, int]:
-    """PUBLISH a staged commit (r14 — Iceberg's write-audit-publish):
-    make a version staged with ``publish=False`` the committed
-    snapshot, through exactly the protocol a direct commit uses — the
-    single-successor token CAS on the base the writer planned against,
-    then the monotonic pointer swap. The WAP flow::
-
-        st = snapshot_merge(..., publish=False)        # stage
-        audit = snapshot_read(spark, path,             # audit
-                              version=st["new_version"], staged=True)
-        ... quality gate over `audit` ...
-        snapshot_publish(path, st["new_version"])      # publish
-
-    Conflict semantics are the layout's normal OCC: if anything else
-    committed on the same base while the audit ran, publishing raises
-    :class:`ConcurrentWriteError` — re-stage against the new committed
-    version (the data may now be stale); nothing of the loser was ever
-    visible. Re-publishing an already-published version is an
-    idempotent no-op (the crash-recovery shape: died between token and
-    pointer swap — the roll-forward inside the CAS finishes it).
-    An ABANDONED staging (audit failed) is exactly the orphan shape
-    ``snapshot_gc(orphans=True)`` reclaims — but note gc's contract:
-    run ``orphans=True`` only when no stage-audit window is open, or
-    it will reclaim the staging under the auditor."""
-    raw = _manifest_read(path, version)
-    if raw is None:
-        raise FileNotFoundError(
-            f"no staged version file v{version} under {path}"
-        )
-    base = raw.get("base") or 0
-    if _succ_read(path, base) == version:
-        # already published (or died between token and pointer swap):
-        # finish/no-op the monotonic pointer advance
-        _snapshot_commit(path, version)
-        return {"published": version, "base": base, "already": 1}
-    # Re-stamp the as-of anchor at PUBLISH time (ADVICE r14 #3): the
-    # staging protocol stamped `ts` when the data landed, but a WAP
-    # commit becomes visible only now — Delta anchors TIMESTAMP AS OF
-    # on commit time, and a staging-time stamp would let as-of reads
-    # resolve state no reader could have observed then (and sit
-    # out-of-order against chain predecessors committed during the
-    # audit window). Rewritten BEFORE the CAS: if the CAS loses, only
-    # an orphan's stamp moved; if we die after the CAS, the token is
-    # the roll-forward and the stamp is already final.
-    import time as _time
-
-    raw["ts"] = round(_time.time(), 6)
-    _manifest_write(path, raw)
-    _snapshot_commit_cas(path, base, version)
-    return {"published": version, "base": base, "already": 0}
-
-
-def snapshot_delete_where(
-    spark,
-    path: str,
-    partition_col,
-    key_cols: list[str],
-    predicate,
-    prune: dict[str, tuple] | None = None,
-) -> dict[str, int]:
-    """DELETE ... WHERE sugar over merge-on-read (r14): read the
-    committed snapshot (optionally manifest-pruned with the same
-    ``{col: (lo, hi)}`` contract as :func:`snapshot_read` — pass the
-    predicate's range so untouched partitions cost nothing), filter
-    with ``predicate`` (a Column or a SQL string), project the key
-    columns, and hand the matched keys to :func:`snapshot_delete`.
-
-    Scale shape: the scan is column-pruned to the key + predicate
-    columns of the prune-surviving partitions; the commit is the MOR
-    delete's — per-partition delete files, zero data rewritten. The
-    degenerate full-partition case (predicate = the partition key) is
-    better served by a backfill/merge that tombstones the partition
-    outright; this is the surgical shape."""
-    cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    keys = (
-        snapshot_read(spark, path, prune=prune)
-        .filter(cond)
-        .select(*key_cols)
-        .distinct()
-    )
-    return snapshot_delete(spark, keys, path, partition_col, key_cols)
-
-
-def snapshot_restore(path: str, version: int) -> dict[str, int]:
-    """RESTORE the table to a retained earlier version — as a NEW
-    commit (Delta's ``RESTORE TABLE ... TO VERSION AS OF``), never by
-    moving the pointer backwards (the pointer is monotonic; history
-    is append-only). On this layout the restore is pure metadata: the
-    new version file re-references the target version's segment list
-    verbatim — ZERO data work, O(1) metadata, one CAS commit. The
-    rolled-back-over versions stay readable history until gc reclaims
-    them. Restoring to an orphaned (never-committed) version raises
-    like any time travel would."""
-    target = snapshot_manifest(path, version)  # validates commit chain
-    committed = snapshot_version(path)
-    if version == committed:
-        return {
-            "restored_to": version,
-            "old_version": committed,
-            "new_version": committed,
-        }
-    new_version, _m = _stage_version(
-        path,
-        target["partition_col"],
-        target,
-        touched=set(),
-        writer=None,
-        base_version=committed,
-        schema_json=target.get("schema"),
-    )
-    return {
-        "restored_to": version,
-        "old_version": committed,
-        "new_version": new_version,
-    }
-
-
-def snapshot_gc(
-    path: str, keep: int = 1, orphans: bool = False,
-    dry_run: bool = False,
-) -> list[int]:
-    """Reclaim old snapshots: delete the MANIFESTS of every COMMITTED
-    version older than the ``keep`` most recent ones (never the
-    committed version itself), then delete every data directory no
-    retained manifest references. Data a retained version still
-    references SURVIVES even when the version that wrote it is
-    reclaimed — a time-travel read of any retained version keeps
-    working through and after a gc of older versions. This is the
-    explicit operational contract the in-place ops lacked: readers
-    must finish within the retention window, and the window is a
-    visible knob instead of an implicit race. Returns the reclaimed
-    version numbers.
-
-    What gc NEVER touches (r13, ADVICE r12):
-
-    - ``succ_v*`` commit tokens: they are the single-successor
-      invariant AND the committed-lineage record (:func:`_commit_chain`
-      validates time travel against them). Deleting a doomed base's
-      token would let a stalled writer re-create it and re-commit a
-      long-dead version; they are a few bytes each, kept forever.
-    - Staging of versions NOT in the commit chain — by default. A
-      version ≤ the pointer without a commit can be an orphaned OCC
-      loser (safe to reclaim) or a STILL-RUNNING writer whose claimed
-      number other commits merely advanced past (reclaiming it would
-      yank directories from under a live write). Only the operator
-      knows no writers are active: ``orphans=True`` additionally
-      deletes non-chain claims, manifests, and data roots at or below
-      the pointer (such a writer's eventual CAS was going to lose
-      anyway — its base already has a successor — so the worst case
-      of a mis-timed ``orphans=True`` is a different error on a
-      doomed commit, never corruption). Staging ABOVE the pointer is
-      always left alone.
-
-    ``dry_run=True`` (r15) computes and returns the reclaim list
-    WITHOUT deleting anything — the operator preview before an
-    ``orphans=True`` run on a shared table."""
-    import os
-    import shutil
-
-    if keep < 1:
-        raise ValueError(f"keep must be >= 1, got {keep}")
-    committed = _snapshot_committed(path)
-    if committed is None:
-        return []
-    chain = _commit_chain(path)
-    if committed not in chain:
-        chain.append(committed)  # defensive: pointer is always lineage
-    doomed = [
-        v
-        for v in chain[:-keep]
-        # already-reclaimed chain versions (manifest gone) are not
-        # re-reported: gc is idempotent
-        if v != committed and _manifest_read(path, v) is not None
-    ]
-    doomed_set = set(doomed)
-    versions = _snapshot_versions(path)
-    orphan_set = (
-        {v for v in versions if v <= committed and v not in set(chain)}
-        if orphans
-        else set()
-    )
-    dead = doomed_set | orphan_set
-    if dry_run:
-        return sorted(dead)
-    # every (root, partition relpath), every merge-on-read delete FILE
-    # (r14 — dv files live under the root of the version that wrote
-    # them while being referenced by LATER versions' entries), and
-    # every manifest SEGMENT any surviving version file references
-    referenced: set[tuple[str, str]] = set()
-    referenced_dv: set[str] = set()
-    live_segs: set[str] = set()
-    # segments are immutable and SHARED across version files — parse
-    # each once for the whole walk (r15): gc metadata I/O is
-    # O(distinct live segments), not O(retained versions x table)
-    seg_cache: dict = {}
-    for v in versions:
-        if v in dead:
-            continue
-        raw = _manifest_read(path, v)
-        if raw is None:
-            continue
-        live_segs |= {_seg_id(s) for s in raw.get("segments") or []}
-        m = _manifest_resolve(path, raw, seg_cache=seg_cache)
-        for val, e in m["partitions"].items():
-            referenced.add(
-                (e["root"], _part_relpath(_entry_pc(m, e), val))
-            )
-            referenced_dv.update((e.get("dv") or {}).get("files", ()))
-            for rec in e.get("ap") or ():
-                # append files (r15) live in leaf dirs of the root
-                # that wrote them while referenced by later versions'
-                # entries — protect their whole leaf like a plain ref
-                for f in rec["files"]:
-                    segs = f.split(os.sep)
-                    referenced.add(
-                        (segs[0], os.sep.join(segs[1:-1]))
-                    )
-    for v in dead:
-        _meta_store().delete(_manifest_file(path, v))
-        _meta_store().delete(_manifest_file(path, v) + ".claim")
-    # Segments are immutable and SHARED across version files (a list
-    # re-references older versions' segments), so one is garbage only
-    # when no surviving version's list names it — and, like data
-    # roots, a segment whose writing version is above the pointer (or
-    # of unknown status without orphans=True) is an active writer's
-    # staging and is never touched: gc must not sweep the gap between
-    # a writer's segment write and its version-file write.
-    import re as _re
-
-    for f in _meta_store().list(os.path.join(path, "_manifests")):
-        sm = _re.fullmatch(r"seg_(v(\d+)(?:\.c\d+)?)\.json", f)
-        if sm is None or sm.group(1) in live_segs:
-            continue
-        sv = int(sm.group(2))
-        if sv <= committed and (
-            sv in dead or (orphans and _manifest_read(path, sv) is None)
-        ):
-            _meta_store().delete(os.path.join(path, "_manifests", f))
-    for v in versions:
-        if v > committed or (v not in set(chain) and v not in orphan_set):
-            continue  # never touch live staging / unknown-status roots
-        root = os.path.join(path, f"v{v}")
-        if not os.path.isdir(root):
-            continue
-
-        # leaf partition dirs at ANY nesting depth (multi-column
-        # partitioning writes a=x/b=y trees); a leaf is a `col=val`
-        # dir with no `col=val` children
-        def _leaves(d: str, rel: str) -> list[str]:
-            subs = [
-                n
-                for n in os.listdir(d)
-                if "=" in n and os.path.isdir(os.path.join(d, n))
-            ]
-            if not subs:
-                return [rel] if rel else []
-            out: list[str] = []
-            for n in subs:
-                out.extend(
-                    _leaves(
-                        os.path.join(d, n),
-                        os.path.join(rel, n) if rel else n,
-                    )
-                )
-            return out
-
-        for rel in _leaves(root, ""):
-            if (f"v{v}", rel) not in referenced:
-                shutil.rmtree(os.path.join(root, rel))
-        # merge-on-read delete files (r14): reclaim the ones no
-        # retained manifest entry references anymore (the partition
-        # was rewritten, or every referencing version was reclaimed);
-        # the empty-dir sweep below folds the emptied _dv tree
-        dvroot = os.path.join(root, "_dv")
-        if os.path.isdir(dvroot):
-            for dirpath, _dvdirs, names in os.walk(dvroot):
-                for fname in names:
-                    full = os.path.join(dirpath, fname)
-                    if os.path.relpath(full, path) not in referenced_dv:
-                        os.remove(full)
-        for d in os.listdir(root):
-            full = os.path.join(root, d)
-            if v in dead and not os.path.isdir(full):
-                os.remove(full)  # write-job droppings (_SUCCESS)
-        # drop now-empty intermediate dirs bottom-up, then the root
-        for dirpath, _dirs, _files in os.walk(root, topdown=False):
-            if not os.listdir(dirpath):
-                os.rmdir(dirpath)
-    return sorted(dead)
 
 
 def file_prune_fraction(path: str, col: str, lo: float, hi: float) -> float:

@@ -904,10 +904,8 @@ def run_snapshot_cdf_consume(
     (CDC semantics: consume changes from now on) — pass
     ``start_version`` (r15) to seed the cursor at a retained earlier
     commit instead (backfill-from-history), ignored once a cursor
-    exists. If retention reclaimed the
-    cursor's version, this fails loudly naming the gc knob instead of
-    silently skipping windows: the retention window IS the maximum
-    consumer lag, exactly the reader contract the layout documents.
+    exists. If the cursor's version file is gone, this fails loudly
+    instead of silently skipping windows.
 
     One consumer per cursor: the cursor write is last-wins, so run
     competing consumers on separate cursors. Returns
@@ -937,12 +935,12 @@ def run_snapshot_cdf_consume(
             f"v{committed} of {table_path} — wrong table or cursor?"
         )
     # lineage tokens live forever, but the diff needs the cursor
-    # version's MANIFEST — gone means retention lapped this consumer
+    # version's MANIFEST — gone means it was deleted outside the layout
     if _manifest_read(table_path, cursor) is None:
         raise ValueError(
-            f"CDF cursor v{cursor} of {table_path} was reclaimed by "
-            "snapshot_gc — the retention window bounds consumer lag; "
-            "raise `keep` or re-seed the cursor"
+            f"CDF cursor v{cursor} of {table_path} has no version file "
+            "— it was deleted outside the layout; re-seed the cursor "
+            "with start_version"
         )
     chain = [v for v in _commit_chain(table_path) if v >= cursor]
     todo = [v for v in chain if v > cursor and v <= committed]

@@ -23,7 +23,7 @@ TABLES = (
 ).split()
 
 #: Quadratic-BY-CONTRACT surfaces: their outputs (and thus their
-#: oracles) enumerate a pair set that grows ~K^2 with the gen_scale.py
+#: oracles) enumerate a pair set that grows ~K^2 with the data generator's
 #: copy count, so at sweep tiers above sf0.3 the wall time is literal
 #: pair enumeration on BOTH engines, not a Spark scale signal (PERF.md
 #: r8 #16: 848s + 206s of the sf1.0 sweep). With --cap-quadratic DIR

@@ -1610,7 +1610,7 @@ def test_stream_cdc_apply_retries_lost_occ_race_in_stream(
     )
     snapshot_write(base, table, "p")
 
-    # the competing maintenance write: a backfill of a DISJOINT
+    # the competing maintenance write: a merge into a DISJOINT
     # partition 'z', committed in the window between the stream
     # merge's manifest read and its CAS — the exact interleaving that
     # failed the whole stream in r12
@@ -1625,7 +1625,7 @@ def test_stream_cdc_apply_retries_lost_occ_race_in_stream(
             state["armed"] -= 1
             state["inside"] = True
             try:
-                L.snapshot_backfill(external, table, "p")
+                L.snapshot_merge(spark, external, table, "p", ["k"])
             finally:
                 state["inside"] = False
         return real_stage(path, pc, b, touched, writer, *args, **kwargs)
@@ -1648,7 +1648,7 @@ def test_stream_cdc_apply_retries_lost_occ_race_in_stream(
         .parquet(src)
     )
     # completes without raising: the first merge attempt LOSES the
-    # race (the hijack committed the backfill on its base), the retry
+    # race (the hijack committed the merge on its base), the retry
     # replans and lands
     run_stream_cdc_apply(
         stream, table, "p", ["k"], delete_col="del",
@@ -2136,46 +2136,14 @@ def test_stream_cdc_apply_mor_tombstone_batches(spark, tmp_path):
     assert v2_files == []
 
 
-def test_snapshot_delete_where_predicate(spark, tmp_path):
-    """DELETE WHERE sugar: predicate + prune -> matched keys -> the MOR
-    delete; untouched partitions' data re-referenced."""
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_delete_where,
-        snapshot_read,
-        snapshot_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(f"p{i // 100}", i, float(i % 7)) for i in range(500)],
-        "p string, k int, v double",
-    )
-    snapshot_write(df, path, "p", key_bloom=["k"])
-    st = snapshot_delete_where(
-        spark, path, "p", ["k"],
-        "v = 3.0 and k between 100 and 299",
-        prune={"k": (100, 299)},
-    )
-    assert st["partitions_touched"] == 2
-    got = snapshot_read(spark, path)
-    assert got.filter(
-        (F.col("v") == 3.0)
-        & F.col("k").between(100, 299)
-    ).count() == 0
-    assert got.count() == 500 - df.filter(
-        (F.col("v") == 3.0) & F.col("k").between(100, 299)
-    ).count()
-
-
 def test_snapshot_cdf_consume_delivers_per_commit_windows(spark, tmp_path):
     """CDF consumer (r14): per-commit diff windows delivered in order
     from a persisted cursor; a consumer crash mid-window re-delivers
     exactly that window (at-least-once); catch-up batching bounds one
-    call; gc past the cursor fails loudly."""
+    call; a cursor whose version file is gone fails loudly."""
     from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
+        _manifest_file,
         snapshot_delete,
-        snapshot_gc,
         snapshot_merge,
         snapshot_write,
     )
@@ -2211,9 +2179,10 @@ def test_snapshot_cdf_consume_delivers_per_commit_windows(spark, tmp_path):
     snapshot_delete(  # v3: MOR delete k=2
         spark, spark.createDataFrame([(2,)], "k int"), table, "p", ["k"]
     )
-    snapshot_backfill(  # v4: replace partition b
+    snapshot_merge(  # v4: insert k=9 into partition b
+        spark,
         spark.createDataFrame([("b", 9, 9.0)], "p string, k int, v double"),
-        table, "p",
+        table, "p", ["k"],
     )
 
     # catch-up batching: one window per call with max_versions=1
@@ -2247,13 +2216,14 @@ def test_snapshot_cdf_consume_delivers_per_commit_windows(spark, tmp_path):
         spark, table, collect, str(tmp_path / "consumer2")
     )
     assert st2 == {"delivered": 0, "cursor": 4}
-    # retention bounds lag: rewind the cursor, gc, consume fails loud
+    # rewind the cursor to a version whose file is gone: consume fails
+    # loud instead of skipping windows
     import os
 
     with open(os.path.join(cursor, "_CDF_CURSOR"), "w") as fh:
         fh.write("2")
-    snapshot_gc(table, keep=1)
-    with pytest.raises(ValueError, match="reclaimed by snapshot_gc"):
+    os.remove(_manifest_file(table, 2))
+    with pytest.raises(ValueError, match="no version file"):
         run_snapshot_cdf_consume(spark, table, collect, cursor)
 
 
@@ -2299,48 +2269,3 @@ def test_snapshot_cdf_metadata_only_commits_deliver_empty_windows(
     assert st == {"delivered": 2, "cursor": 3}
     assert got == [(1, 2, 0), (2, 3, 0)]
 
-
-def test_snapshot_cdf_delivers_wap_published_commits(spark, tmp_path):
-    """A merge staged with publish=False is invisible to the CDF
-    consumer until snapshot_publish — then it arrives as one ordinary
-    commit window."""
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_merge,
-        snapshot_publish,
-        snapshot_write,
-    )
-    from datawarehouse_group10_spark.streaming import (
-        run_snapshot_cdf_consume,
-    )
-
-    table = str(tmp_path / "tbl")
-    cursor = str(tmp_path / "cur")
-    snapshot_write(
-        spark.createDataFrame(
-            [("a", 1, 1.0)], "p string, k int, v double"
-        ),
-        table, "p",
-    )
-    got = []
-
-    def sink(df, a, b):
-        got.append((a, b, {(r["_change"], r["k"], r["v"]) for r in df.collect()}))
-
-    run_snapshot_cdf_consume(spark, table, sink, cursor)
-    st = snapshot_merge(
-        spark,
-        spark.createDataFrame([("a", 1, 9.0)], "p string, k int, v double"),
-        table, "p", ["k"], publish=False,
-    )
-    # staged-not-published: nothing to consume
-    assert run_snapshot_cdf_consume(spark, table, sink, cursor)[
-        "delivered"
-    ] == 0
-    snapshot_publish(table, st["new_version"])
-    assert run_snapshot_cdf_consume(spark, table, sink, cursor)[
-        "delivered"
-    ] == 1
-    assert got[-1] == (
-        1, st["new_version"],
-        {("insert", 1, 9.0), ("delete", 1, 1.0)},
-    )

@@ -1566,78 +1566,56 @@ def test_compacted_orders_early_return_recreates_success(
     ] == mtimes, "warm call rebuilt the staging"
 
 
-def test_cli_backfill_and_optimize_subcommands(spark, tmp_path, monkeypatch):
-    """The operational story is driveable end to end (VERDICT r9 #7):
-    `backfill` repairs exactly the partitions present in the batch via
-    dynamic partition overwrite, `optimize` compacts fragmented
-    partitions and is a no-op re-run — both through the argparse front
-    door, not the library API."""
+def test_cli_job_list_and_query(spark, tmp_path, monkeypatch, capsys):
+    """The CLI's three commands through the argparse front door: `list`
+    prints one line per registry key, `job` runs the daily warehouse job
+    and prints each written layer's footer row count (a re-run on the
+    same output prints the same counts), and an unknown `query` name
+    exits 2."""
     import datawarehouse_group10_spark.session as S
     from datawarehouse_group10_spark.__main__ import main
-    from datawarehouse_group10_spark.sources.layout import (
-        partition_file_stats,
+    from datawarehouse_group10_spark.contract import QUERIES
+    from datawarehouse_group10_spark.plans.warehouse_job import _written_rows
+
+    # CLI main() stops its session in finally; the test session must
+    # survive. The job hands the session itself to
+    # inheritable_thread_target, so patch stop() on the real session
+    # rather than wrapping it.
+    monkeypatch.setattr(S, "get_spark", lambda **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+
+    assert main(["list"]) == 0
+    listed = capsys.readouterr().out.splitlines()
+    assert [line.split()[0] for line in listed] == list(QUERIES)
+
+    csv = tmp_path / "csv"
+    csv.mkdir()
+    (csv / "data.csv").write_text(
+        "prize,number_value,full_date,created_at\n"
+        "Giải Bảy,07,01-01-2024,x\nGiải Bảy,23,01-01-2024,x\n"
+        "Giải Bảy,23,02-01-2024,x\n",
+        encoding="utf-8",
     )
+    out = str(tmp_path / "dwh")
+    argv = ["job", "--csv-dir", str(csv), "--out", out, "--as-of", "2024-01-10"]
+    printed = []
+    for _ in range(2):
+        assert main(argv) == 0
+        head, *rows = capsys.readouterr().out.splitlines()
+        assert head == f"wrote layers to {out}:"
+        counts = {}
+        for row in rows:
+            name, _, n = row.strip().partition(": ")
+            counts[name] = int(n.removesuffix(" rows"))
+        assert counts == {name: _written_rows(os.path.join(out, name)) for name in counts}
+        printed.append(counts)
+    assert printed[1] == printed[0]
+    assert {k: printed[0][k] for k in ("silver", "dim_date", "dim_number", "fact_prize", "mart")} == {
+        "silver": 3, "dim_date": 2, "dim_number": 2, "fact_prize": 3, "mart": 2,
+    }
 
-    class _NoStop:
-        """CLI main() stops its session in finally; the test session
-        must survive, so stop() is a no-op on this wrapper."""
-
-        def __init__(self, s):
-            self._s = s
-
-        def __getattr__(self, name):
-            return getattr(self._s, name)
-
-        def stop(self):
-            pass
-
-    monkeypatch.setattr(S, "get_spark", lambda **k: _NoStop(spark))
-
-    table = str(tmp_path / "tbl")
-    batch = str(tmp_path / "batch")
-    true_rows = [(m, i, float(100 + i)) for m in ("a", "b", "c") for i in range(50)]
-    df = spark.createDataFrame(true_rows, "p string, k int, v double")
-    # bad first load: partition b doubled values, every 5th row missing
-    bad = df.withColumn(
-        "v", F.when(F.col("p") == "b", F.col("v") * 2).otherwise(F.col("v"))
-    ).filter(~((F.col("p") == "b") & (F.col("k") % 5 == 0)))
-    bad.repartition("p").write.partitionBy("p").parquet(table)
-    df.filter("p = 'b'").write.parquet(batch)
-
-    rc = main(
-        ["backfill", "--input", batch, "--table", table,
-         "--partition-col", "p"]
-    )
-    assert rc == 0
-    got = spark.read.parquet(table)
-    assert got.count() == 150  # dropped rows restored
-    assert (
-        got.filter("p = 'b'").agg(F.sum("v")).first()[0]
-        == df.filter("p = 'b'").agg(F.sum("v")).first()[0]
-    )  # doubling repaired
-    assert got.filter("p = 'a'").count() == 50  # siblings untouched
-
-    # fragment partition a with 6 tiny appends, then optimize
-    for _ in range(6):
-        df.filter("p = 'a'").limit(10).write.mode("append").partitionBy(
-            "p"
-        ).parquet(table)
-    assert partition_file_stats(table, "p")["a"][0] >= 6
-    rc = main(["optimize", "--table", table, "--partition-col", "p"])
-    assert rc == 0
-    stats = partition_file_stats(table, "p")
-    assert stats["a"][0] == 1, stats
-    assert spark.read.parquet(table).filter("p = 'a'").count() == 110
-    # re-run is a no-op through the CLI too
-    rc = main(["optimize", "--table", table, "--partition-col", "p"])
-    assert rc == 0
-
-    # bad batch: missing partition column fails loudly, rc 2
-    rc = main(
-        ["backfill", "--input", batch, "--table", table,
-         "--partition-col", "nope"]
-    )
-    assert rc == 2
+    assert main(["query", "no_such_query"]) == 2
+    assert "unknown query" in capsys.readouterr().err
 
 
 def test_snapshot_layout_pointer_swap_and_reader_isolation(spark, tmp_path):
@@ -1654,7 +1632,7 @@ def test_snapshot_layout_pointer_swap_and_reader_isolation(spark, tmp_path):
     from datawarehouse_group10_spark.sources.layout import (
         partition_file_stats,
         snapshot_compact,
-        snapshot_read_path,
+        snapshot_version,
         snapshot_write,
     )
 
@@ -1668,7 +1646,7 @@ def test_snapshot_layout_pointer_swap_and_reader_isolation(spark, tmp_path):
         rows.append(("b", "x" * 128))
     df = spark.createDataFrame(rows, "p string, payload string")
     snap1 = snapshot_write(df, path, "p", shards=8)
-    assert snapshot_read_path(path) == snap1
+    assert snapshot_version(path) == 1 and snap1 == os.path.join(path, "v1")
     before = partition_file_stats(snap1, "p")
     assert all(s[0] >= 4 for s in before.values())
 
@@ -1681,8 +1659,9 @@ def test_snapshot_layout_pointer_swap_and_reader_isolation(spark, tmp_path):
 
     res = snapshot_compact(spark, path, "p")
     assert (res["old_version"], res["new_version"]) == (1, 2)
-    snap2 = snapshot_read_path(path)
-    assert snap2.endswith("v2") and snap2 != snap1
+    assert snapshot_version(path) == 2
+    # both partitions were fragmented, so v2 holds the whole table
+    snap2 = os.path.join(path, "v2")
 
     # reader isolation: every v1 file still exists with its exact size
     for f, size in v1_files.items():
@@ -1699,7 +1678,7 @@ def test_snapshot_layout_pointer_swap_and_reader_isolation(spark, tmp_path):
     res2 = snapshot_compact(spark, path, "p")
     assert res2["partitions_compacted"] == 0
     assert (res2["old_version"], res2["new_version"]) == (2, 2)
-    assert snapshot_read_path(path) == snap2
+    assert snapshot_version(path) == 2
 
 
 def test_snapshot_compact_rereferences_untouched_partitions(spark, tmp_path):
@@ -1760,17 +1739,15 @@ def test_snapshot_compact_rereferences_untouched_partitions(spark, tmp_path):
     assert got.filter("p = 'c'").count() == 1000
 
 
-def test_snapshot_orphan_staging_invisible_and_gc_retention(spark, tmp_path):
+def test_snapshot_orphan_staging_invisible(spark, tmp_path):
     """A crash before the pointer swap leaves an orphan v<N> readers
-    never resolve; the next writer allocates past it. snapshot_gc
-    deletes only versions older than the retention window, never the
-    committed one, never orphans newer than the pointer."""
+    never resolve; the next writer allocates past it."""
     import os
 
     from datawarehouse_group10_spark.sources.layout import (
         snapshot_compact,
-        snapshot_gc,
-        snapshot_read_path,
+        snapshot_read,
+        snapshot_version,
         snapshot_write,
     )
 
@@ -1781,90 +1758,17 @@ def test_snapshot_orphan_staging_invisible_and_gc_retention(spark, tmp_path):
     snapshot_write(df, path, "p", shards=6)
     # crashed maintenance: a staged-but-uncommitted v2
     os.makedirs(os.path.join(path, "v2", "p=a"))
-    assert snapshot_read_path(path).endswith("v1")  # orphan invisible
+    assert snapshot_version(path) == 1  # orphan invisible
 
     res = snapshot_compact(spark, path, "p")  # allocates v3, commits
     assert res["new_version"] == 3
-    assert snapshot_read_path(path).endswith("v3")
-
-    # GC with keep=1 (default orphans=False): committed v3 stays, the
-    # old COMMIT v1 is reclaimed, but the never-committed v2 staging is
-    # LEFT ALONE — gc cannot tell a dead orphan from a live writer
-    # whose claimed number other commits advanced past (ADVICE r12).
-    doomed = snapshot_gc(path, keep=1)
-    assert doomed == [1]
-    assert not os.path.exists(os.path.join(path, "v1"))
-    assert os.path.exists(os.path.join(path, "v2"))
-    # the operator, knowing no writers are active, reclaims orphans
-    assert snapshot_gc(path, keep=1, orphans=True) == [2]
-    assert not os.path.exists(os.path.join(path, "v2"))
-    assert spark.read.parquet(snapshot_read_path(path)).count() == 500
-
-
-def test_cli_snapshot_subcommands(spark, tmp_path, monkeypatch, capsys):
-    """snapshot-optimize and snapshot-gc through the argparse front
-    door: the CLI compacts a fragmented snapshot table into a new
-    committed version and gc reclaims versions outside the retention
-    window, never the committed one."""
-    import os
-
-    import datawarehouse_group10_spark.session as S
-    from datawarehouse_group10_spark.__main__ import main
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_read_path,
-        snapshot_write,
-    )
-
-    class _NoStop:
-        def __init__(self, s):
-            self._s = s
-
-        def __getattr__(self, name):
-            return getattr(self._s, name)
-
-        def stop(self):
-            pass
-
-    monkeypatch.setattr(S, "get_spark", lambda **k: _NoStop(spark))
-
-    table = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(m, i, float(i)) for m in ("a", "b") for i in range(200)],
-        "p string, k int, v double",
-    )
-    snapshot_write(df, table, "p", shards=8)
-    assert snapshot_read_path(table).endswith("v1")
-
-    rc = main(
-        ["snapshot-optimize", "--table", table, "--partition-col", "p"]
-    )
-    assert rc == 0
-    out = capsys.readouterr().out
-    assert "v1 -> v2" in out
-    assert snapshot_read_path(table).endswith("v2")
-    assert spark.read.parquet(snapshot_read_path(table)).count() == 400
-
-    rc = main(["snapshot-history", "--table", table])
-    assert rc == 0
-    hist_out = capsys.readouterr().out.strip().splitlines()
-    assert len(hist_out) == 2
-    # r14: each line carries the commit wall time (the as-of anchor)
-    assert hist_out[0].startswith("v1 @") and "committed" not in hist_out[0]
-    assert hist_out[1].startswith("v2 @") and hist_out[1].endswith("<- committed")
-    assert "400 row(s)" in hist_out[1]
-
-    rc = main(["snapshot-gc", "--table", table, "--keep", "1"])
-    assert rc == 0
-    assert "removed v1" in capsys.readouterr().out
-    assert not os.path.exists(os.path.join(table, "v1"))
-    assert spark.read.parquet(snapshot_read_path(table)).count() == 400
-
-    # history on a non-snapshot dir is a loud rc=2, not a crash
-    assert main(["snapshot-history", "--table", str(tmp_path / "nope")]) == 2
+    assert snapshot_version(path) == 3
+    assert snapshot_read(spark, path).count() == 500
 
 
 def test_snapshot_backfill_replaces_batch_partitions_only(spark, tmp_path):
-    """snapshot_backfill: the reader-safe backfill replaces exactly the
+    """A backfill through snapshot_merge (the batch holds one
+    partition's true rows, keyed on (p, k)) replaces exactly the
     batch's partitions as a NEW committed version — corruption repaired,
     siblings RE-REFERENCED in the manifest (the v2 root holds only the
     batch's partition; zero sibling file-system work), old snapshot
@@ -1876,8 +1780,8 @@ def test_snapshot_backfill_replaces_batch_partitions_only(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
         snapshot_manifest,
+        snapshot_merge,
         snapshot_read,
         snapshot_write,
     )
@@ -1895,8 +1799,8 @@ def test_snapshot_backfill_replaces_batch_partitions_only(spark, tmp_path):
         for f in glob.glob(os.path.join(snap1, "p=*", "*.parquet"))
     }
 
-    res = snapshot_backfill(df.filter("p = 'b'"), path, "p")
-    assert res["partitions_backfilled"] == 1
+    res = snapshot_merge(spark, df.filter("p = 'b'"), path, "p", ["p", "k"])
+    assert res["partitions_rewritten"] == 1
     assert (res["old_version"], res["new_version"]) == (1, 2)
     got = snapshot_read(spark, path)
     assert got.count() == 150
@@ -1918,7 +1822,7 @@ def test_snapshot_backfill_replaces_batch_partitions_only(spark, tmp_path):
         assert os.path.getsize(f) == size
 
     # replay idempotence: same batch again -> v3 with identical content
-    res2 = snapshot_backfill(df.filter("p = 'b'"), path, "p")
+    res2 = snapshot_merge(spark, df.filter("p = 'b'"), path, "p", ["p", "k"])
     assert res2["new_version"] == 3
     again = snapshot_read(spark, path)
     assert again.count() == 150
@@ -1931,14 +1835,14 @@ def test_snapshot_diff_scans_only_changed_partitions(spark, tmp_path):
     """snapshot_diff (r11; manifest-pruned since r12): row-level CDC
     between two retained versions. Untouched partitions keep the SAME
     manifest data-dir reference across versions and are pruned by pure
-    manifest compare (zero I/O); the diff is exactly the backfill's net
+    manifest compare (zero I/O); the diff is exactly the merge's net
     row changes, duplicates respected."""
     from pyspark.sql import functions as F
 
     from datawarehouse_group10_spark.sources.layout import (
         _diff_manifests,
-        snapshot_backfill,
         snapshot_diff,
+        snapshot_merge,
         snapshot_write,
     )
 
@@ -1950,7 +1854,7 @@ def test_snapshot_diff_scans_only_changed_partitions(spark, tmp_path):
         df.filter("p = 'b' AND k = 1")
     )
     snapshot_write(bad, path, "p")
-    snapshot_backfill(df.filter("p = 'b'"), path, "p")
+    snapshot_merge(spark, df.filter("p = 'b'"), path, "p", ["p", "k"])
 
     # manifest prune: only b's data-dir reference differs v1 -> v2
     assert sorted(_diff_manifests(path, 1, 2)[0]) == ["b"]
@@ -1966,20 +1870,17 @@ def test_snapshot_diff_scans_only_changed_partitions(spark, tmp_path):
 
     # identical content rewritten as v3: the ref changed (b -> v3) so b
     # is scanned, but the net diff is zero rows
-    snapshot_backfill(df.filter("p = 'b'"), path, "p")  # v3 == v2 content
+    snapshot_merge(spark, df.filter("p = 'b'"), path, "p", ["p", "k"])  # v3 == v2 content
     assert sorted(_diff_manifests(path, 2, 3)[0]) == ["b"]
     assert snapshot_diff(spark, path, 2, 3, "p").count() == 0
 
 
 def test_snapshot_time_travel_and_history(spark, tmp_path):
     """Time travel (r11; manifests since r12): snapshot_read(version=N)
-    reads the table AS OF commit N for any retained version; versions
-    above the pointer (uncommitted staging) and GC-reclaimed ones fail
-    loudly instead of silently reading wrong data. snapshot_history
-    lists the retained commits with manifest-derived stats and marks
-    the committed one. The v2 snapshot spans two version roots (a
-    carried from v1, b rewritten in v2) — the multi-root case the
-    single-dir snapshot_read_path shim refuses by design."""
+    reads the table AS OF commit N for any committed version; versions
+    above the pointer (uncommitted staging) fail loudly instead of
+    silently reading wrong data. The v2 snapshot spans two version
+    roots (a carried from v1, b rewritten in v2)."""
     import os
 
     import pytest as _pytest
@@ -1987,11 +1888,9 @@ def test_snapshot_time_travel_and_history(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
-        snapshot_gc,
-        snapshot_history,
+        snapshot_manifest,
+        snapshot_merge,
         snapshot_read,
-        snapshot_read_path,
         snapshot_version,
         snapshot_write,
     )
@@ -2002,12 +1901,11 @@ def test_snapshot_time_travel_and_history(spark, tmp_path):
         "p string, k int, v double",
     )
     snapshot_write(df, path, "p")
-    # the single-root committed v1 resolves to one directory
-    assert snapshot_read_path(path).endswith("v1")
+    assert snapshot_version(path) == 1
     fixed = df.withColumn(
         "v", F.when(F.col("p") == "b", F.col("v") + 1000).otherwise(F.col("v"))
     )
-    snapshot_backfill(fixed.filter("p = 'b'"), path, "p")
+    snapshot_merge(spark, fixed.filter("p = 'b'"), path, "p", ["p", "k"])
 
     # default read = committed v2; version=1 time-travels to the pre-fix
     # state; both are simultaneously scannable (immutable dirs).
@@ -2016,36 +1914,16 @@ def test_snapshot_time_travel_and_history(spark, tmp_path):
     new = snapshot_read(spark, path, version=2)
     assert old.filter("p = 'b'").agg(F.sum("v")).first()[0] == 190.0
     assert new.filter("p = 'b'").agg(F.sum("v")).first()[0] == 20190.0
-    # v2 spans roots v1 + v2: no single dir holds it
-    with _pytest.raises(ValueError, match="snapshot_read"):
-        snapshot_read_path(path, version=2)
-
-    # history: oldest first, committed marked, manifest stats populated
-    hist = snapshot_history(path)
-    assert [h["version"] for h in hist] == [1, 2]
-    assert [h["committed"] for h in hist] == [False, True]
-    assert all(h["rows"] == 40 and h["files"] > 0 and h["bytes"] > 0 for h in hist)
+    # v2 spans roots v1 + v2
+    assert {k: e["root"] for k, e in snapshot_manifest(path)["partitions"].items()} == {
+        "a": "v1", "b": "v2",
+    }
 
     # uncommitted staging (a crashed writer's orphan v3) is not readable
-    # and not marked committed in history
     os.makedirs(os.path.join(path, "v3"))
     with _pytest.raises(ValueError, match="above the committed pointer"):
         snapshot_read(spark, path, version=3)
-    assert [h["committed"] for h in snapshot_history(path)] == [
-        False,
-        True,
-        False,
-    ]
-
-    # GC reclaims v1's COMMIT -> time travel past the retention window
-    # is loud; v2 (which still references v1's p=a data) keeps reading
-    assert snapshot_gc(path, keep=1) == [1]
-    with _pytest.raises(FileNotFoundError, match="retention"):
-        snapshot_read(spark, path, version=1)
-    assert [h["version"] for h in snapshot_history(path)] == [2, 3]
-    assert snapshot_read(spark, path).filter(
-        "p = 'a'"
-    ).count() == 20  # v1/p=a survived the gc because v2 references it
+    assert snapshot_read(spark, path).count() == 40
 
 
 def test_snapshot_merge_all_verbs(spark, tmp_path):
@@ -2285,8 +2163,8 @@ def test_snapshot_read_stats_pruning(spark, tmp_path):
     full-scan answer. An empty match is a valid empty DataFrame, not
     an error."""
     from datawarehouse_group10_spark.sources.layout import (
+        _scan_plan,
         snapshot_read,
-        snapshot_scan_groups,
         snapshot_write,
     )
 
@@ -2297,7 +2175,7 @@ def test_snapshot_read_stats_pruning(spark, tmp_path):
     snapshot_write(
         spark.createDataFrame(rows, "k int, p string, v double"), path, "p"
     )
-    groups = snapshot_scan_groups(path, prune={"k": (300, 310)})
+    groups = _scan_plan(path, prune={"k": (300, 310)})[0]
     dirs = [d for _base, ds in groups for d in ds]
     assert len(dirs) == 1 and dirs[0].endswith("p=p3")
     got = (
@@ -2330,8 +2208,8 @@ def test_snapshot_optimistic_concurrency(spark, tmp_path, meta_store):
     from datawarehouse_group10_spark.sources.layout import (
         ConcurrentWriteError,
         _stage_version,
-        snapshot_backfill,
         snapshot_manifest,
+        snapshot_merge,
         snapshot_read,
         snapshot_version,
         snapshot_write,
@@ -2344,7 +2222,7 @@ def test_snapshot_optimistic_concurrency(spark, tmp_path, meta_store):
     )
     snapshot_write(df, path, "p")                                   # v1
     fix = df.filter("p = 'b'").withColumn("v", F.col("v") + 100)
-    snapshot_backfill(fix, path, "p")                               # v2
+    snapshot_merge(spark, fix, path, "p", ["p", "k"])               # v2
 
     # STALE writer: planned against v1 after v2 committed -> loses
     # loudly (its staging is orphaned, the table is untouched)
@@ -2356,7 +2234,7 @@ def test_snapshot_optimistic_concurrency(spark, tmp_path, meta_store):
     # CRASHED winner: simulate a writer that committed its token for
     # base v2 and wrote manifest v4 but died before the pointer swap
     fix2 = df.filter("p = 'a'").withColumn("v", F.col("v") + 500)
-    snapshot_backfill(fix2, path, "p")                              # v4?
+    snapshot_merge(spark, fix2, path, "p", ["p", "k"])              # v4?
     crashed = snapshot_version(path)
     # rewind the pointer to v2 and leave the token in place — exactly
     # the state a pre-swap crash leaves (written through the store so
@@ -2364,10 +2242,10 @@ def test_snapshot_optimistic_concurrency(spark, tmp_path, meta_store):
     meta_store.put_atomic(os.path.join(path, "_COMMITTED"), b"v2")
     # the next writer on base v2 rolls the winner forward, then loses
     with _pytest.raises(ConcurrentWriteError, match="replan"):
-        snapshot_backfill(fix, path, "p")
+        snapshot_merge(spark, fix, path, "p", ["p", "k"])
     assert snapshot_version(path) == crashed  # roll-forward happened
     # retry against the new committed version succeeds
-    res = snapshot_backfill(fix, path, "p")
+    res = snapshot_merge(spark, fix, path, "p", ["p", "k"])
     assert res["old_version"] == crashed
     got = snapshot_read(spark, path)
     assert got.filter("p = 'a'").agg(F.sum("v")).first()[0] == 5045.0
@@ -2432,7 +2310,7 @@ def test_snapshot_merge_schema_evolution(spark, tmp_path):
 def test_snapshot_two_live_writers_one_wins_one_retries(
     spark, tmp_path, meta_store
 ):
-    """OCC under REAL concurrency: two backfills race from the same
+    """OCC under REAL concurrency: two merges race from the same
     committed base in parallel threads. Exactly one commits; the loser
     raises ConcurrentWriteError without corrupting anything; its retry
     (replanned against the winner) lands BOTH changes."""
@@ -2440,7 +2318,7 @@ def test_snapshot_two_live_writers_one_wins_one_retries(
 
     from datawarehouse_group10_spark.sources.layout import (
         ConcurrentWriteError,
-        snapshot_backfill,
+        snapshot_merge,
         snapshot_read,
         snapshot_version,
         snapshot_write,
@@ -2459,7 +2337,7 @@ def test_snapshot_two_live_writers_one_wins_one_retries(
 
     def run(tag, batch):
         try:
-            results[tag] = snapshot_backfill(batch, path, "p")
+            results[tag] = snapshot_merge(spark, batch, path, "p", ["p", "k"])
         except ConcurrentWriteError as e:
             results[tag] = e
 
@@ -2475,8 +2353,8 @@ def test_snapshot_two_live_writers_one_wins_one_retries(
     assert len(wins) >= 1 and len(wins) + len(errs) == 2
     for tag in errs:
         # the loser retries against the new committed version
-        results[tag] = snapshot_backfill(
-            fix_a if tag == "a" else fix_b, path, "p"
+        results[tag] = snapshot_merge(
+            spark, fix_a if tag == "a" else fix_b, path, "p", ["p", "k"]
         )
     got = snapshot_read(spark, path)
     assert got.count() == 60
@@ -2484,111 +2362,6 @@ def test_snapshot_two_live_writers_one_wins_one_retries(
     assert got.filter("p = 'b'").agg(F.sum("v")).first()[0] == 4190.0
     assert got.filter("p = 'c'").agg(F.sum("v")).first()[0] == 190.0
     assert snapshot_version(path) >= 3
-
-
-def test_snapshot_gc_keeps_data_referenced_by_retained_versions(
-    spark, tmp_path
-):
-    """Reader-during-GC contract (r12, VERDICT r11 #8): gc reclaims
-    COMMITS outside the retention window, but every data directory a
-    retained manifest still references survives — a time-travel read
-    of a retained version keeps working through a gc of older
-    versions, while a read past retention fails loudly."""
-    import os
-
-    import pytest as _pytest
-
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
-        snapshot_gc,
-        snapshot_read,
-        snapshot_write,
-    )
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(m, i, float(i)) for m in ("a", "b", "c") for i in range(10)],
-        "p string, k int, v double",
-    )
-    snapshot_write(df, path, "p")                                   # v1
-    snapshot_backfill(
-        df.filter("p = 'b'").withColumn("v", F.col("v") + 100), path, "p"
-    )                                                               # v2
-    snapshot_backfill(
-        df.filter("p = 'c'").withColumn("v", F.col("v") + 200), path, "p"
-    )                                                               # v3
-
-    doomed = snapshot_gc(path, keep=2)
-    assert doomed == [1]
-    # retained v2 still references v1's p=a AND p=c dirs: both survive
-    assert os.path.isdir(os.path.join(path, "v1", "p=a"))
-    assert os.path.isdir(os.path.join(path, "v1", "p=c"))
-    # v1's p=b is referenced by NO retained manifest: reclaimed
-    assert not os.path.exists(os.path.join(path, "v1", "p=b"))
-    # time-travel read of retained v2 works end-to-end after the gc
-    old = snapshot_read(spark, path, version=2)
-    assert old.count() == 30
-    assert old.filter("p = 'c'").agg(F.sum("v")).first()[0] == 45.0
-    # reading past retention fails loudly
-    with _pytest.raises(FileNotFoundError, match="retention"):
-        snapshot_read(spark, path, version=1)
-    # the committed head is untouched
-    new = snapshot_read(spark, path)
-    assert new.filter("p = 'c'").agg(F.sum("v")).first()[0] == 2045.0
-
-
-def test_cli_snapshot_merge_subcommand(spark, tmp_path, monkeypatch, capsys):
-    """snapshot-merge through the argparse front door: upserts + flagged
-    deletes land as a new committed version; a batch missing a named
-    column exits 2 loudly."""
-    import datawarehouse_group10_spark.session as S
-    from datawarehouse_group10_spark.__main__ import main
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_read_path,
-        snapshot_write,
-    )
-
-    class _NoStop:
-        def __init__(self, s):
-            self._s = s
-
-        def __getattr__(self, name):
-            return getattr(self._s, name)
-
-        def stop(self):
-            pass
-
-    monkeypatch.setattr(S, "get_spark", lambda **k: _NoStop(spark))
-
-    table = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0)], "k int, p string, v double"
-    )
-    snapshot_write(base, table, "p")
-    batch_path = str(tmp_path / "batch")
-    spark.createDataFrame(
-        [(1, "a", 11.0, False), (2, "b", 0.0, True), (3, "c", 30.0, False)],
-        "k int, p string, v double, del boolean",
-    ).write.parquet(batch_path)
-
-    rc = main([
-        "snapshot-merge", "--input", batch_path, "--table", table,
-        "--partition-col", "p", "--key-cols", "k", "--delete-col", "del",
-    ])
-    assert rc == 0
-    assert "v1 -> v2" in capsys.readouterr().out
-    got = {
-        r["k"]: r["v"]
-        for r in spark.read.parquet(snapshot_read_path(table)).collect()
-    }
-    assert got == {1: 11.0, 3: 30.0}
-
-    rc = main([
-        "snapshot-merge", "--input", batch_path, "--table", table,
-        "--partition-col", "p", "--key-cols", "nope",
-    ])
-    assert rc == 2
-    assert "missing column" in capsys.readouterr().err
 
 
 def test_snapshot_time_travel_rejects_orphaned_loser_manifests(
@@ -2599,7 +2372,7 @@ def test_snapshot_time_travel_rejects_orphaned_loser_manifests(
     number, `version <= committed` alone would accept that
     never-committed state as readable history. Time travel validates
     against the commit chain (the succ_v* token lineage), so the
-    orphan raises loudly; gc(orphans=True) then reclaims it."""
+    orphan raises loudly."""
     import os
 
     import pytest as _pytest
@@ -2607,9 +2380,8 @@ def test_snapshot_time_travel_rejects_orphaned_loser_manifests(
     from datawarehouse_group10_spark.sources.layout import (
         ConcurrentWriteError,
         _commit_chain,
-        snapshot_backfill,
-        snapshot_gc,
         snapshot_manifest,
+        snapshot_merge,
         snapshot_read,
         snapshot_write,
     )
@@ -2623,7 +2395,7 @@ def test_snapshot_time_travel_rejects_orphaned_loser_manifests(
     # a stale writer stages v2 against base v1... but a faster writer
     # commits v2 first; the loser's staging lands as orphan v3
     fast = df.filter("p = 'a'").withColumn("v", F.col("v") + 100)
-    snapshot_backfill(fast, path, "p")                              # v2
+    snapshot_merge(spark, fast, path, "p", ["p", "k"])              # v2
     slow = df.filter("p = 'b'").withColumn("v", F.col("v") + 999)
     from datawarehouse_group10_spark.sources.layout import _stage_version
 
@@ -2637,26 +2409,19 @@ def test_snapshot_time_travel_rejects_orphaned_loser_manifests(
     # the loser's manifest v3 exists on disk...
     assert os.path.exists(os.path.join(path, "_manifests", "v3.json"))
     # ...and later commits advance the pointer past 3
-    snapshot_backfill(fast, path, "p")                              # v4
-    snapshot_backfill(fast, path, "p")                              # v5
+    snapshot_merge(spark, fast, path, "p", ["p", "k"])              # v4
+    snapshot_merge(spark, fast, path, "p", ["p", "k"])              # v5
     assert _commit_chain(path) == [1, 2, 4, 5]
     # v3 <= committed but NOT in the chain: never readable as history
     with _pytest.raises(ValueError, match="never committed"):
         snapshot_read(spark, path, version=3)
     # real chain members still time-travel fine
     assert snapshot_read(spark, path, version=2).count() == 20
-    # orphans=True quarantines the loser's manifest + staging
-    reclaimed = snapshot_gc(path, keep=10, orphans=True)
-    assert 3 in reclaimed
-    assert not os.path.exists(os.path.join(path, "_manifests", "v3.json"))
 
 
-def test_snapshot_gc_keeps_commit_tokens_and_pointer_is_monotonic(
-    spark, tmp_path
-):
-    """ADVICE r13: gc retains succ_v* commit tokens forever (deleting
-    a doomed base's token would let a stalled writer re-create it and
-    silently re-commit a dead version), and _snapshot_commit refuses
+def test_snapshot_commit_tokens_and_pointer_is_monotonic(spark, tmp_path):
+    """ADVICE r13: every base keeps its succ_v* commit token, each
+    published atomically with its content, and _snapshot_commit refuses
     to move the pointer to a lower version (the roll-forward TOCTOU:
     a descheduled loser replaying a stale roll-forward must not
     regress the pointer below a commit that landed in between)."""
@@ -2664,8 +2429,7 @@ def test_snapshot_gc_keeps_commit_tokens_and_pointer_is_monotonic(
 
     from datawarehouse_group10_spark.sources.layout import (
         _snapshot_commit,
-        snapshot_backfill,
-        snapshot_gc,
+        snapshot_merge,
         snapshot_version,
         snapshot_write,
     )
@@ -2675,13 +2439,10 @@ def test_snapshot_gc_keeps_commit_tokens_and_pointer_is_monotonic(
         [("a", i, float(i)) for i in range(10)], "p string, k int, v double"
     )
     snapshot_write(df, path, "p")                                   # v1
-    snapshot_backfill(df, path, "p")                                # v2
-    snapshot_backfill(df, path, "p")                                # v3
-    assert snapshot_gc(path, keep=1) == [1, 2]
+    snapshot_merge(spark, df, path, "p", ["p", "k"])                # v2
+    snapshot_merge(spark, df, path, "p", ["p", "k"])                # v3
     mdir = os.path.join(path, "_manifests")
     tokens = sorted(f for f in os.listdir(mdir) if f.startswith("succ_"))
-    # every base's token survives the gc (tiny, kept forever), and
-    # each one was published atomically WITH its content
     assert tokens == ["succ_v0", "succ_v1", "succ_v2"]
     for t in tokens:
         assert open(os.path.join(mdir, t)).read().strip().isdigit()
@@ -2786,14 +2547,13 @@ def test_snapshot_segment_chain_consolidates(spark, tmp_path, monkeypatch):
     """The segment chain is bounded: when a commit would push the list
     past SEGMENT_CONSOLIDATE_AT, it writes one consolidated segment
     instead (amortized O(touched) commits, bounded plan-time reads),
-    and gc reclaims segments no surviving version file references."""
+    and every segment the committed version file lists is on disk."""
     import os
 
     import datawarehouse_group10_spark.sources.layout as L
     from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
-        snapshot_gc,
         snapshot_manifest,
+        snapshot_merge,
         snapshot_read,
         snapshot_write,
     )
@@ -2809,7 +2569,7 @@ def test_snapshot_segment_chain_consolidates(spark, tmp_path, monkeypatch):
         fix = df.filter(F.col("p") == part).withColumn(
             "v", F.col("v") + 10 * (step + 1)
         )
-        snapshot_backfill(fix, path, "p")
+        snapshot_merge(spark, fix, path, "p", ["p", "k"])
         m = snapshot_manifest(path)
         # delta chain bounded; consolidation may add range shards
         # (r14), but at 6 partitions they collapse to one segment
@@ -2820,8 +2580,6 @@ def test_snapshot_segment_chain_consolidates(spark, tmp_path, monkeypatch):
     got = {r["p"]: r["v"] for r in snapshot_read(spark, path).collect()}
     assert got["p0"] == 40.0 and got["p1"] == 51.0 and got["p2"] == 62.0
     assert got["p3"] == 3.0  # never touched, carried through segments
-    # gc(keep=1) drops old version files; orphan segments go with them
-    snapshot_gc(path, keep=1)
     live = {s["i"] for s in snapshot_manifest(path)["segments"]}
     on_disk = {
         f[4:-5]
@@ -2829,23 +2587,21 @@ def test_snapshot_segment_chain_consolidates(spark, tmp_path, monkeypatch):
         if f.startswith("seg_")
     }
     assert live <= on_disk
-    assert on_disk <= live | {f"v{snapshot_manifest(path)['version']}"}
 
 
 def test_snapshot_multi_column_partitioning(spark, tmp_path):
     """Composite partitioning (r13, VERDICT r12 #3): snapshot APIs
     take an ordered list of partition columns; dirs nest a=x/b=y,
     manifest keys are 'x/y', and merge probing, stats pruning,
-    backfill, time travel, and gc all operate on the composite key."""
+    partition-scoped rewrites and time travel all operate on the
+    composite key."""
     import os
 
     from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
-        snapshot_gc,
+        _scan_plan,
         snapshot_manifest,
         snapshot_merge,
         snapshot_read,
-        snapshot_scan_groups,
         snapshot_write,
     )
 
@@ -2872,7 +2628,7 @@ def test_snapshot_multi_column_partitioning(spark, tmp_path):
     assert snapshot_read(
         spark, path, partitions={"US/2024-02"}
     ).count() == 5
-    groups = snapshot_scan_groups(path, prune={"k": (110, 114)})
+    groups = _scan_plan(path, prune={"k": (110, 114)})[0]
     pruned_dirs = [d for _b, dirs in groups for d in dirs]
     assert len(pruned_dirs) == 1 and pruned_dirs[0].endswith(
         os.path.join("region=US", "month=2024-01")
@@ -2898,24 +2654,21 @@ def test_snapshot_multi_column_partitioning(spark, tmp_path):
     assert got.filter("k = 123").count() == 0
     assert got.filter("region = 'AP'").first()["k"] == 7
 
-    # backfill one composite partition; untouched siblings re-referenced
+    # rewrite one composite partition; untouched siblings re-referenced
     fix = df.filter("region = 'US' AND month = '2024-01'").withColumn(
         "v", F.col("v") + 50
     )
-    res = snapshot_backfill(fix, path, ["region", "month"])
-    assert res["partitions_backfilled"] == 1
+    res = snapshot_merge(spark, fix, path, ["region", "month"], ["k"])
+    assert res["partitions_rewritten"] == 1
     m3 = snapshot_manifest(path)
     assert m3["partitions"]["US/2024-01"]["root"] == "v3"
     assert m3["partitions"]["EU/2024-02"]["root"] == "v1"
 
-    # time travel across the composite history + gc retention
+    # time travel across the composite history
     assert snapshot_read(spark, path, version=1).count() == 20
-    snapshot_gc(path, keep=1)
     assert snapshot_read(spark, path).filter(
         "region = 'US' AND month = '2024-01'"
     ).agg(F.sum("v")).first()[0] == 260.0
-    # v1 dirs still referenced by the live manifest survive the gc
-    assert os.path.isdir(os.path.join(path, "v1", "region=EU", "month=2024-02"))
 
 
 def test_snapshot_diff_stats_pruning(spark, tmp_path):
@@ -2925,8 +2678,8 @@ def test_snapshot_diff_stats_pruning(spark, tmp_path):
     count, oracle-identical rows after the caller's row filter."""
     import datawarehouse_group10_spark.sources.layout as L
     from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
         snapshot_diff,
+        snapshot_merge,
         snapshot_write,
     )
 
@@ -2937,11 +2690,11 @@ def test_snapshot_diff_stats_pruning(spark, tmp_path):
         "p string, k int, v double",
     )
     snapshot_write(df, path, "p")
-    # backfill rewrites THREE partitions (p2 changed values, p7, p9)
+    # the merge rewrites THREE partitions (p2 changed values, p7, p9)
     fix = df.filter("p in ('p2','p7','p9')").withColumn(
         "v", F.when(F.col("p") == "p2", F.col("v") + 1000).otherwise(F.col("v"))
     )
-    snapshot_backfill(fix, path, "p")
+    snapshot_merge(spark, fix, path, "p", ["k"])
 
     # unpruned: all three changed partitions scanned; only p2 differs
     full = snapshot_diff(spark, path, 1, 2, "p")
@@ -3040,8 +2793,8 @@ def test_snapshot_partition_value_pruning(spark, tmp_path):
     date-partitioned table drops partitions by key comparison, both
     in snapshot_read and composed with data-column stats pruning."""
     from datawarehouse_group10_spark.sources.layout import (
+        _scan_plan,
         snapshot_read,
-        snapshot_scan_groups,
         snapshot_write,
     )
 
@@ -3056,9 +2809,7 @@ def test_snapshot_partition_value_pruning(spark, tmp_path):
     )
     snapshot_write(df, path, "month")
     # string-range prune on the partition column: 3 of 12 months
-    groups = snapshot_scan_groups(
-        path, prune={"month": ("2024-03", "2024-05")}
-    )
+    groups = _scan_plan(path, prune={"month": ("2024-03", "2024-05")})[0]
     dirs = [d for _b, ds in groups for d in ds]
     assert len(dirs) == 3
     got = snapshot_read(spark, path, prune={"month": ("2024-03", "2024-05")})
@@ -3067,9 +2818,9 @@ def test_snapshot_partition_value_pruning(spark, tmp_path):
         == {"2024-03", "2024-04", "2024-05"}
     # composed: partition-value range AND a data-column stats range
     # that only month 04 satisfies (k 405-409; month 05 starts at 500)
-    groups2 = snapshot_scan_groups(
+    groups2 = _scan_plan(
         path, prune={"month": ("2024-03", "2024-05"), "k": (405, 495)}
-    )
+    )[0]
     dirs2 = [d for _b, ds in groups2 for d in ds]
     assert len(dirs2) == 1 and dirs2[0].endswith("month=2024-04")
 
@@ -3081,8 +2832,8 @@ def test_snapshot_commit_validation_is_o1(spark, tmp_path):
     during a time-travel manifest resolve on a long history."""
     import datawarehouse_group10_spark.sources.layout as L
     from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
         snapshot_manifest,
+        snapshot_merge,
         snapshot_write,
     )
 
@@ -3092,7 +2843,7 @@ def test_snapshot_commit_validation_is_o1(spark, tmp_path):
     )
     snapshot_write(df, path, "p")
     for _ in range(8):
-        snapshot_backfill(df, path, "p")  # v2..v9
+        snapshot_merge(spark, df, path, "p", ["k"])  # v2..v9
 
     reads = {"n": 0}
     real = L.PosixMetaStore.read
@@ -3119,21 +2870,20 @@ def test_snapshot_layout_randomized_against_model(
 ):
     """Model-based fuzz of the snapshot layout (r13; merge-on-read
     deletes joined r14): a seeded-random sequence of full-row merges,
-    partial (update_cols) merges, MOR deletes, backfills, and
-    compactions is mirrored into a plain Python dict
+    partial (update_cols) merges, MOR deletes, whole-partition
+    replacements, and compactions is mirrored into a plain Python dict
     model; after EVERY commit the committed snapshot must equal the
-    model exactly, every retained version must time-travel to its
-    recorded model state, and a final gc keeps the live state intact.
+    model exactly, and every retained version must time-travel to its
+    recorded model state.
     Catches cross-op interactions no single-op pytest stages (merge
-    after full-delete after backfill, tombstoned partitions getting
+    after full-delete after a replacement, tombstoned partitions getting
     re-created, segment-chain resolution across mixed writers).
-    Parametrized over BOTH MetaStores — the whole segment/commit/gc
+    Parametrized over BOTH MetaStores — the whole segment/commit
     metadata plane also runs against the in-memory fake."""
     import random
 
     from datawarehouse_group10_spark.sources.layout import (
         snapshot_compact,
-        snapshot_gc,
         snapshot_merge,
         snapshot_read,
         snapshot_write,
@@ -3276,7 +3026,7 @@ def test_snapshot_layout_randomized_against_model(
 
     for step in range(10):
         op = rng.choice(
-            ["merge", "merge", "merge_pc", "mor_delete", "backfill",
+            ["merge", "merge", "merge_pc", "mor_delete", "replace",
              "compact", "upsert_mor", "upsert_mor"]
         )
         if op == "merge":
@@ -3362,23 +3112,28 @@ def test_snapshot_layout_randomized_against_model(
                 spark, batch, path, "p", ["k"], delete_col="del"
             )
             version = st["new_version"]
-        elif op == "backfill":
-            from datawarehouse_group10_spark.sources.layout import (
-                snapshot_backfill,
-            )
-
+        elif op == "replace":
+            # replace partition p's rows: one merge deletes its live
+            # keys and upserts the new rows
             p = rng.choice(parts)
             rows = [
                 (k, p, float(rng.randint(200, 299)), f"b{step}")
                 for k in rng.sample(range(30, 60), rng.randint(1, 4))
             ]
+            new = {r[0] for r in rows}
+            gone = [k for k in model if model[k][0] == p and k not in new]
             for k in list(model):
                 if model[k][0] == p:
                     del model[k]
             for k, pp, v, tag in rows:
                 model[k] = (pp, v, tag)
-            st = snapshot_backfill(
-                spark.createDataFrame(rows, schema), path, "p"
+            batch = spark.createDataFrame(
+                [(k, p, 0.0, "x", True) for k in gone]
+                + [(*r, False) for r in rows],
+                schema + ", del boolean",
+            )
+            st = snapshot_merge(
+                spark, batch, path, "p", ["k"], delete_col="del"
             )
             version = st["new_version"]
         else:
@@ -3395,65 +3150,6 @@ def test_snapshot_layout_randomized_against_model(
             for r in snapshot_read(spark, path, version=v).collect()
         }
         assert got == snap_model, f"time travel to v{v} diverged"
-    # gc keeps the live state
-    snapshot_gc(path, keep=1)
-    assert read_state() == model
-
-
-def test_snapshot_restore_is_metadata_only_new_commit(spark, tmp_path):
-    """snapshot_restore (r13): rolls the table back to a retained
-    version AS A NEW COMMIT — pure segment re-reference, zero data
-    work, pointer stays monotonic, rolled-over versions stay readable
-    history, and gc after a restore keeps every data dir the restored
-    state references."""
-    import os
-
-    import pytest as _pytest
-
-    import datawarehouse_group10_spark.sources.layout as L
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
-        snapshot_gc,
-        snapshot_read,
-        snapshot_restore,
-        snapshot_version,
-        snapshot_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(m, i, float(i)) for m in ("a", "b") for i in range(10)],
-        "p string, k int, v double",
-    )
-    snapshot_write(df, path, "p")                                   # v1
-    bad = df.filter("p = 'b'").withColumn("v", F.col("v") + 666)
-    snapshot_backfill(bad, path, "p")                               # v2
-    snapshot_backfill(bad, path, "p")                               # v3
-    assert snapshot_read(spark, path).agg(
-        F.sum("v")
-    ).first()[0] == 45.0 + 45.0 + 6660.0
-
-    st = snapshot_restore(path, 1)
-    assert st == {"restored_to": 1, "old_version": 3, "new_version": 4}
-    # metadata-only: the restore commit wrote no data root content
-    assert L.LAST_COMMIT_META_BYTES < 1024
-    v4_root = os.path.join(path, "v4")
-    assert not os.path.isdir(v4_root) or os.listdir(v4_root) == []
-    # content equals v1; the rolled-over v3 is still readable history
-    assert snapshot_read(spark, path).agg(F.sum("v")).first()[0] == 90.0
-    assert snapshot_read(spark, path, version=3).agg(
-        F.sum("v")
-    ).first()[0] == 45.0 + 45.0 + 6660.0
-    assert snapshot_version(path) == 4
-
-    # restore-to-current is a no-op; restoring an orphan raises
-    assert snapshot_restore(path, 4)["new_version"] == 4
-    with _pytest.raises(ValueError):
-        snapshot_restore(path, 99)
-
-    # gc keeps the v1 data the restored head references
-    snapshot_gc(path, keep=1)
-    assert snapshot_read(spark, path).agg(F.sum("v")).first()[0] == 90.0
 
 
 def test_snapshot_compact_zorder_on_composite_partitions(spark, tmp_path):
@@ -3511,16 +3207,15 @@ def test_snapshot_crash_at_every_commit_step_recovers(
     """Crash injection at each stage of the commit protocol (r13):
     after the claim, during manifest build, before the CAS, and
     between the token and the pointer swap. After EVERY simulated
-    crash the committed snapshot is untouched, history marks the
-    wreckage as non-lineage, and the next writer allocates past it
+    crash the committed snapshot is untouched, the wreckage stays
+    outside the commit chain, and the next writer allocates past it
     and commits normally (rolling a token-holding winner forward)."""
     import pytest as _pytest
 
     import datawarehouse_group10_spark.sources.layout as L
     from datawarehouse_group10_spark.sources.layout import (
         ConcurrentWriteError,
-        snapshot_backfill,
-        snapshot_history,
+        snapshot_merge,
         snapshot_read,
         snapshot_version,
         snapshot_write,
@@ -3554,7 +3249,7 @@ def test_snapshot_crash_at_every_commit_step_recovers(
 
     monkeypatch.setattr(L, "_allocate_version", alloc_then_die)
     with _pytest.raises(Boom):
-        snapshot_backfill(fix, path, "p")
+        snapshot_merge(spark, fix, path, "p", ["p", "k"])
     monkeypatch.setattr(L, "_allocate_version", real_alloc)
     assert state() == baseline
 
@@ -3566,7 +3261,7 @@ def test_snapshot_crash_at_every_commit_step_recovers(
 
     monkeypatch.setattr(L, "_partition_entry", entry_then_die)
     with _pytest.raises(Boom):
-        snapshot_backfill(fix, path, "p")
+        snapshot_merge(spark, fix, path, "p", ["p", "k"])
     monkeypatch.setattr(L, "_partition_entry", real_entry)
     assert state() == baseline
 
@@ -3578,14 +3273,16 @@ def test_snapshot_crash_at_every_commit_step_recovers(
 
     monkeypatch.setattr(L, "_snapshot_commit_cas", cas_die)
     with _pytest.raises(Boom):
-        snapshot_backfill(fix, path, "p")
+        snapshot_merge(spark, fix, path, "p", ["p", "k"])
     monkeypatch.setattr(L, "_snapshot_commit_cas", real_cas)
     assert state() == baseline
     # the pre-CAS wreck left a manifest but no commit: non-lineage
+    chain = set(L._commit_chain(path))
     wrecks = [
-        h for h in snapshot_history(path) if not h["lineage"]
+        v for v in L._snapshot_versions(path)
+        if v not in chain and L._manifest_read(path, v) is not None
     ]
-    assert wrecks, "expected orphaned staging in history"
+    assert wrecks, "expected orphaned staging outside the commit chain"
 
     # 4. crash between the commit token and the pointer swap
     real_ptr = L._snapshot_commit
@@ -3597,7 +3294,7 @@ def test_snapshot_crash_at_every_commit_step_recovers(
 
     monkeypatch.setattr(L, "_snapshot_commit", ptr_die)
     with _pytest.raises(Boom):
-        snapshot_backfill(fix, path, "p")
+        snapshot_merge(spark, fix, path, "p", ["p", "k"])
     monkeypatch.setattr(L, "_snapshot_commit", real_ptr)
     assert calls["n"] == 1
     assert state() == baseline  # pointer never moved
@@ -3605,20 +3302,20 @@ def test_snapshot_crash_at_every_commit_step_recovers(
     # recovery: the next writer on the same base rolls the
     # token-holding winner forward, loses loudly, and its retry lands
     with _pytest.raises(ConcurrentWriteError, match="replan"):
-        snapshot_backfill(fix, path, "p")
+        snapshot_merge(spark, fix, path, "p", ["p", "k"])
     rolled = snapshot_version(path)
     assert sorted(
         (r["p"], r["k"], r["v"])
         for r in snapshot_read(spark, path).collect()
-    ) != baseline  # the crashed winner's backfill is now live
-    res = snapshot_backfill(fix, path, "p")
+    ) != baseline  # the crashed winner's merge is now live
+    res = snapshot_merge(spark, fix, path, "p", ["p", "k"])
     assert res["old_version"] == rolled
     got = state()
     assert [t for t in got if t[0] == "b"][0][2] == 100.0
-    # every surviving history wreck is non-lineage; the live chain is
-    assert all(
-        h["lineage"] or not h["committed"] for h in snapshot_history(path)
-    )
+    # the committed version is on the commit chain; the wrecks are not
+    chain = L._commit_chain(path)
+    assert snapshot_version(path) in chain
+    assert not set(wrecks) & set(chain)
 
 
 def test_snapshot_merge_prunes_on_partition_key_columns(spark, tmp_path):
@@ -3860,13 +3557,12 @@ def test_snapshot_layout_rejects_null_partition_values(spark, tmp_path):
     silently skips NULL legs, so without the guard a NULL-valued
     partition computed a collapsed key that never matches the
     __HIVE_DEFAULT_PARTITION__ directory Spark writes — a merge could
-    drop the partition's survivors. Write, merge, and backfill all
-    raise instead."""
+    drop the partition's survivors. Write and merge both raise
+    instead."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
     from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
         snapshot_merge,
         snapshot_write,
     )
@@ -3883,8 +3579,6 @@ def test_snapshot_layout_rejects_null_partition_values(spark, tmp_path):
     snapshot_write(ok, path, "p")
     with pytest.raises(Exception, match="NULL"):
         snapshot_merge(spark, bad, path, "p", ["k"])
-    with pytest.raises(Exception, match="NULL"):
-        snapshot_backfill(bad, path, "p")
 
 
 def test_snapshot_scoped_resolve_reads_o1_metadata(spark, tmp_path, monkeypatch):
@@ -4417,43 +4111,33 @@ def test_snapshot_delete_key_set_is_table_level(spark, tmp_path):
         )
 
 
-def test_snapshot_delete_compact_folds_and_gc_reclaims(spark, tmp_path):
+def test_snapshot_delete_compact_folds(spark, tmp_path):
     """snapshot_compact treats dv-carrying partitions as fragmented:
     the rewrite reads through the deletes, drops the refs, recomputes
-    the touched blooms; gc then reclaims the unreferenced delete
-    files; the no-op property holds on the folded table; and
-    snapshot_read_path refuses a dv-carrying snapshot."""
-    import glob
-
+    the touched blooms, and lands every partition in its own version
+    root; the no-op property holds on the folded table."""
     from datawarehouse_group10_spark.sources.layout import (
         snapshot_compact,
         snapshot_delete,
-        snapshot_gc,
         snapshot_manifest,
         snapshot_read,
-        snapshot_read_path,
     )
 
     path = _stage_mor_table(spark, tmp_path)
     snapshot_delete(
         spark, spark.createDataFrame([(3,), (7,)], "k int"), path, "p", ["k"]
     )
-    with pytest.raises(ValueError, match="merge-on-read"):
-        snapshot_read_path(path)
     kb_before = snapshot_manifest(path)["partitions"]["a"]["kb"]
     st = snapshot_compact(spark, path, "p")
     assert st["partitions_compacted"] == 3  # all dv-carrying
     m = snapshot_manifest(path)
     assert all("dv" not in e for e in m["partitions"].values())
     assert m["partitions"]["a"]["kb"] != kb_before  # recomputed, tighter
+    assert {e["root"] for e in m["partitions"].values()} == {f"v{st['new_version']}"}
     assert snapshot_read(spark, path).count() == 24
-    snapshot_read_path(path)  # single-root again after the fold
     # clean-table no-op property preserved
     st2 = snapshot_compact(spark, path, "p")
     assert st2["old_version"] == st2["new_version"]
-    snapshot_gc(path, keep=1)
-    assert glob.glob(f"{path}/v*/_dv/**/*.parquet", recursive=True) == []
-    assert snapshot_read(spark, path).count() == 24
 
 
 def test_snapshot_delete_diff_sees_dv_only_change(spark, tmp_path):
@@ -4512,16 +4196,11 @@ def test_snapshot_as_of_timestamp_time_travel(spark, tmp_path):
     """TIMESTAMP AS OF (r14): every commit stamps its wall time; an
     as-of read resolves to the latest retained commit at or before
     the instant (ISO strings and naive datetimes read as UTC);
-    pre-first-commit instants raise; gc'ing a version past retention
-    removes it from as-of reach (the next-older RETAINED commit
-    wins... and if none is retained at that instant, it raises)."""
+    pre-first-commit instants raise."""
     import datetime
     import time as _t
 
     from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
-        snapshot_gc,
-        snapshot_history,
         snapshot_read,
         snapshot_version_at,
         snapshot_write,
@@ -4539,7 +4218,7 @@ def test_snapshot_as_of_timestamp_time_travel(spark, tmp_path):
     _t.sleep(0.02)
     t1 = _t.time()
     _t.sleep(0.02)
-    snapshot_backfill(
+    snapshot_write(
         spark.createDataFrame(
             [("a", 2, 2.0)], "p string, k int, v double"
         ),
@@ -4564,95 +4243,6 @@ def test_snapshot_as_of_timestamp_time_travel(spark, tmp_path):
         snapshot_version_at(path, t0)
     with pytest.raises(ValueError, match="exclusive"):
         snapshot_read(spark, path, version=1, as_of=t1)
-    # history exposes the anchors
-    hs = {h["version"]: h for h in snapshot_history(path)}
-    assert hs[1]["ts"] < hs[2]["ts"]
-    # past retention, v1 leaves as-of reach
-    snapshot_gc(path, keep=1)
-    with pytest.raises(ValueError, match="predates"):
-        snapshot_version_at(path, t1)
-    assert snapshot_version_at(path, t2) == 2
-
-
-def test_snapshot_write_audit_publish(spark, tmp_path):
-    """WAP (r14): a merge staged with publish=False is invisible to
-    every normal read; snapshot_read(staged=True) audits it;
-    snapshot_publish commits it through the normal token CAS
-    (idempotent on republish); a base that moved during the audit
-    fails the publish with ConcurrentWriteError and the abandoned
-    staging is gc(orphans=True) food."""
-    import pytest as _pytest
-
-    from datawarehouse_group10_spark.sources.layout import (
-        ConcurrentWriteError,
-        snapshot_backfill,
-        snapshot_gc,
-        snapshot_merge,
-        snapshot_publish,
-        snapshot_read,
-        snapshot_version,
-        snapshot_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    snapshot_write(
-        spark.createDataFrame(
-            [("a", 1, 1.0), ("b", 2, 2.0)], "p string, k int, v double"
-        ),
-        path, "p",
-    )
-    batch = spark.createDataFrame(
-        [("a", 1, 11.0, False), ("a", 3, 3.0, False)],
-        "p string, k int, v double, del boolean",
-    )
-    st = snapshot_merge(
-        spark, batch, path, "p", ["k"], delete_col="del", publish=False
-    )
-    staged_v = st["new_version"]
-    assert snapshot_version(path) == 1  # pointer untouched
-    # normal reads can't see the staging (explicitly or by default)
-    assert {r["k"] for r in snapshot_read(spark, path).collect()} == {1, 2}
-    with _pytest.raises(ValueError, match="above the committed"):
-        snapshot_read(spark, path, version=staged_v)
-    # the audit read sees the would-be commit
-    audit = {
-        r["k"]: r["v"]
-        for r in snapshot_read(
-            spark, path, version=staged_v, staged=True
-        ).collect()
-    }
-    assert audit == {1: 11.0, 2: 2.0, 3: 3.0}
-    # publish -> visible; republish -> idempotent
-    assert snapshot_publish(path, staged_v)["already"] == 0
-    assert snapshot_version(path) == staged_v
-    assert {
-        r["k"]: r["v"] for r in snapshot_read(spark, path).collect()
-    } == audit
-    assert snapshot_publish(path, staged_v)["already"] == 1
-    assert snapshot_version(path) == staged_v
-
-    # conflict: stage, let a backfill win the base, publish loses
-    st2 = snapshot_merge(
-        spark,
-        spark.createDataFrame(
-            [("a", 1, 99.0, False)], "p string, k int, v double, del boolean"
-        ),
-        path, "p", ["k"], delete_col="del", publish=False,
-    )
-    bf = snapshot_backfill(
-        spark.createDataFrame(
-            [("c", 7, 7.0)], "p string, k int, v double"
-        ),
-        path, "p",
-    )
-    with _pytest.raises(ConcurrentWriteError):
-        snapshot_publish(path, st2["new_version"])
-    # the loser's staging never became visible; orphan gc reclaims it
-    assert snapshot_version(path) == bf["new_version"]
-    reclaimed = snapshot_gc(path, keep=1, orphans=True)
-    assert st2["new_version"] in reclaimed
-    got = {r["k"]: r["v"] for r in snapshot_read(spark, path).collect()}
-    assert got == {1: 11.0, 2: 2.0, 3: 3.0, 7: 7.0}
 
 
 def test_snapshot_partition_spec_evolution(spark, tmp_path):
@@ -4661,14 +4251,13 @@ def test_snapshot_partition_spec_evolution(spark, tmp_path):
     their directory layout (read through pc_history), a MERGE lazily
     migrates the partitions it probes, OPTIMIZE bulk-migrates the
     rest and drops the history, time travel to pre-evolution versions
-    keeps working, and gc after migration keeps the live state."""
+    keeps working, and the migrated live state stays intact."""
     import glob
     import os
 
     from datawarehouse_group10_spark.sources.layout import (
         snapshot_compact,
         snapshot_evolve_partitioning,
-        snapshot_gc,
         snapshot_manifest,
         snapshot_merge,
         snapshot_read,
@@ -4733,7 +4322,6 @@ def test_snapshot_partition_spec_evolution(spark, tmp_path):
     assert {r["p"] for r in tt.select("p").distinct().collect()} == {
         "m0", "m1", "m2"
     }
-    snapshot_gc(path, keep=1)
     assert snapshot_read(spark, path).count() == 30
 
 
@@ -4951,65 +4539,6 @@ def test_snapshot_delete_rekey_after_folding(spark, tmp_path):
     )
     assert st2["partitions_touched"] == 1
     assert snapshot_read(spark, path).count() == 8  # k=3, u=40 gone
-
-
-def test_wap_publish_restamps_as_of_anchor(spark, tmp_path):
-    """ADVICE r14 #3 (low): a WAP commit's TIMESTAMP-AS-OF anchor is
-    its PUBLISH time, not its staging time — an as-of query for an
-    instant inside the audit window must resolve the pre-publish
-    state (Delta anchors on commit time)."""
-    import time
-
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_merge,
-        snapshot_publish,
-        snapshot_version,
-        snapshot_version_at,
-        snapshot_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [("a", 1, 1.0), ("b", 2, 2.0)], "p string, k int, v double"
-    )
-    snapshot_write(df, path, "p")
-    v1 = snapshot_version(path)
-    st = snapshot_merge(
-        spark,
-        spark.createDataFrame([("a", 3, 3.0)], "p string, k int, v double"),
-        path, "p", ["k"], publish=False,
-    )
-    time.sleep(0.05)
-    t_mid = time.time()  # inside the audit window: v2 staged, unpublished
-    time.sleep(0.05)
-    snapshot_publish(path, st["new_version"])
-    assert snapshot_version(path) == st["new_version"]
-    # at t_mid no reader could observe the staged commit
-    assert snapshot_version_at(path, t_mid) == v1
-    assert snapshot_version_at(path, time.time()) == st["new_version"]
-
-
-def test_cli_parse_prune_forms():
-    """ADVICE r14 #4 (low): col=lo..hi handles bounds that carry
-    colons (ISO timestamps); the legacy colon form still parses
-    colon-free bounds and refuses ambiguous ones."""
-    import pytest as _pytest
-
-    from datawarehouse_group10_spark.__main__ import _parse_prune
-
-    assert _parse_prune("d=2020-01-01..2020-06-30") == (
-        "d", "2020-01-01", "2020-06-30"
-    )
-    assert _parse_prune(
-        "ts=2020-01-01T00:00:00..2020-02-01T12:30:00"
-    ) == ("ts", "2020-01-01T00:00:00", "2020-02-01T12:30:00")
-    assert _parse_prune("d:2020-01-01:2020-06-30") == (
-        "d", "2020-01-01", "2020-06-30"
-    )
-    with _pytest.raises(SystemExit):
-        _parse_prune("ts:2020-01-01T00:00:00:2020-02-01T12:30:00")
-    with _pytest.raises(SystemExit):
-        _parse_prune("d=2020-01-01")
 
 
 def test_spec_migration_keeps_scoped_resolves_and_probe_pruning(
@@ -5596,74 +5125,6 @@ def test_compact_clears_schema_log_when_no_old_roots(spark, tmp_path):
     assert tt.columns == ["p", "k", "cnt"]
 
 
-def test_wap_covers_mor_verbs(spark, tmp_path):
-    """publish=False (write-audit-publish) composes with the MOR
-    verbs: a staged snapshot_delete / snapshot_upsert_mor is invisible
-    until snapshot_publish, auditable via staged=True."""
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_delete,
-        snapshot_publish,
-        snapshot_read,
-        snapshot_upsert_mor,
-        snapshot_version,
-        snapshot_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [("a", 1, 1.0), ("a", 2, 2.0), ("b", 3, 3.0)],
-        "p string, k int, v double",
-    )
-    snapshot_write(df, path, "p")
-    st = snapshot_delete(
-        spark, spark.createDataFrame([(2,)], "k int"), path, "p",
-        ["k"], publish=False,
-    )
-    assert snapshot_version(path) == st["old_version"]
-    assert snapshot_read(spark, path).count() == 3  # invisible
-    audit = snapshot_read(
-        spark, path, version=st["new_version"], staged=True
-    )
-    assert audit.count() == 2
-    snapshot_publish(path, st["new_version"])
-    assert snapshot_read(spark, path).count() == 2
-
-    st2 = snapshot_upsert_mor(
-        spark,
-        spark.createDataFrame([("b", 3, 33.0), ("b", 4, 4.0)],
-                              "p string, k int, v double"),
-        path, "p", ["k"], publish=False,
-    )
-    assert snapshot_read(spark, path).count() == 2  # still invisible
-    snapshot_publish(path, st2["new_version"])
-    got = {r["k"]: r["v"] for r in snapshot_read(spark, path).collect()}
-    assert got == {1: 1.0, 3: 33.0, 4: 4.0}
-
-
-def test_snapshot_gc_dry_run_deletes_nothing(spark, tmp_path):
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_backfill,
-        snapshot_gc,
-        snapshot_read,
-        snapshot_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [("a", 1, 1.0), ("b", 2, 2.0)], "p string, k int, v double"
-    )
-    snapshot_write(df, path, "p")
-    snapshot_backfill(
-        df.filter("p = 'a'").withColumn("v", F.col("v") + 1),
-        path, "p",
-    )
-    preview = snapshot_gc(path, keep=1, dry_run=True)
-    assert preview == [1]
-    # nothing deleted: v1 still time-travels
-    assert snapshot_read(spark, path, version=1).count() == 2
-    assert snapshot_gc(path, keep=1) == [1]  # the real run matches
-
-
 def test_stream_cdc_exactly_once_token_skips_replay(spark, tmp_path):
     """exactly_once_id (r15): a checkpoint-replayed microbatch is a
     provable no-op. Simulated by re-running the SAME change files
@@ -5735,7 +5196,6 @@ def test_spec_evolution_randomized_against_model(spark, tmp_path):
     from datawarehouse_group10_spark.sources.layout import (
         snapshot_compact,
         snapshot_evolve_partitioning,
-        snapshot_gc,
         snapshot_manifest,
         snapshot_merge,
         snapshot_read,
@@ -5830,8 +5290,6 @@ def test_spec_evolution_randomized_against_model(spark, tmp_path):
             for r in snapshot_read(spark, path, version=v).collect()
         }
         assert got == snap_model, f"time travel to v{v} diverged"
-    snapshot_gc(path, keep=1)
-    assert read_state() == model
 
 
 def test_schema_evolution_randomized_against_model(spark, tmp_path):
@@ -5847,7 +5305,6 @@ def test_schema_evolution_randomized_against_model(spark, tmp_path):
     from datawarehouse_group10_spark.sources.layout import (
         snapshot_compact,
         snapshot_evolve_schema,
-        snapshot_gc,
         snapshot_merge,
         snapshot_read,
         snapshot_upsert_mor,
@@ -5993,10 +5450,6 @@ def test_schema_evolution_randomized_against_model(spark, tmp_path):
             for k, vv in snap_rows.items()
         }
         assert got == want, f"time travel to v{v} diverged"
-    snapshot_gc(path, keep=1)
-    assert read_state() == {
-        k: {c: v.get(c) for c in cols} for k, v in rows.items()
-    }
 
 
 def test_snapshot_diff_across_schema_evolution(spark, tmp_path):
@@ -6101,7 +5554,6 @@ def test_evolve_schema_guards_and_rekeys_bloom_columns(spark, tmp_path):
         snapshot_manifest,
         snapshot_merge,
         snapshot_read,
-        snapshot_set_key_bloom,
         snapshot_write,
     )
 
@@ -6115,9 +5567,9 @@ def test_evolve_schema_guards_and_rekeys_bloom_columns(spark, tmp_path):
         for e in snapshot_manifest(path)["partitions"].values()
     )
 
-    # DROP of the bloom column: refused with a pointer to the
-    # policy-clearing verb
-    with pytest.raises(ValueError, match="key-bloom"):
+    # DROP of the bloom column: refused with a pointer to a reload
+    # under another policy
+    with pytest.raises(ValueError, match="key-bloom.*snapshot_write"):
         snapshot_evolve_schema(path, drop=["id"])
 
     # WIDEN int -> bigint: metadata commit succeeds, policy gen bumps
@@ -6162,17 +5614,12 @@ def test_evolve_schema_guards_and_rekeys_bloom_columns(spark, tmp_path):
     got = {r["uid"]: r["v"] for r in snapshot_read(spark, path).collect()}
     assert got[301] == -4.0 and got[105] == -1.0
 
-    # CLEAR the policy, then the drop goes through
-    snapshot_set_key_bloom(path, None)
+    # the refusal's advice: reload without a policy, then the drop
+    # goes through
+    snapshot_write(snapshot_read(spark, path), path, "p")
     assert "key_bloom" not in snapshot_manifest(path)
     snapshot_evolve_schema(path, drop=["uid"])
     assert snapshot_read(spark, path).columns == ["p", "v"]
-
-    # RE-KEY: a fresh policy over v starts a new generation past every
-    # digest ever written
-    snapshot_set_key_bloom(path, ["v"])
-    m = snapshot_manifest(path)
-    assert m["key_bloom"]["cols"] == ["v"] and m["key_bloom"]["gen"] >= 3
 
 
 def test_exactly_once_tokens_merge_per_key(spark, tmp_path):
@@ -6275,7 +5722,7 @@ def test_diff_from_side_survives_schema_log_drop(spark, tmp_path):
 
 def test_wide_commit_footer_stats_are_one_job_not_driver_io(spark, tmp_path):
     """Commit-time footer-stat collection is DISTRIBUTED past the
-    small-commit threshold (r16, VERDICT r15 #1): a backfill touching
+    small-commit threshold (r16, VERDICT r15 #1): a write touching
     many partitions collects every freshly-written file's stats
     (rows/bytes/column bounds for the entry, row counts for bloom
     sizing) in O(1) executor jobs — ZERO serial driver footer reads —
@@ -6690,7 +6137,7 @@ def test_combined_schema_and_spec_evolution_fuzz(spark, tmp_path, seed):
     the MERGE KEY and bloom column k), merge-on-read upserts and
     deletes (which since r16 commit mid-migration AND under
     outstanding-delete schema evolution), copy-on-write merges,
-    compacts, and a final gc — mirrored into a dict model. After
+    and compacts — mirrored into a dict model. After
     every commit the committed snapshot must equal the model under
     the CURRENT column set, every retained version must time-travel
     to its recorded (columns, rows) state, and guard refusals
@@ -6705,10 +6152,8 @@ def test_combined_schema_and_spec_evolution_fuzz(spark, tmp_path, seed):
         snapshot_delete,
         snapshot_evolve_partitioning,
         snapshot_evolve_schema,
-        snapshot_gc,
         snapshot_manifest,
         snapshot_read,
-        snapshot_rebuild_blooms,
         snapshot_upsert_mor,
         snapshot_merge,
         snapshot_write,
@@ -6757,29 +6202,9 @@ def test_combined_schema_and_spec_evolution_fuzz(spark, tmp_path, seed):
     for step in range(14):
         op = rng.choice(
             ["merge", "upsert_mor", "upsert_mor", "mor_delete",
-             "evolve_spec", "evolve_schema", "compact", "widen_k",
-             "rebuild_blooms"]
+             "evolve_spec", "evolve_schema", "compact", "widen_k"]
         )
-        if op == "rebuild_blooms":
-            # r17 (VERDICT r16 #2): metadata-only digest recompute —
-            # after it, EVERY entry must carry a current-generation
-            # digest (which arms the false-negative invariant below
-            # for partitions a widen had degraded to "no pruning")
-            st = snapshot_rebuild_blooms(spark, path)
-            mm_rb = snapshot_manifest(path)
-            kb_spec_rb = mm_rb.get("key_bloom")
-            assert kb_spec_rb is not None
-            for pv, e in mm_rb["partitions"].items():
-                kb = e.get("kb")
-                assert (
-                    kb is not None
-                    and kb.get("gen") == kb_spec_rb.get("gen")
-                    and list(kb["cols"]) == list(kb_spec_rb["cols"])
-                ), f"stale digest on {pv} survived rebuild (step {step})"
-            if st["new_version"] == st["old_version"]:
-                continue  # nothing was stale: no commit happened
-            version = st["new_version"]
-        elif op == "evolve_spec":
+        if op == "evolve_spec":
             # r16: the respec commits even with outstanding delete
             # files (epoch-aware application) — no fold required
             nxt = rng.choice(
@@ -6986,8 +6411,6 @@ def test_combined_schema_and_spec_evolution_fuzz(spark, tmp_path, seed):
             for k, d in snap_model.items()
         }
         assert got == want, f"time travel to v{v} diverged"
-    snapshot_gc(path, keep=1)
-    assert read_state() == {k: row_tuple(d) for k, d in model.items()}
     m = snapshot_manifest(path)
     assert m["n_live"] == len(m["partitions"])
 
@@ -7389,119 +6812,6 @@ def test_dv_rows_counted_once_across_shared_old_homes(spark, tmp_path):
     assert {"p0", "p1"} <= set(owners)
     got = {r["k"] for r in snapshot_read(spark, path).collect()}
     assert got == set(range(12)) - {1, 3}
-
-
-def test_set_key_bloom_rejects_bad_hashes(spark, tmp_path):
-    """hashes < 1 (or a non-int) is rejected AT POLICY-SET TIME (r17,
-    ADVICE r16 #4) instead of surfacing later as a ZeroDivisionError
-    inside the first merge's bloom sizing."""
-    import pytest as _pytest
-
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_set_key_bloom,
-        snapshot_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    snapshot_write(
-        spark.createDataFrame([(1, "a")], "k int, p string"), path, "p"
-    )
-    for bad in (0, -2, "3", 1.5):
-        with _pytest.raises(ValueError, match="hashes"):
-            snapshot_set_key_bloom(path, ["k"], hashes=bad)
-    st = snapshot_set_key_bloom(path, ["k"], hashes=6)  # valid
-    assert st["new_version"] > st["old_version"]
-
-
-def test_rebuild_blooms_restores_pruning_after_widen(spark, tmp_path):
-    """snapshot_rebuild_blooms (r17, VERDICT r16 #2): a key-column
-    widen bumps the bloom policy generation, correctly degrading every
-    existing digest to "no pruning" — but on a mostly-cold table that
-    state persists until each partition happens to be rewritten. The
-    rebuild verb recomputes current-generation digests from a scan
-    (hashing at the CURRENT, widened type) and commits them
-    metadata-only: probe pruning returns with zero data rewritten."""
-    import pytest as _pytest
-
-    from datawarehouse_group10_spark.sources.layout import (
-        snapshot_delete,
-        snapshot_evolve_schema,
-        snapshot_manifest,
-        snapshot_merge,
-        snapshot_read,
-        snapshot_rebuild_blooms,
-        snapshot_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    # even keys interleaved across partitions: every partition's [min,
-    # max] spans the whole domain, so RANGE stats prune nothing and
-    # pruning is attributable to the blooms alone
-    rows = [
-        (k, f"p{(k // 2) % 3}", float(k)) for k in range(0, 30, 2)
-    ]
-    snapshot_write(
-        spark.createDataFrame(rows, "k int, p string, v double"),
-        path, "p", key_bloom=["k"],
-    )
-
-    def probe_absent():
-        # k=9: odd (absent everywhere), inside every range — probes
-        # nothing exactly when digests prune; rewrites nothing either
-        st = snapshot_delete(
-            spark, spark.createDataFrame([(9,)], "k bigint").selectExpr(
-                f"cast(k as {k_t}) as k"
-            ),
-            path, "p", ["k"],
-        )
-        return st["probe_partitions"]
-
-    k_t = "int"
-    assert probe_absent() == 0  # fresh digests: all 3 pruned
-
-    # MOR-delete k=4 so the rebuild scan must EXCLUDE dv'd rows
-    snapshot_delete(
-        spark, spark.createDataFrame([(4,)], "k int"), path, "p", ["k"]
-    )
-    st = snapshot_evolve_schema(path, widen={"k": "bigint"})
-    k_t = "bigint"
-    gen = snapshot_manifest(path)["key_bloom"]["gen"]
-    assert gen >= 1
-    assert probe_absent() == 3  # stale digests: pruning is OFF
-
-    st = snapshot_rebuild_blooms(spark, path)
-    assert st["rebuilt"] == 3 and st["new_version"] > st["old_version"]
-    m = snapshot_manifest(path)
-    for pv, e in m["partitions"].items():
-        assert e["kb"].get("gen") == gen, pv
-        assert e["root"] == "v1", pv  # data roots untouched
-    assert probe_absent() == 0  # pruning restored
-    # the dv'd key is out of the rebuilt digest: probing it hits nothing
-    st = snapshot_delete(
-        spark, spark.createDataFrame([(4,)], "k bigint"), path, "p", ["k"]
-    )
-    assert st["probe_partitions"] == 0 and st["dv_rows"] == 0
-    # idempotent: nothing stale -> no commit
-    st = snapshot_rebuild_blooms(spark, path)
-    assert st["rebuilt"] == 0 and st["new_version"] == st["old_version"]
-    # no false negative on live keys: a merge finds its row
-    st = snapshot_merge(
-        spark,
-        spark.createDataFrame([(6, "p0", -6.0)],
-                              "k bigint, p string, v double"),
-        path, "p", ["k"],
-    )
-    got = {r["k"]: r["v"] for r in snapshot_read(spark, path).collect()}
-    assert got[6] == -6.0 and 4 not in got and len(got) == 14
-    # guards: unknown partition; no policy
-    with _pytest.raises(ValueError, match="unknown partition"):
-        snapshot_rebuild_blooms(spark, path, partitions={"nope"})
-    path2 = str(tmp_path / "nopolicy")
-    snapshot_write(
-        spark.createDataFrame([(1, "a")], "k int, p string"), path2, "p"
-    )
-    with _pytest.raises(ValueError, match="no key-bloom policy"):
-        snapshot_rebuild_blooms(spark, path2)
 
 
 def test_cdf_consume_materializes_each_window_once(spark, tmp_path):

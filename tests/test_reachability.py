@@ -3,8 +3,9 @@ defines nothing that nothing runs.
 
 Every ``q_*`` body in ``contract.py`` has a caller, every top-level package
 def is reachable from the system's entry points, every ``__all__`` name of
-every package module resolves, and every test the package sources or
-PARITY.md cite exists.
+every package module resolves, every test the package sources or
+PARITY.md cite exists, and every def a package docstring cites with
+``:func:``, ``:class:`` or ``:meth:`` exists.
 
 A ``q_*`` function is reachable when it is a ``QUERIES`` value, when it is
 ``q_{name}`` for a name in ``bench.py``'s HEADLINE or SECONDARY list (bench
@@ -24,11 +25,16 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "datawarehouse_group10_spark"
 
+#: The scripts that are roots of the reachability walk: the oracle and smoke
+#: gates and the plan audit README documents. A script outside this tuple
+#: fails ``test_every_package_def_is_reachable`` instead of silently keeping
+#: package code alive.
+SCRIPTS = ("check_oracle.py", "smoke_analysis.py", "plan_audit.py")
+
 #: Top-level package defs that no entry point reaches but that stay, each
 #: with the reason. Anything else unreached is dead code.
 KEEP = {
     "MemoryMetaStore": "the in-memory MetaStore fake of the meta_store test fixture",
-    "snapshot_read_path": "the single-path snapshot API for external engines",
     "file_prune_fraction": "measures file pruning for several layout pins",
     "run_stream_to_table": "runs a stream to a table for the streaming pins",
     "full_dim_number": "the full dim_number rebuild an incremental daily run needs",
@@ -135,8 +141,8 @@ def unreachable_defs() -> list[str]:
     no root reaches. The roots: every module-level statement of a package
     module except imports and ``__all__``, every ``q_*`` body,
     ``__main__.py``, ``run_warehouse_job`` and ``MartServer``, and all of
-    ``bench.py``, ``__spark_entry__.py``, ``perfbench/*.py`` and
-    ``scripts/*.py``."""
+    ``bench.py``, ``__spark_entry__.py``, ``perfbench/*.py`` and the
+    ``SCRIPTS``."""
     defs: dict[str, list[ast.AST]] = {}
     roots = {"run_warehouse_job", "MartServer"}
     for path in sorted(PKG.rglob("*.py")):
@@ -155,7 +161,7 @@ def unreachable_defs() -> list[str]:
             ):
                 roots |= _refs(node)
     for path in [ROOT / "bench.py", ROOT / "__spark_entry__.py",
-                 *(ROOT / "perfbench").glob("*.py"), *(ROOT / "scripts").glob("*.py")]:
+                 *(ROOT / "perfbench").glob("*.py"), *(ROOT / "scripts" / s for s in SCRIPTS)]:
         roots |= _refs(ast.parse(path.read_text()))
 
     seen: set[str] = set()
@@ -171,6 +177,8 @@ def unreachable_defs() -> list[str]:
 
 
 def test_every_package_def_is_reachable():
+    extra = sorted({p.name for p in (ROOT / "scripts").glob("*.py")} - set(SCRIPTS))
+    assert not extra, f"scripts outside the reachability roots (delete them, or add them to SCRIPTS): {extra}"
     dead = unreachable_defs()
     unkept = [d for d in dead if d not in KEEP]
     assert not unkept, f"package defs no entry point reaches (delete them, or KEEP with a reason): {unkept}"
@@ -192,3 +200,19 @@ def test_cited_tests_exist():
         for name in set(re.findall(r"\btest_\w+", path.read_text())) - known
     )
     assert not missing, f"citations of tests that do not exist: {missing}"
+
+
+def test_cited_functions_exist():
+    """Every ``:func:``, ``:class:`` and ``:meth:`` target in a package
+    source names a package def, top-level or nested (a dotted target is
+    checked by its last component)."""
+    known: set[str] = set()
+    cites: list[tuple[Path, str]] = []
+    for path in PKG.rglob("*.py"):
+        text = path.read_text()
+        known |= {n.name for n in ast.walk(ast.parse(text))
+                  if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))}
+        cites += [(path, t) for t in re.findall(r":(?:func|class|meth):`~?([\w.]+)", text)]
+    missing = sorted({f"{path.relative_to(ROOT)}: {t}" for path, t in cites
+                      if t.rsplit(".", 1)[-1] not in known})
+    assert not missing, f"citations of package defs that do not exist: {missing}"
